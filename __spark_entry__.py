@@ -23,7 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from firepit_spark.functions import epoch_seconds
+from firepit_spark.functions import epoch_seconds, pin
 from firepit_spark.functions import dedup as dd
 from firepit_spark.functions import pipeline as pl
 from firepit_spark.functions import similarity as sim
@@ -607,10 +607,9 @@ def q22_text_stats(spark, sf_dir):
     # lower+whitespace-normalize kernel (char-rep alone ran it 3×). The
     # Python-boundary leg stays on a PRUNED (doc_id, text) slice (§4:
     # ship only the columns the function needs through Arrow).
-    docs_n = (
+    docs_n = pin(
         r("documents")
         .select("doc_id", "text", F.lower(tx.normalize_ws(t)).alias("__norm"))
-        .persist()
     )
     norm_docs = docs_n.select("doc_id", F.col("__norm").alias("text"))
     # stats leg: the punct/stopword ratios are each multi-referenced
@@ -655,10 +654,10 @@ def q22_text_stats(spark, sf_dir):
     )
     # SimHash rides along as one more per-doc signal (merged q27 slot);
     # docs with <2 tokens have no shingles -> NULL, mirrored by the LEFT JOIN.
-    # r13-opt: persisted — the join leg reads it whole and the near-dup leg
+    # r13-opt: pinned — the join leg reads it whole and the near-dup leg
     # filters it, so the shingle+32-bit-vote aggregation runs once instead
-    # of once per branch (guide §1.2; released via _fp_caches)
-    sim = dd.simhash(norm_docs, bits=32, pre_normalized=True).persist()
+    # of once per branch (guide §1.2)
+    sim = pin(dd.simhash(norm_docs, bits=32, pre_normalized=True))
     # r8 merge: per-doc BM25 inverted-index stats from
     # text_search.build_text_index — n_index_terms / max_tf / dl are exact
     # integers gating the tokenize→tf→stopword-cutoff→join pipeline, and
@@ -719,11 +718,6 @@ def q22_text_stats(spark, sf_dir):
             ),
         )
         .drop("__ndc")
-    )
-    out._fp_caches = (
-        [sim, docs_n]
-        + getattr(postings, "_fp_caches", [])
-        + list(getattr(ndp, "_fp_caches", []))
     )
     return out
 
@@ -978,13 +972,13 @@ def q28_dedup_exact(spark, sf_dir):
     # r13-opt: zorder_key's min/max scalar probe (an eager .first()) and
     # the final bloom-probe plan BOTH execute this subtree — persist the
     # narrow keeper frame so the dedup window + md5 fingerprint run once
-    # (guide §1.2; released via _fp_caches)
-    kept = dd.dedup_exact(docs).select(
+    # (guide §1.2)
+    kept = pin(dd.dedup_exact(docs).select(
         "doc_id",
         "source",
         tx.fingerprint(F.col("text")).alias("__fp"),
         F.length("text").alias("__len"),
-    ).persist()
+    ))
     sharded = pl.assign_shards(kept, "doc_id", n_shards=8)
     # r8 merge: Z-order/Morton key over (doc_id, text length) — gates
     # layout.zorder_key's affine min/max normalization + bit interleave
@@ -1001,11 +995,9 @@ def q28_dedup_exact(spark, sf_dir):
         _Q28_BITS,
         _Q28_HASHES,
     )
-    out = bloom_might_contain(
+    return bloom_might_contain(
         sharded, "__fp", bf, _Q28_BITS, _Q28_HASHES, "seen_even"
     ).drop("__fp", "__len")
-    out._fp_caches = [kept]
-    return out
 
 
 _Q28_BITS, _Q28_HASHES = 1 << 14, 4
@@ -1383,11 +1375,7 @@ def q38_cosine_near_dup(spark, sf_dir):
     }
     centroids = [seeds[i] for i in sorted(seeds)]
     out = sim.semantic_dedup(vecs, centroids=centroids, threshold=0.35)
-    final = out.select("vec_id", "sem_cell")
-    # propagate the operator's persist handles through the projection so
-    # release(result) actually frees them (r13-opt cache audit)
-    final._fp_caches = list(getattr(out, "_fp_caches", []))
-    return final
+    return out.select("vec_id", "sem_cell")
 
 
 _Q38_SQL = """
@@ -1559,10 +1547,10 @@ def q39_media_probe(spark, sf_dir):
 
     # r13-opt: three legs (probe_media, image_features, video_probe)
     # consume this frame — unpersisted, the PNG+MP4 synthesis ran three
-    # times (guide §1.2). 200 small blobs; released via _fp_caches.
-    media = docs.mapInPandas(
+    # times (guide §1.2). 200 small blobs.
+    media = pin(docs.mapInPandas(
         encode, schema="media_id long, content binary, vcontent binary"
-    ).persist()
+    ))
     probed = mm.probe_media(media)
     feats = mm.image_features(media).select(
         "media_id", F.col("mean_px").cast("double").alias("mean_px")
@@ -1904,7 +1892,6 @@ def q39_media_probe(spark, sf_dir):
             "tif_exact",
         )
     )
-    out._fp_caches = [media]
     return out
 
 
@@ -2009,16 +1996,16 @@ def q41_context_pack(spark, sf_dir):
     # r13-opt: both packers tokenized the corpus independently
     # (pack_documents via token_count, pack_token_sequences via
     # hash_token_ids — the same tx.tokens kernel). Tokenize+hash ONCE
-    # into a persisted narrow (doc_id, lang, __ids) frame and feed both
+    # into a pinned narrow (doc_id, lang, __ids) frame and feed both
     # through their existing token_col/ids_col hooks; the token count is
     # exactly size(__ids) (hash_token_ids emits one id per token and
     # preserves NULL), so values are unchanged (guide §1.2).
-    ids = (
+    ids = pin(
         docs.select(
             "doc_id",
             "lang",
             pl.hash_token_ids(F.col("text"), 32768).alias("__ids"),
-        ).persist()
+        )
     )
     packed = pl.pack_documents(
         ids.withColumn("__n", F.size("__ids")),
@@ -2059,9 +2046,7 @@ def q41_context_pack(spark, sf_dir):
             F.sum((F.col("seq_id") + 1) * F.col("__ps")).alias("seq_order_chk"),
         )
     )
-    out = stats.join(audit, "lang")
-    out._fp_caches = [ids]
-    return out
+    return stats.join(audit, "lang")
 
 
 _Q41_SQL = f"""
@@ -2156,25 +2141,19 @@ def q45_dedup_clusters(spark, sf_dir):
     recursive-CTE transitive closure; 'span' — substring-level duplicate
     passages (duplicate_spans: positional 8-gram index + diagonal chaining,
     >= 12 shared tokens) vs the same chaining done with SQL windows."""
-    from firepit_spark.functions import release
     from firepit_spark.functions.graph import dedup_clusters
 
     r = _resolver(spark, sf_dir)
     # r13-opt: both legs (k=3 shingle index and k=8 positional gram
     # index) re-scanned the parquet and re-ran the normalize kernel —
-    # hoist it once into a persisted column, as in q47 (guide §1.2)
-    docs = r("documents").select(
+    # hoist it once into a pinned column, as in q47 (guide §1.2)
+    docs = pin(r("documents").select(
         "doc_id", F.lower(tx.normalize_ws(F.col("text"))).alias("text")
-    ).persist()
+    ))
     pairs = dd.ngram_jaccard_pairs(
         docs, k=3, threshold=0.03, pre_normalized=True
     )
     clusters = dedup_clusters(pairs)
-    # dedup_clusters materialized its own edge cache eagerly, so the ngram
-    # operator's shingle-array caches are dead weight from here — release
-    # them before the label iterations (matters on small-heap drivers);
-    # the normalized-text cache stays alive for the span leg below
-    release(pairs)
     spans = dd.duplicate_spans(docs, k=8, min_tokens=12, pre_normalized=True)
     nl = F.lit(None).cast("long")
     out = clusters.select(
@@ -2196,7 +2175,6 @@ def q45_dedup_clusters(spark, sf_dir):
             F.col("span_tokens").cast("long"),
         )
     )
-    out._fp_caches = list(getattr(spans, "_fp_caches", [])) + [docs]
     return out
 
 
@@ -2359,15 +2337,15 @@ def q47_decontaminate(spark, sf_dir):
     8-gram index, union-frequency cutoff, diagonal chaining), vs the
     same chaining done with SQL windows."""
     r = _resolver(spark, sf_dir)
-    # r13-opt: normalize ONCE into a persisted column — the three legs
+    # r13-opt: normalize ONCE into a pinned column — the three legs
     # build SIX gram indexes (train+heldout sides × doc/span/contain),
     # and each previously re-scanned the parquet and re-ran the
     # lower+whitespace-normalize regex kernel (guide §1.2). The gram
     # regexes themselves differ per leg (k=3/8/5) and still run per
     # index; only the shared normalize pass and the scan are hoisted.
-    docs = r("documents").select(
+    docs = pin(r("documents").select(
         "doc_id", F.lower(tx.normalize_ws(F.col("text"))).alias("text")
-    ).persist()
+    ))
     train = docs.filter(F.col("doc_id") % 2 == 0)
     heldout = docs.filter(F.col("doc_id") % 2 == 1)
     doc_leg = dd.cross_ngram_jaccard(
@@ -2412,11 +2390,6 @@ def q47_decontaminate(spark, sf_dir):
             F.lit(None).cast("long").alias("start_b"),
             F.col("n_shared").cast("long").alias("span_tokens"),
         )
-    )
-    out._fp_caches = (
-        list(getattr(doc_leg, "_fp_caches", []))
-        + list(getattr(spans, "_fp_caches", []))
-        + [docs]
     )
     return out
 
@@ -2544,11 +2517,7 @@ def q44_sampling(spark, sf_dir):
     )
     capped = wb.cap_per_key(docs, "lang", 40, "doc_id", salt="c1", mode="auto")
     cap = capped.select(F.lit("cap").alias("method"), "doc_id", "lang")
-    out = hs.unionByName(st).unionByName(ws).unionByName(cap)
-    # carry the hot-key cache forward past the .select() so release(out)
-    # actually frees auto mode's persisted decision frame (ADVICE r9)
-    out._fp_caches = list(getattr(capped, "_fp_caches", []))
-    return out
+    return hs.unionByName(st).unionByName(ws).unionByName(cap)
 
 
 _Q44_SQL = f"""
@@ -2724,12 +2693,12 @@ def q50_doc_term_stats(spark, sf_dir):
 
     r = _resolver(spark, sf_dir)
     docs = r("documents")
-    # r13-opt: tokenize ONCE and fan every leg out from the persisted
+    # r13-opt: tokenize ONCE and fan every leg out from the pinned
     # array frame — previously each of the five legs (tf/df, bigram
     # fit+score, KN fit+score) re-ran the normalize+split kernel over
     # the corpus (guide §1.2/§2.3: don't recompute; expressions are
     # unchanged so outputs are bit-identical)
-    toks = docs.select("doc_id", tx.tokens(F.col("text")).alias("__toks")).persist()
+    toks = pin(docs.select("doc_id", tx.tokens(F.col("text")).alias("__toks")))
     even = toks.filter(F.col("doc_id") % 2 == 0)
     base = cp.doc_term_stats(toks, top_k=3, tokens_col="__toks")
     model = L.ngram_lm_fit(even, tokens_col="__toks")
@@ -2747,11 +2716,7 @@ def q50_doc_term_stats(spark, sf_dir):
         "doc_id", "kn_n_tri", "kn_unseen_tri", "kn_unseen_hist",
         "kn_cont_sum",
     )
-    out = base.join(sc, "doc_id").join(knsc, "doc_id")
-    # the fit persisted its trigram + continuation-bigram type tables;
-    # hand them (and the shared token cache) to release()
-    out._fp_caches = [knm.tri, knm.contbig, toks]
-    return out
+    return base.join(sc, "doc_id").join(knsc, "doc_id")
 
 
 _Q50_SQL = f"""
@@ -2849,15 +2814,11 @@ def q51_corpus_profile(spark, sf_dir):
     r = _resolver(spark, sf_dir)
     # r13-opt continuation 2: five legs scan the same table, and the
     # mixture + report legs each tokenized the corpus from raw text —
-    # persist the shared columns once with the token count bound, and
+    # pin the shared columns once with the token count bound, and
     # hand both legs the precomputed column via their token_col hooks
     # (guide §1.2; tokenize kernel per row 2 -> 1, and all five legs
     # read one cache instead of six parquet scans).
-    docs = (
-        r("documents")
-        .withColumn("__ntok", tx.token_count(F.col("text")))
-        .persist()
-    )
+    docs = pin(r("documents").withColumn("__ntok", tx.token_count(F.col("text"))))
     w = cp.mixture_weights(docs, "source", alpha=0.5)
     p = cp.length_percentiles(docs, "n_chars", "source")
     # build_mixture rides along (token-budget selection over 4 sources,
@@ -2900,7 +2861,6 @@ def q51_corpus_profile(spark, sf_dir):
         .join(rep, "source")
         .join(dsum, "source")
     )
-    out._fp_caches = [docs]
     return out
 
 
@@ -3082,15 +3042,15 @@ def q53_pii_scrub(spark, sf_dir):
     )
     frag = F.when(d % 2 == 0, F.lit("#f")).otherwise(F.lit(""))
     # r13-opt: both URL legs (parse_urls and the PSL host leg) consumed
-    # this frame from separate parquet scans — persist the tiny
-    # (doc_id, url) frame once (guide §1.2; released via _fp_caches)
-    urls = r("documents").select(
+    # this frame from separate parquet scans — pin the tiny
+    # (doc_id, url) frame once (guide §1.2)
+    urls = pin(r("documents").select(
         "doc_id",
         F.concat(
             scheme, F.lit("://"), sub, F.lit("."), zone, port, path,
             F.lit("?"), query, frag,
         ).alias("url"),
-    ).persist()
+    ))
     web = wb.parse_urls(urls).select(
         "doc_id",
         F.col("host").alias("url_host"),
@@ -3108,9 +3068,7 @@ def q53_pii_scrub(spark, sf_dir):
     psl = wb.registered_domain_psl(hosts, "h", rules).select(
         "doc_id", F.col("reg_domain").alias("url_domain_psl")
     )
-    out = pii.join(web, "doc_id").join(psl, "doc_id")
-    out._fp_caches = [urls]
-    return out
+    return pii.join(web, "doc_id").join(psl, "doc_id")
 
 
 _Q53_SQL = r"""
@@ -3510,7 +3468,7 @@ def q56_stix_value_counts(spark, sf_dir):
     # with content-addressed ids), then flagged onto the counts. Runs
     # FIRST (r14-opt): a table write invalidates the storage layer's
     # memoized observation frames, so the three aggregate legs below
-    # build AFTER the last write and share one persisted triple join.
+    # build AFTER the last write and share one triple-join plan.
     # Results are unchanged by the move: the watch urls already exist in
     # the q1 ingest (content-addressed id merge, COALESCE keeps the
     # value), and all_urls is q1-tag-filtered, so its rows are identical
@@ -3546,10 +3504,6 @@ def q56_stix_value_counts(spark, sf_dir):
                 F.lit(n_urls_api).cast("long").alias("n_urls_api"),
                 F.lit(sco_types).alias("sco_types"))
     )
-    # the storage layer memoizes+persists the observation frames shared by
-    # value_counts/number_observed/summary (r14-opt); hand the handles to
-    # release() — the store re-persists on next use, so freeing is safe
-    out._fp_caches = st.obs_cache_handles()
     return out
 
 
@@ -3597,22 +3551,18 @@ def q57_stix_timestamped(spark, sf_dir):
     # both views register BEFORE either timestamped leg builds (r14-opt):
     # view registration conservatively invalidates the storage layer's
     # memoized per-view observation frames, so registering v21_urls
-    # between the two legs would drop ts_urls' persisted triple join
+    # between the two legs would drop ts_urls' memoized triple join
     # before it ever executed. Same ops, same results — order of
     # register-then-read is immaterial to either leg's content.
     st.extract("ts_urls", "url", "q1", "[url:value LIKE '%/purchase']")
     st.extract("v21_urls", "url", "q21", "")
     df = st.timestamped("ts_urls", path="url:value", run=False)
     df21 = st.timestamped("v21_urls", path="url:value", run=False)
-    out = df.select(
+    return df.select(
         F.col("first_observed"), F.col("`url:value`").alias("value")
     ).unionByName(
         df21.select(F.col("first_observed"), F.col("`url:value`").alias("value"))
     )
-    # both legs read the memoized __contains ⋈ observed-data frame (plus
-    # their per-view triple joins); hand the handles to release()
-    out._fp_caches = st.obs_cache_handles()
-    return out
 
 
 _Q57_SQL = f"""

@@ -75,7 +75,7 @@ def run_set(spark, qs, sf_dir: str, runs: int, label: str) -> dict:
             df = qs[name](spark, sf_dir)
             n = df.count()
             samples.append(time.time() - t0)
-            # free operator-attached persists BETWEEN samples (r13-opt
+            # free every pinned operator cache BETWEEN samples (r13-opt
             # measurement fix): without this, q25/q35's cached
             # intermediates piled up across samples and scale sections —
             # a later sample could silently REUSE an earlier sample's
@@ -85,15 +85,7 @@ def run_set(spark, qs, sf_dir: str, runs: int, label: str) -> dict:
             # sample spreads on identical bytes). The unpersist itself is
             # outside the timed region, exactly like
             # scripts/check_correctness.py's per-query release.
-            release(df)
-            # belt-and-braces (r13-opt continuation): release() only frees
-            # persists the operator attached to THIS result object; a slot
-            # that wraps an operator result in .select() drops the
-            # attribute (found live for q35/q38), leaving the cache in the
-            # CacheManager for the NEXT sample to silently reuse. Clearing
-            # the whole cache between samples guarantees every sample
-            # computes from the parquet inputs, whatever future slots do.
-            spark.catalog.clearCache()
+            release()
         timings[name] = round(statistics.median(samples), 3)
         print(
             f"# [{label}] {name}: {timings[name]}s median of "
@@ -201,16 +193,15 @@ def main():
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(sf_dir):
-        from firepit_spark.functions import release as _release
+        from firepit_spark.functions import release
 
         for name in HEADLINE:
             try:
                 wdf = qs[name](spark, warm_dir)
                 wdf.count()
-                _release(wdf)  # don't carry warmup caches into timed passes
             except Exception:
                 pass
-        spark.catalog.clearCache()  # same guarantee as between samples
+            release()  # don't carry warmup caches into timed passes
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     sf1_dir = os.environ.get(

@@ -5,7 +5,13 @@ whole-stage-codegen eligible) unless genuinely impossible, in which case an
 Arrow-batched Pandas UDF is used — never row-at-a-time Python UDFs.
 """
 
+import threading
+
 from pyspark.sql import functions as F
+
+# frames pinned by operators until the next release() (see pin)
+_pinned: list = []
+_pinned_lock = threading.Lock()
 
 
 def epoch_seconds(col):
@@ -21,20 +27,35 @@ def epoch_seconds(col):
     return c.cast("timestamp_ltz").cast("double")
 
 
-def release(df) -> None:
-    """Free intermediate caches attached to a DataFrame returned by an
-    iterative/multi-consumer operator (``ancestors``, ``ngram_jaccard_pairs``).
+def pin(df):
+    """Persist ``df`` and register it for :func:`release`.
 
-    Those operators persist intermediates that the returned lazy plan still
-    reads; Spark's CacheManager holds them until explicitly unpersisted, so a
-    long-lived session should call ``release(result)`` after the terminal
-    action. One-shot jobs can skip it (session teardown frees everything).
-    Safe to call on any DataFrame; no-op when nothing is attached.
+    Operators call this for every frame that may outlive their own call (a
+    persisted intermediate the returned lazy plan still reads). Frames
+    always unpersisted within one call, frames persisted to freeze a
+    nondeterministic value, and checkpoints stay out of the registry.
+    Returns ``df``.
     """
-    for cached in getattr(df, "_fp_caches", ()):
+    df = df.persist()
+    with _pinned_lock:
+        _pinned.append(df)
+    return df
+
+
+def release(df=None) -> None:
+    """Unpersist every frame the library has pinned, process-wide.
+
+    Call it once no un-collected library result is still needed: a result
+    built before the call stays correct afterwards but recomputes the
+    intermediates it read. One-shot jobs can skip it (session teardown
+    frees everything). ``df`` is accepted for the older per-result form and
+    ignored; calling with nothing pinned is a no-op.
+    """
+    with _pinned_lock:
+        frames = _pinned[:]
+        _pinned.clear()
+    for cached in frames:
         try:
             cached.unpersist()
         except Exception:
             pass
-    if hasattr(df, "_fp_caches"):
-        df._fp_caches = []

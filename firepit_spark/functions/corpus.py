@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from . import text as tx
+from . import pin, text as tx
 
 
 def ngrams(col: Column, n: int = 2) -> Column:
@@ -547,17 +547,16 @@ def document_signals(
     At 100 TB: one parquet pass builds the cache (spills under
     MEMORY_AND_DISK); every downstream shuffle keys on the doc id or on
     (doc, gram/term), so no key exceeds one document's token count. The
-    returned frame carries the cache in ``_fp_caches`` — call
-    ``firepit_spark.functions.release(result)`` after the terminal
-    action in long-lived sessions.
+    cache is pinned — call ``firepit_spark.functions.release()`` after
+    the terminal action in long-lived sessions.
     """
     t = F.col(text_col)
-    base = df.select(
+    base = pin(df.select(
         F.col(id_col),
         t.alias("__text"),
         F.lower(tx.normalize_ws(t)).alias("__norm"),
         tx.tokens(t).alias("__toks"),
-    ).persist()
+    ))
 
     tc = F.col("__text")
     map_side = base.select(
@@ -651,7 +650,6 @@ def document_signals(
         out = out.crossJoin(
             F.broadcast(dfreq.agg(F.count(F.lit(1)).alias("n_vocab_kept")))
         )
-    out._fp_caches = [base]
     return out
 
 

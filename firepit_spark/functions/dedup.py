@@ -24,6 +24,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from firepit_spark.functions import pin
 from firepit_spark.functions.text import fingerprint, fingerprint64, word_shingles
 
 # MinHash universal-hash parameters: h_i(x) = (a_i * x + b_i) mod P.
@@ -159,13 +160,13 @@ def ngram_jaccard_pairs(
     # joining it onto the pairs frame twice would cost two more full
     # shuffles.
     df = _ensure_parallelism(df, id_col)
-    arr = df.select(
+    arr = pin(df.select(
         F.col(id_col),
         F.transform(
             word_shingles(F.col(text_col), k, pre_normalized),
             lambda s: F.xxhash64(s),
         ).alias("__shingles"),
-    ).persist()
+    ))
     sh = arr.select(
         F.col(id_col),
         F.size("__shingles").alias("set_size"),
@@ -215,9 +216,8 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    # the persisted shingle frame rides along; long-lived sessions call
-    # firepit_spark.functions.release(result) after the terminal action
-    result._fp_caches = [arr]
+    # long-lived sessions call firepit_spark.functions.release() after
+    # the terminal action to free the pinned shingle frame
     return result
 
 
@@ -251,8 +251,8 @@ def cross_ngram_jaccard(
 
     Returns (left_id, right_id, jaccard) at or above ``threshold``.
     """
-    la = _shingle_arrays(left, text_col, id_col, k, pre_normalized).persist()
-    ra = _shingle_arrays(right, text_col, id_col, k, pre_normalized).persist()
+    la = pin(_shingle_arrays(left, text_col, id_col, k, pre_normalized))
+    ra = pin(_shingle_arrays(right, text_col, id_col, k, pre_normalized))
     # same narrow-shuffle trick as ngram_jaccard_pairs: the arrays already
     # hold 64-bit shingle hashes (hashed once at array build, not per
     # explode copy); the freq cutoff and the index join move 8-byte longs;
@@ -283,11 +283,8 @@ def cross_ngram_jaccard(
         # already persisted, so re-deriving rsh for the count is cheap)
         n_distinct = rsh.agg(F.approx_count_distinct("shingle")).first()[0]
         bits, hashes = bloom_params(max(64, int(n_distinct * 1.1)), bloom_fpp)
-        rbloom = bloom_build(rsh, "shingle", bits, hashes).persist()
+        rbloom = pin(bloom_build(rsh, "shingle", bits, hashes))
         lsh = bloom_prescreen(lsh, "shingle", rbloom, bits, hashes)
-        _extra_caches = [rbloom]
-    else:
-        _extra_caches = []
 
     # union-frequency cutoff as a hot-set ANTI-join (AQE broadcasts the
     # tiny hot side; both indexes stay map-only through the filter —
@@ -320,7 +317,6 @@ def cross_ngram_jaccard(
         .filter(F.col("jaccard") >= threshold)
         .select("left_id", "right_id", "jaccard")
     )
-    result._fp_caches = [la, ra] + _extra_caches
     return result
 
 
@@ -444,19 +440,18 @@ def minhash_lsh_candidates(
     md5 -> num_perm universal hashes -> explode -> min-agg -> band md5)
     executed TWICE per run (r13-opt; the index is id×bands rows of
     ~44 bytes, far smaller than the work that builds it). Long-lived
-    sessions call :func:`firepit_spark.functions.release` on the result.
+    sessions call :func:`firepit_spark.functions.release` once the
+    result is collected.
     """
-    band_hash = minhash_lsh_index(df, text_col, id_col, k, num_perm, bands).persist()
+    band_hash = pin(minhash_lsh_index(df, text_col, id_col, k, num_perm, bands))
     a = band_hash.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = band_hash.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    result = (
+    return (
         a.join(b, ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    result._fp_caches = [band_hash]
-    return result
 
 
 def minhash_lsh_lookup(
@@ -590,14 +585,11 @@ def ngram_contamination(
         # count, the filter build, the freq union, and the final join;
         # size on (approx) DISTINCT shingles — occurrence count would
         # build a filter inflated by within-corpus n-gram repetition
-        esh = esh.persist()
+        esh = pin(esh)
         n_distinct = esh.agg(F.approx_count_distinct("shingle")).first()[0]
         bits, hashes = bloom_params(max(64, int(n_distinct * 1.1)), bloom_fpp)
-        ebloom = bloom_build(esh, "shingle", bits, hashes).persist()
+        ebloom = pin(bloom_build(esh, "shingle", bits, hashes))
         tsh = bloom_prescreen(tsh, "shingle", ebloom, bits, hashes)
-        caches = [esh, ebloom]
-    else:
-        caches = []
     if max_ngram_freq is not None:
         # hot-set anti-join form (see ngram_jaccard_pairs)
         hot = (
@@ -631,8 +623,6 @@ def ngram_contamination(
             .groupBy("train_id", "eval_id")
             .agg(F.count_distinct("shingle").alias("n_shared"))
         )
-    if caches:
-        result._fp_caches = caches
     return result
 
 
@@ -656,7 +646,7 @@ def verify_candidate_pairs(
     joined = pairs.join(a, "id_a").join(b, "id_b")
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
     union = (F.size("__sa") + F.size("__sb")).cast("double") - inter
-    out = (
+    return (
         joined.select(
             "id_a",
             "id_b",
@@ -664,12 +654,6 @@ def verify_candidate_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    # propagate the candidate generator's cache handles (e.g.
-    # minhash_lsh_candidates' persisted band-hash index) so
-    # release(result) frees them — dropping them here leaked the persist
-    # in long-lived sessions (r13 advice)
-    out._fp_caches = list(getattr(pairs, "_fp_caches", []))
-    return out
 
 
 def fuzzy_dedup(
@@ -695,14 +679,17 @@ def fuzzy_dedup(
     bounds the candidate join, verification is per-candidate, and the
     component loop converges in O(cluster diameter) rounds with
     checkpointed lineage (pass ``checkpoint_dir=`` on a real cluster so
-    the truncation survives executor loss). Returns the surviving rows
-    of ``df`` (singletons pass through untouched).
+    the truncation survives executor loss). ``max_iter`` is the
+    component loop's strict propagation-step budget (see
+    :func:`firepit_spark.functions.graph.connected_components`): a
+    cluster that needs more steps stays split and keeps more than one
+    copy. Returns the surviving rows of ``df`` (singletons pass through
+    untouched).
     """
     # the input feeds four consumers (minhash signatures, both verify
-    # sides, the final anti-join) — persist it so an expensive upstream
-    # (e.g. a model_filter mapInPandas stage) executes once, not 4x;
-    # cache-release contract: release(result) after the terminal action
-    df = df.persist()
+    # sides, the final anti-join) — pin it so an expensive upstream
+    # (e.g. a model_filter mapInPandas stage) executes once, not 4x
+    df = pin(df)
     cands = minhash_lsh_candidates(df, text_col, id_col, k, num_perm, bands)
     confirmed = verify_candidate_pairs(df, cands, text_col, id_col, k, threshold)
     from .graph import dedup_clusters, dedup_keep_best
@@ -722,7 +709,6 @@ def fuzzy_dedup(
             F.col("doc_id").alias(id_col)
         )
         result = df.join(drops, id_col, "left_anti")
-    result._fp_caches = [df] + list(getattr(confirmed, "_fp_caches", []))
     return result
 
 
@@ -795,14 +781,12 @@ def duplicate_spans(
     """
     if min_tokens < k:
         raise ValueError("min_tokens must be >= k (spans are built from k-grams)")
-    pg = positional_grams(df, text_col, id_col, k, pre_normalized).persist()
-    caches = [pg]
+    pg = pin(positional_grams(df, text_col, id_col, k, pre_normalized))
     if other is None:
         pg_b = pg
         freq_src = pg
     else:
-        pg_b = positional_grams(other, text_col, id_col, k, pre_normalized).persist()
-        caches.append(pg_b)
+        pg_b = pin(positional_grams(other, text_col, id_col, k, pre_normalized))
         freq_src = pg.unionByName(pg_b)
 
     # hot-set anti-join form (see ngram_jaccard_pairs)
@@ -834,7 +818,6 @@ def duplicate_spans(
         .filter(F.col("span_tokens") >= min_tokens)
         .select("id_a", "id_b", "start_a", "start_b", "span_tokens")
     )
-    result._fp_caches = caches
     return result
 
 
@@ -987,10 +970,10 @@ def hamming_near_dup_pairs(
        ``max_bucket`` the pair set is deduped instead, since the lowest
        agreeing slice may itself have been cut.
 
-    The distinct-hash frame is persisted (both join sides and the
+    The distinct-hash frame is pinned (both join sides and the
     potentially expensive upstream — e.g. an image decode — must not run
-    twice); call :func:`firepit_spark.functions.release` on the result in
-    long-lived sessions.
+    twice); call :func:`firepit_spark.functions.release` once the result
+    is collected in long-lived sessions.
 
     Returns (id_a, id_b, hamming) with id_a < id_b over the distinct-hash
     representatives.
@@ -1015,10 +998,8 @@ def hamming_near_dup_pairs(
     # persist the distinct-hash frame: both join sides read it, and its
     # upstream may be an expensive Python decode (image_dhash) that must
     # not run twice; 16 bytes/row, so it caches even at corpus scale
-    distinct = (
-        df.groupBy(h.alias("__h"))
-        .agg(F.min(F.col(id_col)).alias("__rep"))
-        .persist()
+    distinct = pin(
+        df.groupBy(h.alias("__h")).agg(F.min(F.col(id_col)).alias("__rep"))
     )
     slices = F.array(
         *[
@@ -1075,13 +1056,11 @@ def hamming_near_dup_pairs(
         uniq = joined.select("__ha", "__hb", "id_a", "id_b").dropDuplicates(
             ["id_a", "id_b"]
         )
-    pairs = (
+    return (
         uniq.withColumn("hamming", F.bit_count(xor).cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    pairs._fp_caches = [distinct]
-    return pairs
 
 
 def simhash_near_dup_pairs(

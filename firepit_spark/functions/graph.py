@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from firepit_spark.functions import pin
+
 
 def edges_from(df: DataFrame, ref_col: str = "parent_ref") -> DataFrame:
     """(child, parent) edge list from a SCO table's ref column."""
@@ -30,19 +32,17 @@ def ancestors(
     process graphs are acyclic in practice; a cycle would simply stop
     contributing after max_depth).
     """
-    # each level is persisted: the union output and the next level's join
+    # each level is pinned: the union output and the next level's join
     # both read it, and the empty-frontier probe would otherwise recompute
     # the whole join chain once per remaining level (O(depth^2) rework).
-    # The handles ride on the result; long-lived sessions call
-    # firepit_spark.functions.release(result) after the terminal action.
-    edges = edges_from(df, ref_col).persist()
-    caches = [edges]
-    level = edges.select(
+    # Long-lived sessions call firepit_spark.functions.release() after the
+    # terminal action.
+    edges = pin(edges_from(df, ref_col))
+    level = pin(edges.select(
         F.col("child").alias("descendant_id"),
         F.col("parent").alias("ancestor_id"),
         F.lit(1).alias("depth"),
-    ).persist()
-    caches.append(level)
+    ))
     out = level
     for d in range(2, max_depth + 1):
         nxt = (
@@ -62,15 +62,13 @@ def ancestors(
             # level unions zero rows: same result.
             out = out.unionByName(nxt)
             break
-        nxt = nxt.persist()
+        nxt = pin(nxt)
         if nxt.isEmpty():
             # dead frontier: nothing references it, free it immediately
             nxt.unpersist()
             break
-        caches.append(nxt)
         out = out.unionByName(nxt)
         level = nxt
-    out._fp_caches = caches
     return out
 
 
@@ -115,6 +113,11 @@ def connected_components(
     """(node, component) labels for an undirected edge list; the component
     id is the smallest node id in the component (deterministic, so the
     result is oracle-checkable against a recursive-CTE closure).
+
+    ``max_iter`` is a strict budget of propagation steps: a graph that has
+    not converged within it returns labels propagated exactly ``max_iter``
+    steps (not ``max_iter + 1``), so some components may still carry more
+    than one label.
 
     Min-label propagation with pointer jumping: every round each node
     takes the minimum of its own label, its neighbors' labels, AND its
@@ -232,9 +235,7 @@ def connected_components(
         labels = new_labels.drop("__chg")
         if n_changed == 0:
             break
-    labels = labels.select("node", "comp")
-    labels._fp_caches = []
-    return labels
+    return labels.select("node", "comp")
 
 
 def dedup_clusters(
@@ -246,7 +247,9 @@ def dedup_clusters(
 ) -> DataFrame:
     """Near-duplicate clusters from a similarity-pair list: (doc, cluster)
     where cluster = min doc id in the connected component — the keep-one-
-    per-cluster endgame of every pairwise dedup operator in dedup.py."""
+    per-cluster endgame of every pairwise dedup operator in dedup.py.
+    ``max_iter`` is :func:`connected_components`' strict propagation-step
+    budget: a pair graph that needs more steps returns split clusters."""
     return connected_components(
         pairs, src=src, dst=dst, max_iter=max_iter, checkpoint_dir=checkpoint_dir
     ).select(
@@ -493,9 +496,7 @@ def process_tree(df: DataFrame, ref_col: str = "parent_ref", max_depth: int = 8)
     )
     # processes whose parent chain dead-ends outside the table keep their
     # deepest known ancestor as root
-    result = own_root.unionByName(to_root)
-    result._fp_caches = getattr(anc, "_fp_caches", [])
-    return result
+    return own_root.unionByName(to_root)
 
 
 def cluster_representatives(

@@ -40,7 +40,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from firepit_spark.functions import text as tx
+from firepit_spark.functions import pin, text as tx
 
 
 @dataclass
@@ -361,12 +361,12 @@ def kneser_ney_fit(
     combine; the shuffle carries (w1,w2,w3, partial-count), never text);
     every lower-order table is a further aggregation OF THE TRIGRAM
     TABLE, so the corpus is scanned once for the n-gram structure plus
-    once for V. The trigram type table is persisted while the derived
+    once for V. The trigram type table is pinned while the derived
     aggregates and the scalar jobs run, and so is the CONTINUATION
     bigram table — it feeds five consumers (the nb/u and d2 fit
     scalars, and the score's direct/mid/contuni joins), each of which
     otherwise re-aggregates it from tri (r13-opt). Both are handed over
-    still cached — call ``release_kn(lm)`` / unpersist when done
+    still cached — call ``firepit_spark.functions.release()`` when done
     scoring.
 
     100 TB story: identical to ngram_lm_fit's — model tables are
@@ -374,18 +374,15 @@ def kneser_ney_fit(
     and shuffle-joins corpus-scale ones; no driver-side model object
     ever materializes."""
     toks = _doc_tokens(df, id_col, text_col, tokens_col)
-    tri = (
+    tri = pin(
         _doc_trigrams(toks, id_col)
         .groupBy("w1", "w2", "w3")
         .agg(F.count(F.lit(1)).alias("c123"))
-        .persist()
     )
     hist = tri.groupBy("w1", "w2").agg(
         F.sum("c123").alias("h12"), F.count(F.lit(1)).alias("nf12")
     )
-    contbig = tri.groupBy("w2", "w3").agg(
-        F.count(F.lit(1)).alias("cb23")
-    ).persist()
+    contbig = pin(tri.groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("cb23")))
     mid = contbig.groupBy("w2").agg(
         F.sum("cb23").alias("md2"), F.count(F.lit(1)).alias("nf2")
     )
@@ -451,12 +448,6 @@ def kneser_ney_fit(
         d1=_disc(nbu),
         contuni=contuni,
     )
-
-
-def release_kn(lm: KneserNeyLM) -> None:
-    """Unpersist the count tables kneser_ney_fit cached."""
-    lm.tri.unpersist()
-    lm.contbig.unpersist()
 
 
 def kneser_ney_score(

@@ -13,6 +13,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from firepit_spark.functions import pin
+
 
 def _dvec(values) -> Column:
     """Double-array literal parsed from ONE SQL string. ``F.array`` of
@@ -589,9 +591,9 @@ def semantic_dedup(
     # persist: the nearest-centroid assignment (the expensive full-corpus
     # map) feeds BOTH pair sides, the final anti-join, and — with a cell
     # cap — the per-cell count aggregate; without the persist each branch
-    # recomputes it. The handle rides on the result; long-lived sessions
-    # call firepit_spark.functions.release(result) after the action.
-    assigned = idx.assigned.withColumnRenamed("__cell", "sem_cell").persist()
+    # recomputes it. Long-lived sessions call
+    # firepit_spark.functions.release() after the action.
+    assigned = pin(idx.assigned.withColumnRenamed("__cell", "sem_cell"))
     # per-row norm hoisted out of the pair expression (see brute_force_topk)
     withn = assigned.withColumn("__n", l2_norm(F.col(vec_col)))
     if max_cell_size is not None:
@@ -682,9 +684,7 @@ def semantic_dedup(
         drops = comp.filter(F.col("node") != F.col("comp")).select(
             F.col("node").alias(id_col)
         )
-    result = assigned.join(drops, id_col, "left_anti")
-    result._fp_caches = [assigned]
-    return result
+    return assigned.join(drops, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------

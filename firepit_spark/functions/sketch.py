@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from firepit_spark.functions import pin
+
 
 def _row_hash(col: Column, row: int, width: int) -> Column:
     """Bucket of ``col`` under the ``row``-th universal hash: md5 of the
@@ -122,7 +124,7 @@ def hot_keys(
     are verified against the sketch; count-min overestimates, so this can
     return a near-hot key but never misses a truly hot one (beyond the
     ~2n/width error)."""
-    sketch = cms_build(df, key_col, depth, width).persist()
+    sketch = pin(cms_build(df, key_col, depth, width))
     # total rows falls out of the sketch itself (every row increments one
     # counter per hash row) — no separate full scan for df.count()
     total = int(sketch.agg((F.sum("n") / depth).cast("bigint")).first()[0] or 0)
@@ -133,8 +135,6 @@ def hot_keys(
         .distinct()
     )
     est = cms_query(sketch, cands, key_col, depth, width)
-    out = est.filter(F.col("est_count") >= min_share * total).orderBy(
+    return est.filter(F.col("est_count") >= min_share * total).orderBy(
         F.col("est_count").desc()
     )
-    out._fp_caches = [sketch]
-    return out

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from firepit_spark.functions import pin
 from firepit_spark.functions.text import tokens
 
 
@@ -59,12 +60,10 @@ def build_text_index(
     ).filter(F.col("term") != "")
     # ONE tokenize pass: tf is the only frame that reads the text; doc
     # lengths (dl = sum of tf) and avgdl both derive from it instead of
-    # re-tokenizing the corpus (was 3 tokenize passes). persist() keeps
+    # re-tokenizing the corpus (was 3 tokenize passes). Pinning keeps
     # the shared subtree from re-executing across the derived frames —
-    # the caller freezes both outputs to parquet anyway.
-    tf = (
-        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")).persist()
-    )
+    # the caller freezes both outputs to parquet, then calls release().
+    tf = pin(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     # stopword cutoff: STRICTLY more than max_df_frac of docs -> dropped
     # (floor(frac*n) is the largest count that still satisfies <= frac;
     # floored at 1 so single-doc terms always survive tiny corpora)
@@ -84,9 +83,6 @@ def build_text_index(
     doc_lens = per_doc.crossJoin(
         F.broadcast(per_doc.select(F.avg("dl").alias("avgdl")))
     )
-    # cache-release contract (see functions.release): the tf cache backs
-    # both returned frames; release(postings) after freezing to parquet
-    postings._fp_caches = [tf]
     return postings, doc_lens
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pin
 from .pipeline import key_hash
 
 __all__ = [
@@ -447,11 +448,10 @@ def cap_per_key(
     count reads only the key column — column pruning makes it a fraction
     of a full scan) and reads the full rows once per join leg, in
     exchange for shrinking the plain window's full-data shuffle to just
-    the over-cap rows. MEASURED on local[32] (scripts/ab_capkey.py,
-    BASELINE.md round-8 lever log) the plain window is FASTER at
-    sf0.1/sf1 — WindowGroupLimit prunes its sort inputs and the local
-    exchange is an in-memory copy — so flip ``skew_safe=False`` for
-    small single-node jobs. The default stays True for the deployment
+    the over-cap rows. MEASURED on local[32] (BASELINE.md round-8 lever
+    log) the plain window is FASTER at sf0.1/sf1 — WindowGroupLimit
+    prunes its sort inputs and the local exchange is an in-memory copy
+    — so flip ``skew_safe=False`` for small single-node jobs. The default stays True for the deployment
     this op exists for: a real cluster, where the exchange is a network
     shuffle of wide document rows and the under-cap Zipf bulk (which
     WindowGroupLimit cannot prune — every one of its rows still
@@ -468,7 +468,7 @@ def cap_per_key(
       input passes through untouched (zero window, zero join, zero
       shuffle of the 100 TB side: the count job is the entire cost).
       A modest hot set takes the skew-safe split, with the hot-key
-      frame persisted so its aggregation isn't recomputed per join
+      frame pinned so its aggregation isn't recomputed per join
       leg. A hot set wider than ``hot_key_limit`` is not a skew
       problem (no small side to broadcast) and falls back to the
       plain window, whose single shuffle then beats three.
@@ -492,7 +492,7 @@ def cap_per_key(
         .select(F.col(key_col).alias("__hot_key"))
     )
     if mode == "auto":
-        hot = hot.persist()
+        hot = pin(hot)
         n_hot = hot.count()
         if n_hot == 0:
             hot.unpersist()
@@ -507,10 +507,10 @@ def cap_per_key(
     if mode == "skew":
         # both join legs reference the hot aggregate; Catalyst's exchange
         # reuse USUALLY computes it once, but nothing guarantees that
-        # across AQE replans — persist makes single computation a property
-        # of the plan, not an optimizer courtesy (same release() contract
-        # as 'auto', which already persisted for its decision count)
-        hot = hot.persist()
+        # across AQE replans — pinning makes single computation a property
+        # of the plan, not an optimizer courtesy (as in 'auto', which
+        # already pinned it for its decision count)
+        hot = pin(hot)
     # null-safe equality: a NULL key forms a group under the plain window,
     # so the hot-key path must route it the same way or the modes diverge
     cond = df[key_col].eqNullSafe(F.col("__hot_key"))
@@ -521,12 +521,7 @@ def cap_per_key(
         .filter(F.col("__rn") <= cap)
         .drop("__rn")
     )
-    out = cold_rows.unionByName(hot_rows)
-    # the hot frame is persisted in both remaining modes; expose it
-    # through the repo's release() convention so long-lived sessions can
-    # free it after the terminal action
-    out._fp_caches = [hot]
-    return out
+    return cold_rows.unionByName(hot_rows)
 
 
 def cap_per_domain(

@@ -117,24 +117,17 @@ class SparkStorage:
         # must be atomic. Lock CREATION itself goes through _write_lock():
         # a bare defaultdict __getitem__ can hand two racing threads two
         # different Lock objects for the same brand-new key.
-        self._write_locks: dict[str, threading.Lock] = {}
+        self._write_locks: dict[str, threading.RLock] = {}
         self._write_locks_guard = threading.Lock()
-        # memoized observation frames (r14-opt, guide §1.2/§2.4): the
+        # memoized observation plans (r14-opt, guide §1.2/§2.4): the
         # __contains ⋈ observed-data edge frame and the per-view triple
-        # join behind the observation-count family. Every storage op
-        # (value_counts / number_observed / summary / timestamped)
-        # previously re-derived the whole triple join — a 4-op
-        # composition paid ~4x the dominant join (q56 plan: 28 parquet
-        # scans, 31 exchanges, 0 reuse). Invalidation: any table write
-        # drops both levels; view (re)definition drops the per-view
-        # frames. Each memo entry is [frame, n_uses]: a frame persists
-        # only from its SECOND consumer on (single-use frames stay lazy
-        # plans — persisting them is a pure materialization loss), and
-        # re-persists if an external clearCache() dropped it, so harness
-        # cache-clearing between samples stays correct.
-        self._obs_edges_entry: list | None = None  # [DataFrame, n_uses]
-        self._obs_frames: dict[str, list] = {}  # name -> [DataFrame, n_uses]
-        self._obs_cache_sized: bool | None = None  # persist-gate memo
+        # join behind the observation-count family, shared as lazy plans
+        # (never persisted) so every op of a session composes the same
+        # canonical join (q56 plan: 28 -> 20 parquet scans).
+        # Invalidation: any table write drops both levels; view
+        # (re)definition drops the per-view frames.
+        self._obs_edges_df: DataFrame | None = None
+        self._obs_frames: dict[str, DataFrame] = {}
         # materialized-view symtable: views snapshotted to parquet so a new
         # process (e.g. the CLI) sees them; live in-memory defs take priority
         self._meta: dict[str, dict] = {}
@@ -209,11 +202,12 @@ class SparkStorage:
     # bound read amplification; it auto-triggers past ``auto_compact_batches``.
     # At 100 TB this is the difference between O(batch) and O(table) ingest.
 
-    def _write_lock(self, otype: str) -> threading.Lock:
+    def _write_lock(self, otype: str) -> threading.RLock:
+        # reentrant: compact() holds it across its own _write_batch call
         with self._write_locks_guard:
             lock = self._write_locks.get(otype)
             if lock is None:
-                lock = self._write_locks[otype] = threading.Lock()
+                lock = self._write_locks[otype] = threading.RLock()
             return lock
 
     def _batch_numbers(self, path: str) -> list:
@@ -310,21 +304,25 @@ class SparkStorage:
             if os.path.isdir(self._table_path(t))
         )
         for name in names:
-            path = self._table_path(name)
-            if len(self._batch_numbers(path)) <= 1:
-                continue
-            self._df_cache.pop(name, None)
-            merged = self.table_df(name)
-            # time-cluster observation-bearing tables while we're rewriting
-            # anyway: a range-sort on first_observed gives every parquet
-            # row group tight min/max stats, so the START/STOP and
-            # timestamped() time filters skip data instead of scanning it
-            # (the Spark analog of the reference's post-load index build)
-            if "first_observed" in merged.columns:
-                merged = merged.repartitionByRange(
-                    F.col("first_observed")
-                ).sortWithinPartitions("first_observed")
-            self._write_batch(name, merged, reset=True)
+            # held from the batch listing through the reset write: an
+            # append landing in between would be deleted by the reset
+            with self._write_lock(name):
+                path = self._table_path(name)
+                if len(self._batch_numbers(path)) <= 1:
+                    continue
+                self._df_cache.pop(name, None)
+                merged = self.table_df(name)
+                # time-cluster observation-bearing tables while we're
+                # rewriting anyway: a range-sort on first_observed gives
+                # every parquet row group tight min/max stats, so the
+                # START/STOP and timestamped() time filters skip data
+                # instead of scanning it (the Spark analog of the
+                # reference's post-load index build)
+                if "first_observed" in merged.columns:
+                    merged = merged.repartitionByRange(
+                        F.col("first_observed")
+                    ).sortWithinPartitions("first_observed")
+                self._write_batch(name, merged, reset=True)
 
     def finish(self, index: bool = True):
         """Post-load hook (parity: firepit/sqlstorage.py:824-827; the
@@ -1220,87 +1218,24 @@ class SparkStorage:
     _OBS_PREFIX = "__fp_obs_"
 
     def _invalidate_obs_caches(self, edges: bool = True):
-        """Drop (and unpersist) the memoized observation frames. Called on
-        every table write (``edges=False`` keeps the __contains ⋈
-        observed-data frame when neither of those tables changed), on view
-        (re)definition/removal, and on delete/close."""
-        frames, self._obs_frames = self._obs_frames, {}
-        for f, _uses in frames.values():
-            f.unpersist()
-        if edges and self._obs_edges_entry is not None:
-            (ed, _uses), self._obs_edges_entry = self._obs_edges_entry, None
-            ed.unpersist()
-        self._obs_cache_sized = None  # table sizes may have changed
-
-    def _obs_tables_bytes(self) -> int:
-        """On-disk bytes of the two tables behind the observation join —
-        the cheap driver-side size signal for the persist gate."""
-        total = 0
-        for t in (CONTAINS, "observed-data"):
-            p = self._table_path(t)
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        try:
-                            total += os.path.getsize(os.path.join(root, f))
-                        except OSError:
-                            pass
-        return total
-
-    def _obs_cache_worthwhile(self) -> bool:
-        """Size gate for persisting memoized observation frames (computed
-        once per invalidation epoch). Re-deriving the triple join per
-        consumer is the 100-TB cost this memo exists to kill, but at
-        KB-scale the join is a sub-millisecond broadcast pipeline and a
-        persist ADDS a materialization job + cache IO per sample (measured
-        ~0.1-0.3 s per slot on the sf0.1 STIX fixture — a pure loss). So
-        frames persist only when the join's input tables exceed
-        ``FIREPIT_OBS_CACHE_MIN_BYTES`` (default 64 MB — far above any
-        test fixture, far below any real warehouse); below the gate the
-        memo still shares ONE canonical plan across consumers (plan-build
-        savings, identical results). Scale-adaptive by data size, not
-        tuned to any core count."""
-        if self._obs_cache_sized is None:
-            gate = int(
-                os.environ.get("FIREPIT_OBS_CACHE_MIN_BYTES",
-                               str(64 * 1024 * 1024))
-            )
-            self._obs_cache_sized = self._obs_tables_bytes() >= gate
-        return self._obs_cache_sized
-
-    def _tick_entry(self, entry: list) -> DataFrame:
-        """Count one consumer of a memoized frame and persist it from the
-        SECOND consumer on — when the size gate says recompute is the
-        bigger cost. A frame with a single consumer stays a lazy plan
-        (persisting it would add a materialization pass for zero reuse).
-        Persist-after-the-fact is safe: the CacheManager substitutes the
-        cached plan by canonicalized-plan match at execution, so consumers
-        built BEFORE the persist call still read the cache. Re-persisting
-        also heals an external ``spark.catalog.clearCache()`` (the
-        bench/checker harnesses clear between samples)."""
-        from pyspark import StorageLevel
-
-        entry[1] += 1
-        if (
-            entry[1] >= 2
-            and entry[0].storageLevel == StorageLevel.NONE
-            and self._obs_cache_worthwhile()
-        ):
-            entry[0].persist()
-        return entry[0]
+        """Drop the memoized observation plans. Called on every table write
+        (``edges=False`` keeps the __contains ⋈ observed-data frame when
+        neither of those tables changed), on view (re)definition/removal,
+        and on delete/close."""
+        self._obs_frames = {}
+        if edges:
+            self._obs_edges_df = None
 
     def _obs_edges(self) -> DataFrame:
         """Memoized ``__contains ⋈ observed-data`` frame — the shared,
         view-independent 2/3 of the J6 triple join, computed once per
         warehouse state instead of once per storage-op call (r14-opt,
         guide §1.2/§2.4). Columns: ``__fp_target`` (the contained SCO id)
-        plus every observed-data column under its own name. Persisted
-        once a second consumer appears."""
-        entry = self._obs_edges_entry
-        if entry is None:
+        plus every observed-data column under its own name."""
+        if self._obs_edges_df is None:
             contains = self.table_df(CONTAINS)
             obs = self.table_df("observed-data")
-            df = (
+            self._obs_edges_df = (
                 contains.alias("c")
                 .join(obs.alias("o"), F.col("c.source_ref") == F.col("o.id"),
                       "inner")
@@ -1309,16 +1244,15 @@ class SparkStorage:
                     *[F.col(f"o.`{x}`").alias(x) for x in obs.columns],
                 )
             )
-            entry = self._obs_edges_entry = [df, 0]
-        return self._tick_entry(entry)
+        return self._obs_edges_df
 
     def _obs_join(self, df: DataFrame) -> DataFrame:
         """view ⋈ __contains ⋈ observed-data (the J6 triple join used by
         every observation-counting op, e.g. firepit/sqlstorage.py:896-900).
-        The __contains ⋈ observed-data leg reads the persisted
-        :meth:`_obs_edges` frame, so repeated ops re-join only the view
-        side. Output qualifiers: ``v`` = the view, ``obs`` = the edge frame
-        (every observed-data column plus ``__fp_target``)."""
+        The __contains ⋈ observed-data leg is the memoized
+        :meth:`_obs_edges` plan, shared by every op of a session. Output
+        qualifiers: ``v`` = the view, ``obs`` = the edge frame (every
+        observed-data column plus ``__fp_target``)."""
         edges = self._obs_edges()
         return df.alias("v").join(
             edges.alias("obs"),
@@ -1327,15 +1261,18 @@ class SparkStorage:
         )
 
     def _obs_view_frame(self, viewname: str) -> DataFrame | None:
-        """Memoized, persisted triple join for one view: every view column
-        under its own name plus every observed-data column under
-        ``__fp_obs_<name>``. ``None`` when the view has no ``id`` column
-        (nothing to join on — callers fall back to the uncached path and
-        fail exactly where the old code did)."""
-        entry = self._obs_frames.get(viewname)
-        if entry is None:
+        """Memoized triple join for one view: every view column under its
+        own name plus every observed-data column under ``__fp_obs_<name>``.
+        ``None`` — callers then take the uncached path and fail exactly
+        where the old code did — when the view has no ``id`` column
+        (nothing to join on) or already carries a ``__fp_obs_`` column
+        (the prefixed names would collide)."""
+        df = self._obs_frames.get(viewname)
+        if df is None:
             v = self._resolve(viewname)
-            if "id" not in v.columns:
+            if "id" not in v.columns or any(
+                x.startswith(self._OBS_PREFIX) for x in v.columns
+            ):
                 return None
             joined = self._obs_join(v)
             obs_cols = self.table_df("observed-data").columns
@@ -1346,8 +1283,8 @@ class SparkStorage:
                     for x in obs_cols
                 ],
             )
-            entry = self._obs_frames[viewname] = [df, 0]
-        return self._tick_entry(entry)
+            self._obs_frames[viewname] = df
+        return df
 
     def _obs_path_frame(self, viewname: str, path: str):
         """(frame, value_col, prop, obs_col_fn) for the observation-count
@@ -1372,16 +1309,6 @@ class SparkStorage:
             prop,
             lambda name: F.col(f"obs.`{name}`"),
         )
-
-    def obs_cache_handles(self) -> list:
-        """The live memoized observation frames, for callers that manage
-        cache lifetime explicitly (e.g. ``release(result)`` protocols):
-        unpersisting them is always safe — the memo re-persists on next
-        use."""
-        out = [df for df, _uses in self._obs_frames.values()]
-        if self._obs_edges_entry is not None:
-            out.append(self._obs_edges_entry[0])
-        return out
 
     def extract_observeddata_attribute(
         self,

@@ -44,8 +44,7 @@ def main():
         )
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
-        release(df)
-        spark.catalog.clearCache()
+        release()
         print(f"wrote {out_dir}/{name}.txt", file=sys.stderr)
 
 

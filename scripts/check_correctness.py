@@ -97,10 +97,7 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = [c.lower() for c in sdf.columns]
             srows = sdf.collect()
-            release(sdf)  # free operator-attached persists (q21/q25/q35)
-            # guarantee the next slot computes from parquet even if a slot
-            # drops its _fp_caches attribute in a projection (r13-opt)
-            spark.catalog.clearCache()
+            release()  # free pinned operator caches before the next slot
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)

@@ -59,8 +59,7 @@ def main():
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.monotonic() - t0, 3))
-            release(df)
-            spark.catalog.clearCache()  # same guarantee as bench.py
+            release()
         out[name] = {"samples": samples, "median": statistics.median(samples)}
         if do_explain:
             df = fn(spark, sf_dir)
@@ -70,7 +69,7 @@ def main():
                 df._jdf.queryExecution().executedPlan().toString()[:20000],
                 file=sys.stderr,
             )
-            release(df)
+            release()
     print(json.dumps(out))
 
 

@@ -16,7 +16,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from firepit_spark.functions import lm as L
+from firepit_spark.functions import lm as L, release
 
 
 def _toks(text):
@@ -498,7 +498,7 @@ def test_kn_fit_tables_and_discounts_exact(spark, corpus):
     assert (m.nb, m.u, m.vocab_size) == (py["nb"], py["u"], py["V"])
     # Ney discounts are ratios of exact integers: equal exactly
     assert (m.d3, m.d2, m.d1) == (py["d3"], py["d2"], py["d1"])
-    L.release_kn(m)
+    release()
 
 
 def test_kn_score_differential(spark, corpus):
@@ -522,7 +522,7 @@ def test_kn_score_differential(spark, corpus):
             assert g["kn_ppl"] == pytest.approx(2.0 ** bits, rel=1e-9)
         backoff_seen += u_hist
     assert backoff_seen > 0  # the odd half actually hit the backoff path
-    L.release_kn(m)
+    release()
 
 
 def test_kn_distribution_sums_to_one(spark, corpus):
@@ -557,4 +557,4 @@ def test_kn_short_docs_and_reproducibility(spark, corpus):
     am = {r["doc_id"]: r["kn_bits_per_token"] for r in a}
     bm = {r["doc_id"]: r["kn_bits_per_token"] for r in b}
     assert am == bm  # bit-identical across partitionings (sorted fold)
-    L.release_kn(m)
+    release()

@@ -1,20 +1,18 @@
 """Regression gate for the cache-release audit (r13-opt, widened r14-opt).
 
-``_fp_caches`` is a plain Python attribute: a slot that wraps an
-operator result in ``.select()`` silently drops the handles, so
-``release(result)`` frees nothing and later invocations reuse the
-previous run's caches through the CacheManager (found live on q35 and
-q38 in round 13; bench medians were under-measurements). This test runs
-EVERY declared slot end-to-end at sf0.001, releases, and asserts the
-session CacheManager is EMPTY — any future slot that drops its handles
-(or operator that persists without attaching) fails here. (r13 pinned
-only the known cache-attaching slots; the full sweep lived in a
-throwaway script — promoted here per the r13 verdict.)
+Operators register every frame that outlives their call with
+``functions.pin``; ``release()`` unpersists them all. A persist that
+bypasses the registry is invisible to ``release()``, and later
+invocations reuse the previous run's caches through the CacheManager
+(found live on q35 and q38 in round 13, when handles rode on the result
+object and a ``.select()`` dropped them; bench medians were
+under-measurements). This test runs EVERY declared slot end-to-end at
+sf0.001, releases, and asserts the session CacheManager is EMPTY — any
+future slot or operator that persists outside the registry fails here.
 
 Two library-level pipeline cases cover operators that COMPOSE
-cache-attaching stages outside any slot (the r13 advice finding:
-fuzzy_dedup dropped minhash_lsh_candidates' band-index handle because
-verify_candidate_pairs didn't propagate it).
+caching stages outside any slot (the r13 advice finding: fuzzy_dedup
+once lost minhash_lsh_candidates' band index).
 """
 
 from __future__ import annotations

@@ -952,6 +952,22 @@ def test_release_frees_operator_caches(spark):
     release(pairs)  # idempotent, and safe on plain DataFrames
     release(docs)
 
+    # a projection of a result still frees everything: caches are pinned
+    # in one registry, not attached to the returned frame
+    wrapped = [
+        ancestors(df, max_depth=4).select("descendant_id", "ancestor_id"),
+        dd.ngram_jaccard_pairs(docs, k=3, threshold=0.5).select("id_a"),
+    ]
+    for w in wrapped:
+        w.collect()
+    added = cached_ids() - before
+    assert added
+    release(wrapped[0])
+    assert not (cached_ids() & added)
+    for w in wrapped:
+        plan = w.select("*")._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan
+
 
 # ---------------------------------------------------------------- temporal
 

@@ -653,3 +653,69 @@ def test_observation_stats_fused_matches_separate_ops(spark, tmp_path):
     sep = {(r["value"], r["count"], r["number_observed"])
            for r in counts.join(nobs, "value").collect()}
     assert fused == sep and len(fused) == 2
+
+
+def test_obs_ops_on_view_with_reserved_prefix_column(spark, tmp_path):
+    """A view column named like the memo's ``__fp_obs_`` prefix takes the
+    uncached path instead of colliding with the prefixed observed-data
+    columns (ambiguous reference)."""
+    from firepit_spark.storage import SparkStorage
+
+    st = SparkStorage(str(tmp_path / "wh_prefix"), spark=spark)
+    objs = [{"type": "identity", "id": "identity--1", "name": "t"}]
+    for i in range(4):
+        objs.append({
+            "type": "observed-data", "id": f"observed-data--{i}",
+            "created_by_ref": "identity--1",
+            "first_observed": f"2020-01-01T00:0{i}:00Z",
+            "last_observed": f"2020-01-01T00:0{i}:00Z",
+            "number_observed": 1 + i % 3,
+            "objects": {"0": {"type": "url", "value": f"http://x/{i % 2}",
+                              "__fp_obs_number_observed": f"tag{i % 2}"}},
+        })
+    st.cache("q1", {"type": "bundle", "id": "bundle--p", "objects": objs})
+    st.extract("urls", "url", "q1", "")
+    path = "url:__fp_obs_number_observed"
+    counts = sorted((r[path], r["count"]) for r in st.value_counts("urls", path))
+    assert counts == [("tag0", 2), ("tag1", 2)]
+    assert st.number_observed("urls", "url:value") == 7
+    assert st.summary("urls")["number_observed"] == 7
+
+
+def test_concurrent_ingest_across_auto_compaction(spark, tmp_path):
+    """Appends racing an auto-compaction of the same table are neither
+    deleted by its reset nor read half-compacted."""
+    import threading
+
+    from firepit_spark.storage import SparkStorage
+
+    st = SparkStorage(str(tmp_path / "wh_race"), spark=spark)
+    st.auto_compact_batches = 2
+    n_threads, n_batches, n_rows = 2, 4, 5
+    errors = []
+
+    def ingest(t):
+        try:
+            for b in range(n_batches):
+                rows = [
+                    (f"url--{t}-{b}-{i}", f"http://t{t}/{b}/{i}")
+                    for i in range(n_rows)
+                ]
+                st.ingest_dataframe(
+                    "url", spark.createDataFrame(rows, "id string, value string")
+                )
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=ingest, args=(t,)) for t in range(n_threads)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    st._df_cache.clear()
+    assert st.count("url") == n_threads * n_batches * n_rows
+    assert st.table_df("url").select("id").distinct().count() == (
+        n_threads * n_batches * n_rows
+    )

@@ -296,33 +296,48 @@ def test_cap_per_key_auto_mode_three_regimes(spark, skewed):
     with pytest.raises(ValueError):
         wb.cap_per_key(skewed, "domain", 10, "doc_id", mode="eager")
 
-    # the decision count's persisted hot frame is exposed for release()
+    # the decision count's pinned hot frame is freed by release()
     from firepit_spark.functions import release
 
     again2 = wb.cap_per_domain(skewed, 10, salt="s", mode="auto")
-    assert len(getattr(again2, "_fp_caches", [])) == 1
     again2.count()
-    release(again2)  # no-op-safe unpersist of the hot-key cache
+    assert "InMemoryTableScan" in _fresh_plan(again2)
+    release()
+    assert "InMemoryTableScan" not in _fresh_plan(again2)
+    assert sorted(map(tuple, again2.collect())) == want  # recomputes
+
+
+def _fresh_plan(df) -> str:
+    """Executed plan of a new query over ``df``'s plan: cache substitution
+    runs at analysis, so it reflects the CacheManager as of now."""
+    return df.select("*")._jdf.queryExecution().executedPlan().toString()
 
 
 def test_cap_per_key_skew_mode_persists_hot_set_once(skewed):
     """mode='skew' (VERDICT r9 #7): the hot aggregate feeds BOTH join
     legs; persisting it makes single computation a plan property instead
-    of relying on Catalyst exchange reuse. The cache is exposed via the
-    release() contract like auto mode's."""
+    of relying on Catalyst exchange reuse. release() frees the cache, as
+    in auto mode."""
     from firepit_spark.functions import release
 
+    sc = skewed.sparkSession.sparkContext
+
+    def cached_ids():
+        # RDDs of the CacheManager's materialized in-memory relations
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = cached_ids()
     capped = wb.cap_per_domain(skewed, 10, salt="s", mode="skew")
-    caches = getattr(capped, "_fp_caches", [])
-    assert len(caches) == 1
     capped.count()  # materialize: the hot frame lands in the cache
-    assert caches[0].storageLevel.useMemory
+    added = cached_ids() - before
+    assert added
     # both legs now read InMemoryTableScan of the SAME cached aggregate —
     # the executed plan carries no second aggregation of the hot set
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") >= 2
-    release(capped)
-    assert not caches[0].storageLevel.useMemory
+    release()
+    assert not (cached_ids() & added)
+    assert "InMemoryTableScan" not in _fresh_plan(capped)
 
 
 # ------------------------------------------- PSL-table registered domain
