@@ -2181,8 +2181,7 @@ def q45_dedup_clusters(spark, sf_dir):
 # q45's transitive closure, two DuckDB dialects (version-gated in
 # _q45_sql): the plain recursive CTE runs on any DuckDB but its working
 # table is the FULL reachability relation (quadratic per clique — fine at
-# sf0.01, superlinear at sf1, which is why the sf1 cross-check lives in
-# scripts/check_q45_sf1.py); DuckDB >= 1.3's USING KEY recursion keys the
+# sf0.01, superlinear at sf1); DuckDB >= 1.3's USING KEY recursion keys the
 # working table on the node, so each iteration stores one improving
 # (node, min-label) row instead of all reachable pairs — linear state,
 # and it retires the union-find stand-in when the harness upgrades.

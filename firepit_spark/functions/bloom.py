@@ -11,8 +11,8 @@ Representation: a DataFrame of ``(word_idx int, word bigint)`` — the
 non-zero 64-bit words of the bitset. This shape is
 
 - **mergeable**: union two filters and ``bit_or`` per word — exactly the
-  filter of the unioned inputs (an algebra, like the HLL/KMV sketches in
-  :mod:`firepit_spark.functions.rollup` / ``kmv``), so per-shard /
+  filter of the unioned inputs (an algebra, like the count/sum rollups
+  in :mod:`firepit_spark.functions.rollup`), so per-shard /
   per-day filters fold without re-scanning raw data;
 - **bounded**: at most ``num_bits / 64`` rows regardless of input size —
   the build's only shuffle is over this word keyspace, and the filter

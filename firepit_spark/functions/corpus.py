@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from . import pin, text as tx
+from . import text as tx
 
 
 def ngrams(col: Column, n: int = 2) -> Column:
@@ -510,196 +510,6 @@ def corpus_report(
         F.round(F.percentile(ntok, F.lit(0.95)), 6).alias("p95_tokens"),
         F.round(F.avg(quality_score(t)), 6).alias("mean_quality"),
         F.mode(lang_guess(t)).alias("top_lang"),
-    )
-
-
-def document_signals(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 2,
-    dup_n: int = 5,
-    max_df_frac: float = 0.5,
-    simhash_bits: int | None = None,
-    score_loader=None,
-    with_vocab_summary: bool = False,
-) -> DataFrame:
-    """Every per-document curation signal in ONE corpus scan.
-
-    The gate-packed q22 slot recomputes normalization per signal family
-    (fine for a correctness gate, wasteful for a real job); this is the
-    production shape: normalize + tokenize ONCE into a persisted
-    ``(id, text, norm, toks)`` frame, then fan the families out from the
-    cache — fingerprint, token/char counts, punct/stopword/quality,
-    lang guess, Gopher char-fraction repetition (``top{top_n}_*``,
-    ``dup{dup_n}_*``), and the BM25 index stats (n_index_terms / max_tf /
-    dl under the ``max_df_frac`` stopword cutoff). Optional families,
-    all fanned from the SAME cache (no extra corpus scan):
-    ``simhash_bits`` adds the per-doc SimHash (``dedup.simhash``),
-    ``score_loader`` adds the Arrow-batched model score
-    (``inference.score_documents``), ``with_vocab_summary`` adds the
-    broadcast ``n_vocab_kept`` scalar (surviving index vocabulary).
-    With all three, the frame reproduces the driver gate q22's full
-    per-document column set bit-for-bit from one normalized-token pass
-    (pinned by tests/test_corpus.py::
-    test_document_signals_reproduces_q22_from_one_pass).
-
-    At 100 TB: one parquet pass builds the cache (spills under
-    MEMORY_AND_DISK); every downstream shuffle keys on the doc id or on
-    (doc, gram/term), so no key exceeds one document's token count. The
-    cache is pinned — call ``firepit_spark.functions.release()`` after
-    the terminal action in long-lived sessions.
-    """
-    t = F.col(text_col)
-    base = pin(df.select(
-        F.col(id_col),
-        t.alias("__text"),
-        F.lower(tx.normalize_ws(t)).alias("__norm"),
-        tx.tokens(t).alias("__toks"),
-    ))
-
-    tc = F.col("__text")
-    map_side = base.select(
-        F.col(id_col),
-        tx.fingerprint(tc).alias("fp"),
-        F.length(tc).alias("n_chars"),
-        F.length("__norm").alias("n_norm_chars"),
-        F.size("__toks").alias("n_tokens"),
-        tx.bpe_token_estimate(tc).alias("bpe_tokens"),
-        F.round(tx.punct_ratio(tc), 6).alias("punct_ratio"),
-        F.round(tx.stopword_ratio(tc), 6).alias("stopword_ratio"),
-        F.round(tx.quality_score(tc), 6).alias("quality"),
-        tx.lang_guess(tc).alias("lang_guessed"),
-    )
-
-    def rep(n: int, prefix: str, dup: bool) -> DataFrame:
-        grams = base.select(
-            F.col(id_col), F.explode(tx.word_ngrams(F.col("__norm"), n)).alias("__g")
-        )
-        cnt = grams.groupBy(id_col, "__g").agg(F.count(F.lit(1)).alias("__c"))
-        cover = (F.col("__c") * F.length("__g")).cast("long")
-        if dup:
-            return cnt.groupBy(id_col).agg(
-                F.sum(F.when(F.col("__c") > 1, cover).otherwise(0)).alias(
-                    f"{prefix}_chars"
-                )
-            )
-        best = F.max(F.struct(F.col("__c").alias("c"), cover.alias("v")))
-        return cnt.groupBy(id_col).agg(best.alias("__b")).select(
-            F.col(id_col),
-            F.col("__b.c").alias(f"{prefix}_count"),
-            F.col("__b.v").alias(f"{prefix}_cover_chars"),
-        )
-
-    top = rep(top_n, f"top{top_n}", dup=False)
-    dups = rep(dup_n, f"dup{dup_n}", dup=True)
-
-    n_docs = base.count()  # cached frame: metadata-cheap second action
-    terms = base.select(
-        F.col(id_col), F.explode("__toks").alias("__term")
-    ).filter(F.col("__term") != "")
-    tf = terms.groupBy(id_col, "__term").agg(F.count(F.lit(1)).alias("__tf"))
-    dfreq = (
-        tf.groupBy("__term")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= max(1, int(max_df_frac * n_docs)))
-        .select("__term")
-    )
-    idx = tf.join(dfreq, "__term").groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_index_terms"),
-        F.max("__tf").alias("max_tf"),
-        F.sum("__tf").alias("dl"),
-    )
-
-    out = (
-        map_side.join(top, id_col, "left")
-        .join(dups, id_col, "left")
-        .join(idx, id_col, "left")
-        .withColumn(
-            f"top{top_n}_char_frac",
-            F.col(f"top{top_n}_cover_chars") / F.col("n_norm_chars"),
-        )
-        .withColumn(
-            f"dup{dup_n}_char_frac",
-            F.col(f"dup{dup_n}_chars") / F.col("n_norm_chars"),
-        )
-    )
-
-    # optional families fan from the SAME cached base — the frames below
-    # start at an InMemoryTableScan, never a second corpus read
-    tdoc = base.select(F.col(id_col), F.col("__text").alias(text_col))
-    if simhash_bits is not None:
-        from firepit_spark.functions import dedup as _dd
-
-        out = out.join(
-            _dd.simhash(tdoc, text_col, id_col, bits=simhash_bits),
-            id_col,
-            "left",
-        )
-    if score_loader is not None:
-        from firepit_spark.functions.inference import score_documents
-
-        out = out.join(
-            score_documents(tdoc, loader=score_loader, text_col=text_col).select(
-                id_col, "model_score"
-            ),
-            id_col,
-            "left",
-        )
-    if with_vocab_summary:
-        out = out.crossJoin(
-            F.broadcast(dfreq.agg(F.count(F.lit(1)).alias("n_vocab_kept")))
-        )
-    return out
-
-
-def vocab_report(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int = 10000,
-) -> DataFrame:
-    """Corpus vocabulary head with a coverage curve: the ``top_k`` most
-    frequent tokens with occurrence count, document frequency, rank, and
-    the cumulative share of ALL token occurrences covered through that
-    rank — the standard tokenizer-budget diagnostic ("how many vocab
-    entries cover 99% of the corpus").
-
-    Ordering is (count desc, term asc): integer keys only, so rank and
-    the coverage quotient (exact cumulative int / exact total int) are
-    deterministic and engine-portable.
-
-    Scale shape: one explode + one (term) groupBy gets the full vocab
-    (partial aggregation folds per-partition term counts map-side); the
-    window runs over the top_k HEAD only (rows_between unbounded window
-    on a frame already truncated to k rows), never the full vocabulary,
-    and the corpus-total denominator is one broadcast scalar.
-    """
-    if top_k < 1:
-        raise ValueError(f"top_k must be >= 1, got {top_k}")
-    terms = df.select(
-        F.col(id_col), F.explode(tx.tokens(F.col(text_col))).alias("term")
-    ).filter(F.col("term") != "")
-    vocab = terms.groupBy("term").agg(
-        F.count(F.lit(1)).alias("count"),
-        F.count_distinct(id_col).alias("doc_freq"),
-    )
-    total = terms.agg(F.count(F.lit(1)).alias("__total"))
-    w = Window.orderBy(F.desc("count"), F.asc("term"))
-    head = (
-        vocab.orderBy(F.desc("count"), F.asc("term"))
-        .limit(top_k)
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn(
-            "__cum", F.sum("count").over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-    )
-    return head.crossJoin(F.broadcast(total)).select(
-        "rank",
-        "term",
-        "count",
-        "doc_freq",
-        (F.col("__cum") / F.col("__total")).alias("coverage"),
     )
 
 

@@ -215,9 +215,8 @@ def stream_report(df: DataFrame) -> StreamReport:
 
     * [red] plain ``Deduplicate`` over a streaming input with no
       upstream watermark — per-row state forever;
-      ``dropDuplicatesWithinWatermark`` (``stream_dedup_exact``) or a
-      Bloom-history dedup (``stream_bloom_dedup``) is always the better
-      op.
+      ``dropDuplicatesWithinWatermark`` or a Bloom-history dedup is
+      always the better op.
     * [red] stream-stream join missing a watermark on either side, or
       whose join condition references no watermarked (event-time)
       column — both make join state unbounded.
@@ -228,7 +227,7 @@ def stream_report(df: DataFrame) -> StreamReport:
       that the key domain really is bounded.
     * [yellow] stream-static join without a broadcast hint on the
       static side: the static side is re-scanned and shuffled every
-      micro-batch; ``F.broadcast`` it (``stream_enrich`` does).
+      micro-batch; ``F.broadcast`` it.
     """
     if not df.isStreaming:
         raise ValueError(
@@ -258,8 +257,7 @@ def stream_report(df: DataFrame) -> StreamReport:
                         (RED,
                          "stream-stream join without a watermark on the "
                          f"{' and '.join(missing_wm)} side(s): join state "
-                         "is never evicted — withWatermark both inputs "
-                         "(stream_interval_join does)")
+                         "is never evicted — withWatermark both inputs")
                     )
                 # watermarked event-time attributes print with a
                 # `#<exprId>-T<delay>ms` delay marker; a condition that
@@ -273,7 +271,7 @@ def stream_report(df: DataFrame) -> StreamReport:
                          "stream-stream join whose condition has no "
                          "event-time bound: state grows with the stream — "
                          "add a time-range predicate between the two "
-                         "event-time columns (stream_interval_join does)")
+                         "event-time columns")
                     )
             elif l_stream or r_stream:
                 rep.stream_static_joins += 1
@@ -302,8 +300,8 @@ def stream_report(df: DataFrame) -> StreamReport:
                     (RED,
                      "streaming dropDuplicates without a watermark: per-row "
                      "state is kept forever — use "
-                     "dropDuplicatesWithinWatermark (stream_dedup_exact) "
-                     "or Bloom-history dedup (stream_bloom_dedup)")
+                     "dropDuplicatesWithinWatermark or a Bloom-history "
+                     "dedup")
                 )
             elif not has_wm and not has_timeout:
                 rep.unevicted_state_ops += 1

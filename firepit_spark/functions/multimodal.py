@@ -29,7 +29,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -51,23 +51,6 @@ MEDIA_SCHEMA = StructType(
         StructField("duration_ms", LongType()),
     ]
 )
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("content_md5", StringType()),
-        StructField("feature", StringType()),
-    ]
-)
-
-
-def _fake_feature(content: bytes) -> str:
-    """Deterministic stand-in for a real feature extractor."""
-    import hashlib
-
-    return hashlib.md5(content or b"").hexdigest()[:16]
 
 
 def decode_stub(kind: str, content: bytes):
@@ -638,79 +621,6 @@ def mp3_probe(content: bytes) -> dict:
     out["n_frames"] = n_frames
     out["duration_ms"] = int(total_samples * 1000 // out["sample_rate"])
     out["vbr_declared_frames"] = xing_frames
-    return out
-
-
-def ogg_probe(content: bytes) -> dict:
-    """Ogg container metadata (Vorbis / Opus / Ogg-FLAC / Theora): codec
-    identified from the first BOS packet's magic, channels/rate from its
-    ID header, duration from the stream's LAST granule position (PCM
-    samples for Vorbis; 48 kHz ticks minus pre-skip for Opus — the
-    granule clock is 48 kHz regardless of the input rate, per RFC 7845).
-    Pure page walk, CRCs not verified (this is a probe, not a decoder).
-    Raises ValueError for non-Ogg bytes."""
-    if not content or content[:4] != b"OggS":
-        raise ValueError("not an Ogg stream")
-    pos = 0
-    first: dict | None = None
-    serial0 = None
-    last_granule = 0
-    n_pages = 0
-    while pos + 27 <= len(content):
-        if content[pos:pos + 4] != b"OggS":
-            break
-        htype = content[pos + 5]
-        granule = struct.unpack("<q", content[pos + 6:pos + 14])[0]
-        serial = struct.unpack("<I", content[pos + 14:pos + 18])[0]
-        nseg = content[pos + 26]
-        seg_table = content[pos + 27:pos + 27 + nseg]
-        if len(seg_table) < nseg:
-            break
-        body_len = sum(seg_table)
-        body = content[pos + 27 + nseg:pos + 27 + nseg + body_len]
-        if first is None and htype & 0x02:  # beginning-of-stream page
-            serial0 = serial
-            if body[:7] == b"\x01vorbis" and len(body) >= 16:
-                first = {
-                    "codec": "vorbis",
-                    "channels": body[11],
-                    "sample_rate": struct.unpack("<I", body[12:16])[0],
-                    "granule_rate": struct.unpack("<I", body[12:16])[0],
-                    "pre_skip": 0,
-                }
-            elif body[:8] == b"OpusHead" and len(body) >= 16:
-                first = {
-                    "codec": "opus",
-                    "channels": body[9],
-                    "sample_rate": struct.unpack("<I", body[12:16])[0],
-                    "granule_rate": 48000,
-                    "pre_skip": struct.unpack("<H", body[10:12])[0],
-                }
-            elif body[:5] == b"\x7fFLAC":
-                first = {"codec": "flac", "channels": None,
-                         "sample_rate": None, "granule_rate": None,
-                         "pre_skip": 0}
-            elif body[:7] == b"\x80theora":
-                first = {"codec": "theora", "channels": None,
-                         "sample_rate": None, "granule_rate": None,
-                         "pre_skip": 0}
-            else:
-                first = {"codec": "unknown", "channels": None,
-                         "sample_rate": None, "granule_rate": None,
-                         "pre_skip": 0}
-        if serial == serial0 and granule > 0:
-            last_granule = max(last_granule, granule)
-        n_pages += 1
-        pos += 27 + nseg + body_len
-    if first is None:
-        raise ValueError("Ogg stream has no BOS page")
-    out = dict(first)
-    out["n_pages"] = n_pages
-    gr = out.pop("granule_rate")
-    skip = out.pop("pre_skip")
-    out["duration_ms"] = (
-        int(max(last_granule - skip, 0) * 1000 // gr) if gr else None
-    )
     return out
 
 
@@ -1526,22 +1436,6 @@ def mp4_track_probe(content: bytes) -> list:
     return tracks
 
 
-def align_to_keyframes(targets: list, sync_samples: list | None) -> list:
-    """Snap each requested 1-based sample number to the nearest sync
-    sample AT OR BEFORE it (a decoder can only start at a keyframe).
-    ``sync_samples`` None means every sample is sync (stss absent) —
-    targets come back unchanged; targets before the first sync snap TO
-    the first sync. Pure bisect arithmetic, no decode."""
-    if sync_samples is None:
-        return list(targets)
-    if not sync_samples:
-        raise ValueError("empty stss: no sync samples to start from")
-    import bisect
-
-    ss = sorted(sync_samples)
-    return [ss[max(0, bisect.bisect_right(ss, t) - 1)] for t in targets]
-
-
 def mp4_encode_stub(
     duration_ms: int,
     timescale: int = 1000,
@@ -1718,94 +1612,6 @@ def image_dhash(
             )
 
     return media.mapInPandas(run, schema=IMAGE_DHASH_SCHEMA)
-
-
-def extract_features(media: DataFrame, use_fake: bool = True) -> DataFrame:
-    """Per-blob feature extraction over ``mapInPandas``.
-
-    Arrow moves each partition's blobs as one batch; the Python worker sees
-    a ``pd.DataFrame`` per batch (never whole-table). With ``use_fake`` the
-    deterministic md5 feature exercises the full distributed path; with
-    ``use_fake=False`` images/audio decode through the real kernels
-    (pure-python PNG/WAV always; Pillow/soundfile formats when those libs
-    are installed) into stats JSON, and video frame features stay behind
-    :func:`decode_stub` until a frame decoder is present.
-    """
-
-    def real_feature(kind, content):
-        import json
-
-        if not content:
-            return None  # tolerate NULL/empty blobs like the fake path
-        try:
-            if kind == "image":
-                try:
-                    return json.dumps(
-                        image_stats(decode_image(content)), sort_keys=True
-                    )
-                except (NotImplementedError, ValueError):
-                    # no pixel codec (arithmetic/lossless JPEG without
-                    # Pillow) OR corrupt pixel data: fall back to the
-                    # pure-python header+entropy scan when possible
-                    jf = jpeg_features(content)
-                    if jf is not None:
-                        return json.dumps(jf, sort_keys=True)
-                    raise
-            if kind == "audio":
-                return json.dumps(audio_stats(*decode_audio(content)), sort_keys=True)
-            if kind == "video":
-                # codec-free container + sample-table stats (stts/stsz):
-                # duration, track count, frame count/rate/bytes — real
-                # features; only frame PIXEL decode stays env-limited
-                try:
-                    info = mp4_probe(content)
-                    tracks = mp4_track_probe(content)
-                except ValueError:
-                    return decode_stub(kind, content)  # non-MP4 video blob
-                vide = next(
-                    (t for t in tracks if t["handler"] == "vide" and t["n_samples"]),
-                    None,
-                ) or next((t for t in tracks if t["n_samples"]), None)
-                feat = {
-                    "duration_ms": info["duration_ms"],
-                    "n_tracks": info["n_tracks"],
-                    "n_frames": vide["n_samples"] if vide else None,
-                    "fps": vide["fps"] if vide else None,
-                    "frame_bytes": vide["sample_bytes"] if vide else None,
-                }
-                return json.dumps(feat, sort_keys=True)
-            return decode_stub(kind, content)
-        except (NotImplementedError, ValueError):
-            # no codec for this blob in this environment, or the blob is
-            # corrupt: degrade like an empty blob (NULL feature) instead
-            # of failing the whole corpus-scale pass on one bad row
-            return None
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["content"].map(lambda b: len(b) if b is not None else 0),
-                    "content_md5": pdf["content"].map(
-                        lambda b: hashlib.md5(b or b"").hexdigest()
-                    ),
-                    "feature": (
-                        pdf["content"].map(_fake_feature)
-                        if use_fake
-                        else [
-                            real_feature(k, c)
-                            for k, c in zip(pdf["kind"], pdf["content"])
-                        ]
-                    ),
-                }
-            )
-            yield out
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 PROBE_SCHEMA = StructType(
@@ -2134,47 +1940,6 @@ def video_frame_dhash(
             yield pd.DataFrame(recs, columns=[f.name for f in out_schema.fields])
 
     return media.mapInPandas(run, schema=out_schema)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Expand each video row into frame-timestamp rows (the sampling plan);
-    the frame decode itself is the stubbed kernel. Pure column ops."""
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("duration_ms"), F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )
-
-
-def frame_index_plan(
-    media: DataFrame,
-    every_n: int = 24,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Expand each MP4 row into (media_id, frame_idx, frame_ts_ms) sampling
-    rows from the REAL per-track frame count/rate (stts walk — r8), taking
-    every ``every_n``-th frame. Unlike :func:`frame_sample_plan` (which
-    paces by wall-clock ms from table metadata), this indexes actual
-    samples, so a decoder can seek by sample number. Rows whose blob has
-    no parsable sample table produce nothing. The probe is one Arrow batch
-    pass; the expansion is pure column ops."""
-    if every_n < 1:
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-    probed = video_probe(media, id_col=id_col, content_col=content_col).filter(
-        F.col("n_frames").isNotNull() & (F.col("n_frames") > 0)
-    )
-    idx = F.explode(
-        F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-    ).alias("frame_idx")
-    return probed.select(F.col(id_col), "n_frames", "fps", idx).select(
-        F.col(id_col),
-        "frame_idx",
-        F.floor(F.col("frame_idx") * 1000.0 / F.col("fps"))
-        .cast("long")
-        .alias("frame_ts_ms"),
-    )
 
 
 def synthesize_media(spark, n: int = 64, partitions: int = 4) -> DataFrame:

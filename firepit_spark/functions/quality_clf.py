@@ -144,7 +144,7 @@ def train_quality_classifier(
     y = labels.select(
         F.col(id_col), F.col(label_col).cast("double").alias("__y")
     )
-    n_docs = y.count()  # bounded driver scalar (one job, like kmv/bpe)
+    n_docs = y.count()  # bounded driver scalar (one job, like bpe)
     # persist the feature-label frame: BOTH the error pass and the
     # gradient pass read it every round, so without the cache the whole
     # upstream featurization (tokenize + explode + hash + agg) re-ran

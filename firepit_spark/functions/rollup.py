@@ -87,136 +87,3 @@ def reaggregate(
             F.col("val_sum").cast("double") / F.col("n"),
         )
     )
-
-
-# --- mergeable distinct-count sketches -------------------------------------
-# COUNT(DISTINCT x) is the one dashboard aggregate that is NOT algebraic:
-# distinct counts from two buckets don't add. At 100 TB the fix is the
-# DataSketches HLL integration (JVM-side aggregates): the fine rollup
-# stores a binary sketch per (bucket, dims); any coarser bucket or dim
-# subset is answered by register-wise sketch union — no raw re-scan, and
-# the union is exactly the sketch the raw data would have produced
-# (register max is associative/commutative), so coarse estimates are
-# reproducible to the bit.
-
-
-def build_sketch_rollup(
-    df: DataFrame,
-    ts_col: str,
-    dims: list,
-    distinct_col: str,
-    bucket_seconds: int = 60,
-    lg_config_k: int = 12,
-) -> DataFrame:
-    """Fine rollup carrying an HLL sketch of ``distinct_col`` per
-    (bucket, dims) — persist this next to the algebraic rollup."""
-    return df.groupBy(
-        time_bucket(ts_col, bucket_seconds).alias("bucket"),
-        *[F.col(d) for d in dims],
-    ).agg(
-        F.hll_sketch_agg(F.col(distinct_col), F.lit(lg_config_k)).alias("hll"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def reaggregate_sketch(
-    rollup: DataFrame,
-    bucket_seconds: int,
-    dims: list | None = None,
-) -> DataFrame:
-    """Coarser approx-distinct from a sketch rollup: union the fine
-    sketches (no raw scan) and estimate."""
-    all_dims = [c for c in rollup.columns if c not in ("bucket", "hll", "n")]
-    keep = all_dims if dims is None else dims
-    return (
-        rollup.groupBy(
-            time_bucket("bucket", bucket_seconds).alias("bucket"),
-            *[F.col(d) for d in keep],
-        )
-        .agg(
-            F.hll_union_agg(F.col("hll")).alias("hll"),
-            F.sum("n").alias("n"),
-        )
-        .withColumn("approx_distinct", F.hll_sketch_estimate(F.col("hll")))
-    )
-
-
-# --- mergeable quantile histograms -----------------------------------------
-# Percentiles are the other non-algebraic dashboard aggregate. A log2-binned
-# histogram per (bucket, dims) makes them rollup-able the same way the HLL
-# sketch fixes COUNT DISTINCT: per-bin counts are plain sums, so any coarser
-# bucket or dim subset merges exactly, and a quantile is read off the merged
-# histogram by cumulative interpolation. Log2 bins give constant relative
-# error (~bin width) across magnitudes — the right trade for latency/size
-# style metrics — and the whole path is built-in expressions (codegen,
-# no sketch library needed).
-
-
-def log2_bin(col) -> F.Column:
-    """Histogram bin index: floor(log2(1 + max(value, 0))). Bin b covers
-    [2^b - 1, 2^(b+1) - 1)."""
-    return F.floor(F.log2(F.greatest(col, F.lit(0)).cast("double") + 1.0)).cast("int")
-
-
-def build_hist_rollup(
-    df: DataFrame,
-    ts_col: str,
-    dims: list,
-    value_col: str,
-    bucket_seconds: int = 60,
-) -> DataFrame:
-    """Fine rollup in long form: one row per (bucket, dims, bin) with the
-    row count — the mergeable state for quantile queries."""
-    return df.groupBy(
-        time_bucket(ts_col, bucket_seconds).alias("bucket"),
-        *[F.col(d) for d in dims],
-        log2_bin(F.col(value_col)).alias("bin"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def reaggregate_hist(
-    rollup: DataFrame,
-    bucket_seconds: int,
-    dims: list | None = None,
-) -> DataFrame:
-    """Merge fine histograms into coarser buckets / fewer dims (exact:
-    per-bin counts are algebraic)."""
-    all_dims = [c for c in rollup.columns if c not in ("bucket", "bin", "n")]
-    keep = all_dims if dims is None else dims
-    return rollup.groupBy(
-        time_bucket("bucket", bucket_seconds).alias("bucket"),
-        *[F.col(d) for d in keep],
-        "bin",
-    ).agg(F.sum("n").alias("n"))
-
-
-def quantile_from_hist(hist: DataFrame, q: float) -> DataFrame:
-    """Estimate the q-quantile per (bucket, dims) group from a histogram by
-    cumulative linear interpolation inside the target bin. One window pass
-    partitioned by the group — no raw data touched."""
-    from pyspark.sql import Window
-
-    if not 0.0 < q < 1.0:
-        raise ValueError(f"q must be in (0, 1), got {q}")
-    keys = [c for c in hist.columns if c not in ("bin", "n")]
-    w = Window.partitionBy(*keys).orderBy("bin")
-    wall = Window.partitionBy(*keys)
-    cum = hist.withColumn("cum", F.sum("n").over(w)).withColumn(
-        "total", F.sum("n").over(wall)
-    )
-    # first bin whose cumulative count reaches rank = q * total
-    target = cum.filter(
-        F.col("cum") >= F.col("total") * q
-    ).groupBy(*keys).agg(
-        F.min_by(F.struct("bin", "cum", "n", "total"), "bin").alias("s")
-    )
-    lo = F.pow(F.lit(2.0), F.col("s.bin")) - 1.0
-    hi = F.pow(F.lit(2.0), F.col("s.bin") + 1) - 1.0
-    frac = (F.col("s.total") * q - (F.col("s.cum") - F.col("s.n"))) / F.col("s.n")
-    # round() not int(): int truncates float noise (0.29*100 -> 28) and
-    # collapses q=0.999 onto q=0.99's label; keep enough digits to stay
-    # unique ("q29", "q99_9")
-    label = f"{q * 100:.6f}".rstrip("0").rstrip(".").replace(".", "_")
-    return target.select(
-        *keys, F.round(lo + frac * (hi - lo), 6).alias(f"q{label}")
-    )

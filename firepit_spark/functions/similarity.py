@@ -685,398 +685,3 @@ def semantic_dedup(
             F.col("node").alias(id_col)
         )
     return assigned.join(drops, id_col, "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ): the memory end-game for billion-vector ANN.
-# Each vector is cut into m subvectors; each subvector is replaced by the
-# index of its nearest codeword in a per-subspace codebook of size k —
-# dim floats become m bytes (e.g. 64-dim float64 = 512 B -> 4 B at m=4).
-# Search uses asymmetric distance (ADC): per query, a tiny m x k lookup
-# table of exact query-subvector-to-codeword distances is built ONCE (as
-# plan expressions over literal codebooks), then every code row is scored
-# by m table lookups — no decode, no per-row float math beyond the LUT.
-# ---------------------------------------------------------------------------
-
-
-def pq_fit(
-    vectors: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> list:
-    """Train PQ codebooks: an independent k-means per subspace.
-
-    Returns ``codebooks[sub][codeword] -> list[float]`` (m × k × dim/m —
-    tiny, lives on the driver like IVF centroids). Subspace fits run on
-    sliced columns of the SAME DataFrame scan. Like :func:`ivf_fit`, the
-    iterative k-means has no SQL closed form; for a deterministic,
-    oracle-checkable encoder take codebooks from fixed seed vectors via
-    :func:`pq_codebooks_from_seeds`.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    dim = len(vectors.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    codebooks = []
-    for sub in range(m):
-        sliced = vectors.select(
-            array_to_vector(
-                F.slice(F.col(vec_col).cast("array<double>"), sub * dsub + 1, dsub)
-            ).alias("__v")
-        )
-        model = KMeans(k=k, seed=seed + sub, featuresCol="__v").fit(sliced)
-        codebooks.append([list(c) for c in model.clusterCenters()])
-    return codebooks
-
-
-def pq_codebooks_from_seeds(seed_vectors: list, m: int) -> list:
-    """Deterministic codebooks from k caller-chosen seed vectors (their
-    subspace slices become the codewords) — the closed-form twin of
-    :func:`pq_fit`, usable in SQL oracles and across engines."""
-    if not seed_vectors:
-        raise ValueError("seed_vectors must be non-empty")
-    dim = len(seed_vectors[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    return [
-        [[float(x) for x in v[sub * dsub : (sub + 1) * dsub]] for v in seed_vectors]
-        for sub in range(m)
-    ]
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Encode each vector as ``array<int>`` of m codeword indexes (nearest
-    codeword per subspace, Euclidean; ties break on the lower index).
-
-    Map-only: codebooks are plan literals, the argmin per subspace is an
-    ``array_sort`` over k (distance, index) structs — whole-stage codegen,
-    no join, no shuffle, embarrassingly parallel at any corpus size.
-    """
-    m = len(codebooks)
-    k = len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    x = F.col(vec_col)
-    subcodes = []
-    for sub in range(m):
-        sv = F.slice(x, sub * dsub + 1, dsub)
-        dists = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            sv,
-                            _dvec(codebooks[sub][cw]),
-                            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    ).alias("d"),
-                    F.lit(cw).alias("cw"),
-                )
-                for cw in range(k)
-            ]
-        )
-        subcodes.append(F.array_sort(dists)[0]["cw"])
-    return vectors.withColumn(code_col, F.array(*subcodes))
-
-
-def pq_search(
-    codes: DataFrame,
-    codebooks: list,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes.
-
-    The query side is broadcast; for each query the m × n_codewords LUT
-    of exact subvector->codeword squared distances is a plan expression
-    over the literal codebooks (evaluated once per row-batch by codegen),
-    and each corpus row costs m ``element_at`` lookups + a sum — the
-    corpus streams through in one pass touching only (id, m-byte code).
-    At 100 TB this is the shape that works: the float corpus never loads.
-    Returns (query_id, neighbor_id, adc_dist, rank); ``adc_dist`` is the
-    PQ approximation of squared L2, rounded to 6 decimals, ties on id.
-    """
-    m = len(codebooks)
-    n_cw = len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    qv = F.col(query_vec_col)
-    lut = F.array(
-        *[
-            F.array(
-                *[
-                    F.aggregate(
-                        F.zip_with(
-                            F.slice(qv, sub * dsub + 1, dsub),
-                            _dvec(codebooks[sub][cw]),
-                            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                    for cw in range(n_cw)
-                ]
-            )
-            for sub in range(m)
-        ]
-    )
-    scored = codes.crossJoin(F.broadcast(queries.withColumn("__lut", lut))).select(
-        F.col(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            F.aggregate(
-                # code array (length m) zips positionally with the LUT's
-                # m subspace rows; each pair costs one element_at lookup
-                F.zip_with(
-                    F.col(code_col),
-                    F.col("__lut"),
-                    lambda code, sublut: F.element_at(sublut, code + F.lit(1)),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        ).alias("adc_dist"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "adc_dist", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: the FAISS-standard composition — coarse Voronoi cells bound the
-# candidate set (IVF), PQ codes of the RESIDUAL (vector minus its cell
-# centroid) bound the memory. Residuals are small and centered, so the
-# same codebook bits buy much more precision than PQ over raw vectors.
-# ---------------------------------------------------------------------------
-
-
-def ivfpq_encode(
-    vectors: DataFrame,
-    centroids: list,
-    codebooks: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode each vector as (cell, m-byte residual PQ code).
-
-    Map-only like :func:`pq_encode`: the nearest-centroid argmin and the
-    per-subspace codeword argmins are all plan expressions over literal
-    centroid/codebook arrays. The output (id, cell, code) is the entire
-    search-time corpus footprint — floats never load at query time.
-    ``codebooks`` quantize the residual space; train them on residuals
-    (or seed them via :func:`pq_codebooks_from_seeds` on residual
-    samples) for the precision the residual trick exists to buy.
-    """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    x = F.col(vec_col)
-    cell = centroid_cells(x, centroids, 1)[0]
-    # residual = x - centroid[cell]: a CASE chain over the literal
-    # centroids, built against the materialized cell COLUMN so the
-    # (expensive) nearest-centroid argmin isn't re-evaluated per branch
-    out = vectors.withColumn("__cell", cell)
-    resid_expr = None
-    for ci, c in enumerate(centroids):
-        branch = F.zip_with(
-            F.col(vec_col),
-            _dvec(c),
-            lambda a, b: a.cast("double") - b,
-        )
-        resid_expr = (
-            branch
-            if resid_expr is None
-            else F.when(F.col("__cell") == F.lit(ci), branch).otherwise(resid_expr)
-        )
-    out = out.withColumn("__resid", resid_expr)
-    subcodes = []
-    for sub in range(m):
-        sv = F.slice(F.col("__resid"), sub * dsub + 1, dsub)
-        dists = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            sv,
-                            _dvec(codebooks[sub][cw]),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    ).alias("d"),
-                    F.lit(cw).alias("cw"),
-                )
-                for cw in range(len(codebooks[sub]))
-            ]
-        )
-        subcodes.append(F.array_sort(dists)[0]["cw"])
-    return out.select(
-        F.col(id_col),
-        F.col("__cell").alias("cell"),
-        F.array(*subcodes).alias("pq_code"),
-    )
-
-
-def ivfpq_search(
-    codes: DataFrame,
-    centroids: list,
-    codebooks: list,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Top-k ADC search over IVF-PQ codes.
-
-    Per query: pick ``n_probe`` nearest cells, and for EACH probed cell
-    build the residual LUT against (query - that cell's centroid) — all
-    literal-codebook plan expressions, one broadcast of the exploded
-    query frame. The corpus side streams only rows whose ``cell``
-    equi-joins a probed cell: candidate cost is bounded by the inverted
-    lists, memory by the m-byte codes. Approximates squared L2; returns
-    (query_id, neighbor_id, adc_dist, rank), ties on id.
-    """
-    m = len(codebooks)
-    n_cw = len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    qv = F.col(query_vec_col)
-    probed = (
-        queries.withColumn("__cells", centroid_cells(qv, centroids, n_probe))
-        .withColumn("cell", F.explode("__cells"))
-        .drop("__cells")
-    )
-    # residual of the query against the PROBED cell's centroid
-    qresid = None
-    for ci, c in enumerate(centroids):
-        branch = F.zip_with(
-            qv, _dvec(c), lambda a, b: a.cast("double") - b
-        )
-        qresid = (
-            branch
-            if qresid is None
-            else F.when(F.col("cell") == F.lit(ci), branch).otherwise(qresid)
-        )
-    probed = probed.withColumn("__qresid", qresid)
-    lut = F.array(
-        *[
-            F.array(
-                *[
-                    F.aggregate(
-                        F.zip_with(
-                            F.slice(F.col("__qresid"), sub * dsub + 1, dsub),
-                            _dvec(codebooks[sub][cw]),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                    for cw in range(n_cw)
-                ]
-            )
-            for sub in range(m)
-        ]
-    )
-    probed = probed.withColumn("__lut", lut).drop("__qresid")
-    scored = codes.join(F.broadcast(probed), "cell").select(
-        F.col(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("pq_code"),
-                    F.col("__lut"),
-                    lambda code, sublut: F.element_at(sublut, code + F.lit(1)),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        ).alias("adc_dist"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "adc_dist", "rank")
-    )
-
-
-def ivfpq_fit(
-    vectors: DataFrame,
-    n_cells: int = 16,
-    m: int = 4,
-    n_codewords: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> tuple:
-    """Train the full IVF-PQ index: k-means cells, then per-subspace
-    k-means over the RESIDUALS of the fitted assignment. Returns
-    ``(centroids, codebooks)`` ready for :func:`ivfpq_encode` /
-    :func:`ivfpq_search`.
-
-    The residual frame is built once (cell CASE chain over the fitted
-    centroids) and each subspace fit slices it — one extra corpus pass
-    per subspace, the standard offline training cost; like
-    :func:`ivf_fit`/:func:`pq_fit` the k-means has no SQL closed form,
-    so fitted indexes are pytest-gated while fixed-seed indexes are the
-    oracle path.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    idx = ivf_fit(vectors, n_cells=n_cells, id_col=id_col, vec_col=vec_col, seed=seed)
-    centroids = idx.centroids
-    dim = len(centroids[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    resid_expr = None
-    for ci, c in enumerate(centroids):
-        branch = F.zip_with(
-            F.col(vec_col),
-            _dvec(c),
-            lambda a, b: a.cast("double") - b,
-        )
-        resid_expr = (
-            branch
-            if resid_expr is None
-            else F.when(F.col("__cell") == F.lit(ci), branch).otherwise(resid_expr)
-        )
-    resid = idx.assigned.withColumn("__resid", resid_expr).persist()
-    codebooks = []
-    try:
-        for sub in range(m):
-            sliced = resid.select(
-                array_to_vector(F.slice(F.col("__resid"), sub * dsub + 1, dsub)).alias("__v")
-            )
-            model = KMeans(k=n_codewords, seed=seed + 1 + sub, featuresCol="__v").fit(sliced)
-            codebooks.append([list(c) for c in model.clusterCenters()])
-    finally:
-        resid.unpersist()
-    return centroids, codebooks

@@ -136,8 +136,7 @@ def sessionize(
     key's gap since its previous event exceeds ``gap_seconds``.
 
     Returns the input plus ``sess_id`` (1-based, per key, in time order)
-    — the batch twin of ``streaming/sessions.py:gap_sessions`` and the
-    library core behind the q20 entry. One window keyed on ``key_col``
+    — the library core behind the q20 entry. One window keyed on ``key_col``
     (lag + running sum in the same frame, single sort-shuffle);
     ``tiebreak_col`` makes equal-timestamp ordering deterministic.
     NTZ-safe via :func:`firepit_spark.functions.epoch_seconds`.

@@ -1,15 +1,13 @@
-"""BM25 lexical search over an inverted text index.
+"""Inverted text index for BM25-style lexical scoring.
 
 The corpus-scale shape mirrors the other index/lookup splits in this repo
 (IVF, MinHash-LSH): build the inverted index ONCE per frozen corpus —
 ``(term, doc_id, tf)`` plus per-doc lengths, both plain DataFrames you
-persist to parquet (ideally bucketed by ``term``) — then score any number
-of queries with one small join each. A query touches only its own terms'
-posting lists, never the corpus: the filter on ``term`` is pushed into the
-parquet scan, and the query-term frame is broadcast.
+persist to parquet (ideally bucketed by ``term``) — so a query touches
+only its own terms' posting lists, never the corpus.
 
 Everything is built-in expressions (tokenize/explode/groupBy/join/sum);
-scores are deterministic, so ranking is reproducible across engines and
+the index is deterministic, so it is reproducible across engines and
 partitionings.
 """
 
@@ -84,97 +82,3 @@ def build_text_index(
         F.broadcast(per_doc.select(F.avg("dl").alias("avgdl")))
     )
     return postings, doc_lens
-
-
-def bm25_search(
-    postings: DataFrame,
-    doc_lens: DataFrame,
-    query: str,
-    id_col: str = "doc_id",
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Top-k docs for ``query`` by BM25.
-
-    Tokenizes the query with the index's tokenizer, filters the postings
-    to those terms (scan-pushed equality-IN filter over the term column),
-    and sums the per-term contributions:
-
-        idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
-    """
-    spark = postings.sparkSession
-    qterms = [
-        t
-        for t in (
-            spark.range(1)
-            .select(tokens(F.lit(query)).alias("t"))
-            .first()["t"]
-        )
-        if t
-    ]
-    if not qterms:
-        raise ValueError("query has no tokens")
-    hits = postings.filter(F.col("term").isin(qterms)).join(doc_lens, id_col)
-    contrib = hits.withColumn(
-        "score_part",
-        F.col("idf")
-        * F.col("tf")
-        * (k1 + 1)
-        / (
-            F.col("tf")
-            + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-        ),
-    )
-    return (
-        contrib.groupBy(id_col)
-        .agg(
-            F.round(F.sum("score_part"), 6).alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-        .orderBy(F.col("bm25").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def rrf_fuse(
-    ranked: list,
-    id_col: str = "doc_id",
-    k: int = 60,
-    topk: int = 10,
-) -> DataFrame:
-    """Reciprocal-rank fusion of heterogeneous retrievers.
-
-    ``ranked`` is a list of ``(df, score_col)`` pairs — e.g. BM25 results
-    and embedding cosine top-k — whose scores are incomparable across
-    systems. RRF sidesteps calibration by ranking within each list and
-    summing ``1 / (k + rank)``; ties inside a list break on the id so the
-    fusion is deterministic. Each input is already a small top-k frame, so
-    the windows and the union are driver-cheap regardless of corpus size.
-    """
-    from pyspark.sql import Window
-
-    if not ranked:
-        raise ValueError("no ranked inputs")
-    parts = []
-    for df, score_col in ranked:
-        w = Window.orderBy(F.col(score_col).desc(), F.col(id_col))
-        parts.append(
-            df.select(
-                F.col(id_col),
-                (1.0 / (F.lit(k) + F.row_number().over(w))).alias("rrf_part"),
-            )
-        )
-    it = iter(parts)
-    allp = next(it)
-    for p in it:
-        allp = allp.unionByName(p)
-    return (
-        allp.groupBy(id_col)
-        .agg(
-            F.round(F.sum("rrf_part"), 9).alias("rrf"),
-            F.count(F.lit(1)).alias("n_lists"),
-        )
-        .orderBy(F.col("rrf").desc(), F.col(id_col))
-        .limit(topk)
-    )

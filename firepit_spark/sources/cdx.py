@@ -32,12 +32,6 @@ Openers: local/NFS paths use plain ``open`` executor-side (no JVM
 gateway exists inside Arrow workers — the Hadoop FileSystem API is a
 driver-only facility). An ``opener`` callable can be injected for
 object stores; it must return a file-like with ``seek``/``read``.
-:func:`firepit_spark.sources.openers.http_range_opener` is the shipped
-one — stdlib HTTP(S) ``Range`` GETs with keep-alive, which is exactly
-how public CommonCrawl is served::
-
-    fetch_warc_records(idx, base_dir="https://data.commoncrawl.org/",
-                       opener=http_range_opener)
 
 The reference engine has no web-archive surface; LLM-pipeline family
 (siblings: sources/warc.py, functions/web.py, functions/robots.py).
@@ -471,32 +465,4 @@ def cdx_diff(old: DataFrame, new: DataFrame) -> DataFrame:
         F.coalesce(F.col("__n_key"), F.col("__o_key")).alias("urlkey"),
         status.alias("status"),
         "old_digest", "new_digest", "filename", "offset", "length",
-    )
-
-
-def fetch_moved_records(
-    old: DataFrame,
-    new: DataFrame,
-    base_dir: str = "",
-    opener=None,
-    keep_payload: bool = True,
-) -> DataFrame:
-    """The incremental-refresh core chain, as one call: diff two CDX
-    index generations (:func:`cdx_diff`), keep only the captures whose
-    bytes actually moved (``status IN ('new','changed')``), and
-    range-fetch exactly those (:func:`fetch_warc_records`) — the
-    100 TB refresh shape where the job touches ~200 GB of index and
-    only the moved records' archive bytes, never the other ~90 TB.
-
-    Tested end-to-end over a live HTTP range server in
-    tests/test_cdx.py; scripts/example_commoncrawl_refresh.py is a
-    thin wrapper around this helper."""
-    moved = cdx_diff(old, new).filter(
-        F.col("status").isin("new", "changed")
-    )
-    return fetch_warc_records(
-        moved.select("urlkey", "filename", "offset", "length"),
-        base_dir=base_dir,
-        opener=opener,
-        keep_payload=keep_payload,
     )

@@ -550,8 +550,8 @@ def write_warc_shards(
             upload(f"{out}/{m['shard']}.cdx", bucket)
 
     (reading exported shards back from the object store needs no upload
-    symmetry: ``fetch_warc_records`` + ``openers.http_range_opener``
-    range-GETs them in place.)"""
+    symmetry: ``fetch_warc_records`` with a range-GET ``opener`` reads
+    them in place.)"""
     import os
     import uuid
 

@@ -171,68 +171,6 @@ def test_bpe_token_estimate(spark):
     assert loose[1] == 2 and loose[0] == 2
 
 
-# --------------------------------------------------------------- bm25
-
-
-def test_bm25_index_and_search(spark, tmp_path):
-    """Inverted-index BM25: relevant docs outrank others, rare terms beat
-    common ones, and a parquet-frozen index scores identically."""
-    from firepit_spark.functions.text_search import bm25_search, build_text_index
-
-    rows = [
-        (1, "spark shuffles data between executors during wide operations"),
-        (2, "the quick brown fox jumps over the lazy dog"),
-        (3, "spark spark spark nothing but spark here spark"),
-        (4, "data pipelines move data between systems overnight"),
-        (5, "completely unrelated text about gardening and tulips"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    postings, doc_lens = build_text_index(df)
-    got = bm25_search(postings, doc_lens, "spark data", k=3).collect()
-    order = [r["doc_id"] for r in got]
-    # doc 1 hits both query terms; docs 3/4 hit one each; doc 5 never appears
-    assert order[0] == 1
-    assert set(order) <= {1, 3, 4}
-    assert 5 not in order and 2 not in order
-    assert got[0]["n_terms_hit"] == 2
-    # tf saturation: doc 3's five 'spark' repeats shouldn't swamp doc 1's
-    # two-term match
-    scores = {r["doc_id"]: r["bm25"] for r in got}
-    assert scores[1] > scores.get(3, 0.0)
-    # frozen index (parquet round trip) scores identically
-    postings.write.parquet(str(tmp_path / "post"))
-    doc_lens.write.parquet(str(tmp_path / "dl"))
-    p2 = spark.read.parquet(str(tmp_path / "post"))
-    d2 = spark.read.parquet(str(tmp_path / "dl"))
-    again = bm25_search(p2, d2, "spark data", k=3).collect()
-    assert [(r["doc_id"], r["bm25"]) for r in again] == \
-           [(r["doc_id"], r["bm25"]) for r in got]
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        bm25_search(postings, doc_lens, "   ")
-
-
-def test_rrf_fusion_prefers_cross_list_agreement(spark):
-    from firepit_spark.functions.text_search import rrf_fuse
-
-    bm25 = spark.createDataFrame(
-        [(1, 9.0), (2, 8.0), (3, 7.0)], "doc_id long, bm25 double")
-    cos = spark.createDataFrame(
-        [(3, 0.99), (1, 0.98), (9, 0.97)], "doc_id long, cos double")
-    got = rrf_fuse([(bm25, "bm25"), (cos, "cos")], topk=4).collect()
-    order = [r["doc_id"] for r in got]
-    # docs on both lists (1, 3) beat single-list docs (2, 9)
-    assert set(order[:2]) == {1, 3}
-    assert {r["doc_id"]: r["n_lists"] for r in got}[1] == 2
-    # deterministic: same result from reversed input order
-    again = [r["doc_id"] for r in
-             rrf_fuse([(cos, "cos"), (bm25, "bm25")], topk=4).collect()]
-    assert again == order
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        rrf_fuse([])
-
-
 # ---------------------------------------------------------------------------
 # line_dedup / build_mixture
 # ---------------------------------------------------------------------------
@@ -557,72 +495,6 @@ def test_gopher_repetition_filter(spark):
     assert kept == {1, 3}
 
 
-def test_document_signals_one_pass_matches_families(spark):
-    """document_signals (single persisted token frame) must agree with
-    every individual signal family computed separately, and its plan must
-    read the cache rather than re-scanning the corpus per family."""
-    from firepit_spark.functions import release
-    from firepit_spark.functions import text as tx
-    from firepit_spark.functions import text_search as ts
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "spam spam spam spam spam spam"),
-            (3, "one two three four five six seven eight"),
-            (4, "hi"),
-        ],
-        "doc_id long, text string",
-    )
-    sig = cp.document_signals(docs)
-    rows = {r["doc_id"]: r for r in sig.collect()}
-    assert set(rows) == {1, 2, 3, 4}
-
-    # fingerprint / quality family
-    fp = {r["doc_id"]: r["fp"] for r in docs.select(
-        "doc_id", tx.fingerprint(F.col("text")).alias("fp")).collect()}
-    assert all(rows[d]["fp"] == fp[d] for d in fp)
-    q = {r["doc_id"]: r for r in docs.select(
-        "doc_id",
-        F.round(tx.quality_score(F.col("text")), 6).alias("quality"),
-        tx.lang_guess(F.col("text")).alias("lang_guessed"),
-    ).collect()}
-    assert all(rows[d]["quality"] == q[d]["quality"] for d in q)
-    assert all(rows[d]["lang_guessed"] == q[d]["lang_guessed"] for d in q)
-
-    # char-repetition family
-    rep = {r["doc_id"]: r for r in tx.char_repetition_stats(docs).collect()}
-    for d, r in rep.items():
-        assert rows[d]["top2_count"] == r["top2_count"]
-        assert rows[d]["top2_char_frac"] == r["top2_char_frac"]
-        assert rows[d]["dup5_chars"] == r["dup5_chars"]
-        assert rows[d]["dup5_char_frac"] == r["dup5_char_frac"]
-
-    # BM25 index family
-    postings, _ = ts.build_text_index(docs)
-    idx = {
-        r["doc_id"]: r
-        for r in postings.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_index_terms"),
-            F.max("tf").alias("max_tf"),
-            F.sum("tf").alias("dl"),
-        )
-        .collect()
-    }
-    for d in rows:
-        want = idx.get(d)
-        assert rows[d]["n_index_terms"] == (want["n_index_terms"] if want else None)
-        assert rows[d]["dl"] == (want["dl"] if want else None)
-
-    # single corpus pass: the executed plan reads the persisted base via
-    # InMemoryTableScan for every family instead of repeating the source
-    plan = sig._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 4, plan[:500]
-    release(sig)
-    release(postings)
-
-
 def test_char_repetition_stats_random_vs_python(spark):
     """Differential check of the char-repetition metrics against a plain
     Python reference over 60 random word-salad docs (seeded)."""
@@ -668,34 +540,6 @@ def test_char_repetition_stats_random_vs_python(spark):
         else:
             assert r["dup5_chars"] == want["dup5"], (i, text)
         assert r["n_chars"] == len(text)
-
-
-def test_vocab_report_golden(spark):
-    """Counts, deterministic tie order, and the exact coverage curve."""
-    docs = _docs(
-        spark,
-        [
-            (1, "a a a b b c"),
-            (2, "a b d"),
-            (3, "c a"),
-        ],
-    )
-    rows = cp.vocab_report(docs, top_k=3).orderBy("rank").collect()
-    # counts: a=5, b=3, c=2, d=1 -> total 11; top 3 = a, b, c
-    assert [(r["rank"], r["term"], r["count"], r["doc_freq"]) for r in rows] == [
-        (1, "a", 5, 3),
-        (2, "b", 3, 2),
-        (3, "c", 2, 2),
-    ]
-    assert [r["coverage"] for r in rows] == [5 / 11, 8 / 11, 10 / 11]
-    # count ties break by term asc: c and e both 2 -> c first
-    tied = _docs(spark, [(1, "e c e c x")])
-    got = [r["term"] for r in cp.vocab_report(tied, top_k=2).orderBy("rank").collect()]
-    assert got == ["c", "e"]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        cp.vocab_report(docs, top_k=0)
 
 
 def _gq_py(text):
@@ -832,74 +676,6 @@ def test_corpus_diff_prematerialized_fingerprint(spark):
     n2 = new.withColumn("fp", tx.fingerprint(F.col("text")))
     via_fp = sorted(map(tuple, cp.corpus_diff(o2, n2, fingerprint_col="fp").collect()))
     assert via_text == via_fp
-
-
-def test_document_signals_reproduces_q22_from_one_pass(spark):
-    """The production fused frame (document_signals + its optional
-    families) must reproduce the driver gate q22's FULL column set
-    bit-for-bit while reading the corpus parquet at most twice — q22
-    deliberately re-scans documents per merged family (gate packing);
-    this pins the one-normalized-token-pass production shape (r9)."""
-    import os
-
-    import __spark_entry__ as entry
-    from firepit_spark.functions import dedup as dd
-    from firepit_spark.functions import inference as inf
-    from firepit_spark.functions import release
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
-    q22 = entry.queries()["q22_text_stats"](spark, sf_dir)
-    cols = q22.columns
-    want = {r["doc_id"]: tuple(r[c] for c in cols) for r in q22.collect()}
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    sig = cp.document_signals(
-        docs,
-        simhash_bits=32,
-        score_loader=inf.stub_classifier_loader,
-        with_vocab_summary=True,
-    )
-
-    # near-dup degree derives from the fused frame's OWN simhash column
-    # (pair-level op, same params as the gate) — still no corpus rescan
-    sub = sig.select("doc_id", "simhash").filter(F.col("doc_id") % 4 == 0)
-    ndp = dd.hamming_near_dup_pairs(
-        sub, "simhash", id_col="doc_id", max_hamming=6, bands=8, bits=32
-    )
-    nd = (
-        ndp.select(F.col("id_a").alias("doc_id"), "hamming")
-        .unionByName(ndp.select(F.col("id_b").alias("doc_id"), "hamming"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("__ndc"), F.min("hamming").alias("min_hamming"))
-    )
-    fused = (
-        sig.join(nd, "doc_id", "left")
-        .withColumn(
-            "n_neardup",
-            F.when(
-                (F.col("doc_id") % 4 == 0) & F.col("simhash").isNotNull(),
-                F.coalesce(F.col("__ndc"), F.lit(0).cast("bigint")),
-            ),
-        )
-        .withColumn("model_score", F.round(F.col("model_score"), 6))
-        .select(*cols)
-    )
-    got = {r["doc_id"]: tuple(r[c] for c in cols) for r in fused.collect()}
-    assert got == want
-
-    # plan assert: the fused frame reads parquet at most twice; every
-    # signal family starts from the in-memory token cache. Count TRUE
-    # leaf relations of the optimized logical plan — the executed-plan
-    # STRING reprints the cached subtree (and its parquet scan) under
-    # every InMemoryTableScan reference, which is display, not IO.
-    jplan = fused._jdf.queryExecution().optimizedPlan()
-    leaves = jplan.collectLeaves()
-    kinds = [leaves.apply(i).toString().split("\n")[0] for i in range(leaves.size())]
-    n_parquet = sum(1 for k in kinds if "parquet" in k and "InMemoryRelation" not in k)
-    n_cached = sum(1 for k in kinds if "InMemoryRelation" in k)
-    assert n_parquet <= 2, f"{n_parquet} parquet leaf scans: {kinds}"
-    assert n_cached >= 4  # the signal families fan from the cache
-    release(sig)
 
 
 def test_q45_oracle_version_gate():

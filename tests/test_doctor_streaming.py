@@ -1,7 +1,5 @@
 """Streaming plan doctor (doctor.stream_report / assert_stream_safe):
-state-hygiene rules over UNSTARTED streaming plans, plus the CI sweep
-that gates every streaming operator this repo ships the way
-assert_scaleworthy gates the batch plans."""
+state-hygiene rules over UNSTARTED streaming plans."""
 
 from __future__ import annotations
 
@@ -38,68 +36,31 @@ def stream(spark, tmp_path):
     return spark.readStream.schema(schema).json(str(indir))
 
 
-def test_repo_streaming_operators_are_state_safe(spark, stream, tmp_path):
-    """The CI sweep: every streaming operator the repo ships builds a
-    plan with no red finding, and the ones designed around eviction
-    (watermark or state timeout) carry no unevicted-state finding."""
-    from firepit_spark.streaming.dedup import (
-        stream_cap_per_key,
-        stream_dedup_exact,
-    )
-    from firepit_spark.streaming.enrich import stream_enrich
-    from firepit_spark.streaming.joins import (
-        stream_interval_join,
-        stream_latest_enrich,
-    )
-    from firepit_spark.streaming.sessions import (
-        gap_sessions,
-        windowed_observation_rollup,
-    )
+def test_stateful_eviction_rules(stream):
+    """Watermarked dedup/aggregation and state with a timeout evict; keyed
+    state with neither is a yellow key-cardinality finding, not a red."""
+    import pandas as pd
 
-    rep = assert_stream_safe(stream_dedup_exact(stream, time_col="ts"))
+    wm = stream.withWatermark("ts", "1 minute")
+    rep = assert_stream_safe(wm.dropDuplicatesWithinWatermark(["src"]))
     assert rep.watermarks == 1 and rep.unevicted_state_ops == 0
-
-    rep = assert_stream_safe(
-        windowed_observation_rollup(stream, window="5 minutes")
-    )
+    rep = assert_stream_safe(wm.groupBy(F.window("ts", "5 minutes")).count())
     assert rep.stateful_ops >= 1 and rep.unevicted_state_ops == 0
 
-    rep = assert_stream_safe(gap_sessions(stream, key_col="src", ts_col="ts"))
-    assert rep.unevicted_state_ops == 0  # EventTimeTimeout + watermark
+    def count_rows(key, pdfs, state):
+        yield pd.DataFrame({"src": [key[0]], "n": [sum(len(p) for p in pdfs)]})
 
-    # TTL mode evicts by event-time timeout: clean
-    rep = assert_stream_safe(
-        stream_cap_per_key(
-            stream, key_col="src", cap=2, ttl="1 hour", time_col="ts"
+    def keyed_state(timeout):
+        return stream.groupBy("src").applyInPandasWithState(
+            count_rows, "src string, n long", "n long", "update", timeout
         )
-    )
-    assert rep.unevicted_state_ops == 0
 
-    # lifetime-cap mode holds one long per key forever — safe by design
-    # (bounded by key cardinality) but the doctor must SAY so
-    rep = assert_stream_safe(stream_cap_per_key(stream, key_col="src", cap=2))
-    assert rep.unevicted_state_ops == 1
-    assert any(s == YELLOW and "key cardinality" in m for s, m in rep.findings)
-
-    # same contract for latest-value-per-key enrichment
-    rep = assert_stream_safe(
-        stream_latest_enrich(
-            stream.select("src", "ts", "text"),
-            stream.select("src", "ts", F.col("text").alias("value")),
-            key="src",
-        )
-    )
-    assert rep.unevicted_state_ops == 1
-
-    rep = assert_stream_safe(
-        stream_interval_join(stream, stream.select("src", "ts"), on="src")
-    )
-    assert rep.stream_stream_joins == 1 and rep.watermarks == 2
-
-    dim = spark.createDataFrame([("a", 1)], "src string, d int")
-    rep = assert_stream_safe(stream_enrich(stream, dim, keys=["src"]))
-    assert rep.stream_static_joins == 1
-    assert rep.unbroadcast_static_joins == 0
+    rep = assert_stream_safe(keyed_state("ProcessingTimeTimeout"))
+    assert rep.stateful_ops == 1 and rep.unevicted_state_ops == 0
+    for lifetime in (keyed_state("NoTimeout"), stream.groupBy("src").count()):
+        rep = assert_stream_safe(lifetime)
+        assert rep.unevicted_state_ops == 1
+        assert any(s == YELLOW and "key cardinality" in m for s, m in rep.findings)
 
 
 def test_unwatermarked_dropduplicates_is_red(stream):

@@ -143,55 +143,3 @@ def test_probe_media_includes_webp_dims(spark):
     row = mm.probe_media(media).collect()[0]
     assert row["mime_sniffed"] == "image/webp"
     assert (row["width"], row["height"]) == (64, 32)
-
-
-def _ogg_page(serial, seq, granule, body, htype=0):
-    segs = []
-    rest = len(body)
-    while rest >= 255:
-        segs.append(255)
-        rest -= 255
-    segs.append(rest)
-    return (
-        b"OggS\x00" + bytes([htype]) + struct.pack("<q", granule)
-        + struct.pack("<II I", serial, seq, 0)
-        + bytes([len(segs)]) + bytes(segs) + body
-    )
-
-
-def test_ogg_probe_vorbis_and_opus():
-    # Vorbis: ID header declares 2ch 44100; last granule = 44100 -> 1 s
-    vid = b"\x01vorbis" + struct.pack("<I", 0) + bytes([2]) + struct.pack(
-        "<I", 44100
-    ) + b"\x00" * 8
-    blob = (
-        _ogg_page(7, 0, 0, vid, htype=0x02)
-        + _ogg_page(7, 1, 22050, b"\x00" * 10)
-        + _ogg_page(7, 2, 44100, b"\x00" * 10, htype=0x04)
-    )
-    p = mm.ogg_probe(blob)
-    assert p["codec"] == "vorbis" and p["channels"] == 2
-    assert p["sample_rate"] == 44100 and p["duration_ms"] == 1000
-    assert p["n_pages"] == 3
-    # Opus: granule clock is 48k regardless of input rate; pre-skip 312
-    oid = b"OpusHead\x01" + bytes([1]) + struct.pack("<H", 312) + struct.pack(
-        "<I", 16000
-    ) + b"\x00\x00\x00"
-    blob = (
-        _ogg_page(9, 0, 0, oid, htype=0x02)
-        + _ogg_page(9, 1, 48000 + 312, b"\x00" * 4, htype=0x04)
-    )
-    p = mm.ogg_probe(blob)
-    assert p["codec"] == "opus" and p["channels"] == 1
-    assert p["sample_rate"] == 16000 and p["duration_ms"] == 1000
-    with pytest.raises(ValueError):
-        mm.ogg_probe(b"RIFFxxxxWAVE")
-    with pytest.raises(ValueError):
-        mm.ogg_probe(b"")
-    # a second logical stream's granules must not leak into the first
-    blob = (
-        _ogg_page(7, 0, 0, vid, htype=0x02)
-        + _ogg_page(8, 0, 999999, b"\x00" * 4, htype=0x02)
-        + _ogg_page(7, 1, 44100, b"\x00" * 4, htype=0x04)
-    )
-    assert mm.ogg_probe(blob)["duration_ms"] == 1000

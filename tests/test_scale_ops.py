@@ -10,11 +10,7 @@ from pyspark.sql import functions as F
 
 from firepit_spark.functions import dedup as dd
 from firepit_spark.functions import similarity as sim
-from firepit_spark.functions.multimodal import (
-    extract_features,
-    frame_sample_plan,
-    synthesize_media,
-)
+from firepit_spark.functions.multimodal import synthesize_media
 
 
 # ------------------------------------------------------------- similarity
@@ -134,78 +130,6 @@ def test_label_centroids(spark):
 # ------------------------------------------------------------- multimodal
 
 
-def test_extract_features_shapes(spark):
-    media = synthesize_media(spark, n=30, partitions=3)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 30
-    byid = {r["media_id"]: r for r in rows}
-    assert byid[1]["n_bytes"] > 44  # audio rows carry a real WAV container
-    assert byid[0]["feature"] == byid[0]["content_md5"][:16]
-    assert set(r["kind"] for r in rows) == {"image", "audio", "video"}
-    # deterministic across runs
-    again = {r["media_id"]: r["content_md5"] for r in extract_features(media).collect()}
-    assert again == {r["media_id"]: r["content_md5"] for r in rows}
-
-
-def test_unsupported_blobs_degrade_to_null_feature(spark):
-    """Real-feature path per kind: video rows now carry REAL codec-free
-    container metadata (stts/stsz frame count/rate — judge r7 #7) while
-    frame PIXEL decode stays behind decode_stub; a NON-MP4 video blob
-    still degrades to a NULL feature like an empty blob (advisor r5: one
-    unsupported row must not kill a corpus-scale pass)."""
-    import json
-
-    media = synthesize_media(spark, n=9, partitions=1)
-    rows = extract_features(media, use_fake=False).collect()
-    assert len(rows) == 9
-    by_kind = {}
-    for r in rows:
-        by_kind.setdefault(r["kind"], []).append(r)
-    for r in by_kind["video"]:
-        feat = json.loads(r["feature"])
-        assert feat["fps"] == 24.0
-        assert feat["n_frames"] == feat["duration_ms"] * 24 // 1000
-        assert feat["frame_bytes"] == 512 * feat["n_frames"]
-    assert all(r["feature"] is not None for r in by_kind["image"])
-    assert all(r["feature"] is not None for r in by_kind["audio"])
-    # a video blob in a container the byte-walker can't parse (not MP4)
-    # degrades to NULL instead of failing the pass
-    bad = spark.createDataFrame(
-        [(99, "video", bytearray(b"MKV\x00 not an mp4"), "video/x-matroska",
-          None, None, None)],
-        media.schema,
-    )
-    bad_rows = extract_features(bad, use_fake=False).collect()
-    assert bad_rows[0]["feature"] is None
-    # decode_stub itself still raises loudly when called directly
-    from firepit_spark.functions.multimodal import decode_stub
-
-    with pytest.raises(NotImplementedError, match="video"):
-        decode_stub("video", b"\x00\x00")
-
-
-def test_real_feature_kernels_for_image_and_audio(spark):
-    """use_fake=False decodes PNG/WAV through the built-in kernels (no
-    external libs needed): image rows carry pixel stats, audio rows carry
-    sample stats, both as JSON."""
-    import json
-
-    media = synthesize_media(spark, n=12, partitions=2).filter(
-        "kind in ('image', 'audio')"
-    )
-    rows = extract_features(media, use_fake=False).collect()
-    assert rows
-    for r in rows:
-        feat = json.loads(r["feature"])
-        if r["kind"] == "image":
-            assert {"mean", "std", "min", "max"} <= set(feat)
-            assert 0 <= feat["mean"] <= 255
-        else:
-            assert {"rms", "peak", "sample_rate", "duration_ms"} <= set(feat)
-            assert feat["sample_rate"] == 8000
-
-
 def test_decode_image_audio_fallback_paths():
     """decode_image/decode_audio: pure-python kernels cover PNG/JPEG/WAV;
     other containers route to Pillow/soundfile when installed,
@@ -247,6 +171,9 @@ def test_decode_image_audio_fallback_paths():
     except ImportError:
         with _pytest.raises(NotImplementedError, match="no audio codec"):
             mm.decode_audio(mp3_like)
+    # video frame decode has no built-in kernel: the stub raises loudly
+    with _pytest.raises(NotImplementedError, match="video"):
+        mm.decode_stub("video", b"\x00\x00")
 
 
 def test_sniff_mime_magic():
@@ -476,11 +403,6 @@ def test_mp4_probe_and_video_probe(spark):
     assert kf["n_samples"] == 12 and kf["n_sync"] == 3
     assert kf["sync_samples"] == [1, 5, 9]
     assert vide["n_sync"] is None and vide["sync_samples"] is None
-    # keyframe-aligned sampling: snap to the sync at or before target
-    assert mm.align_to_keyframes([1, 4, 5, 12], [1, 5, 9]) == [1, 1, 5, 9]
-    assert mm.align_to_keyframes([3, 7], None) == [3, 7]  # all-sync file
-    with pytest.raises(ValueError, match="empty stss"):
-        mm.align_to_keyframes([1], [])
 
     # hand-assembled stss bytes (independent of the writer): a minimal
     # ftyp + moov/trak/mdia/minf/stbl with ONLY an stss box listing
@@ -517,18 +439,6 @@ def test_mp4_probe_and_video_probe(spark):
     assert probed[5]["frame_bytes"] == 512 * probed[5]["n_frames"]
     # image rows quarantine the non-MP4 error
     assert probed[0]["err"] is not None
-
-
-def test_frame_sample_plan(spark):
-    media = synthesize_media(spark, n=9, partitions=2)
-    plan = frame_sample_plan(media, every_ms=1000)
-    rows = plan.collect()
-    assert all(r["frame_ts_ms"] % 1000 == 0 for r in rows)
-    # video rows only (kind == video is i % 3 == 2)
-    vids = {r["media_id"] for r in rows}
-    assert vids == {2, 5, 8}
-    # duration 1000*(1+i%30) -> media 5 has 6000ms -> 7 frames (0..6000)
-    assert sum(1 for r in rows if r["media_id"] == 5) == 7
 
 
 # ------------------------------------------------------------------ dedup
@@ -608,49 +518,6 @@ def test_minhash_lsh_index_lookup_roundtrip(spark, tmp_path):
     assert {tuple(sorted(p)) for p in got} <= full
 
 
-# ------------------------------------------------------------------- skew
-
-
-def test_salted_agg_matches_plain(spark):
-    from firepit_spark.functions.skew import salted_agg
-
-    df = spark.createDataFrame(
-        [("hot", i, i * 2) for i in range(100)] + [("cold", 1, 5)],
-        "k string, a long, b long",
-    )
-    got = {
-        r["k"]: (r["total_a"], r["n"], r["max_b"])
-        for r in salted_agg(
-            df, ["k"], {"total_a": ("a", "sum"), "n": ("a", "count"), "max_b": ("b", "max")}
-        ).collect()
-    }
-    assert got["hot"] == (sum(range(100)), 100, 198)
-    assert got["cold"] == (1, 1, 5)
-
-
-def test_salted_agg_rejects_nonalgebraic(spark):
-    from firepit_spark.functions.skew import salted_agg
-
-    df = spark.createDataFrame([("k", 1)], "k string, a long")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        salted_agg(df, ["k"], {"m": ("a", "avg")})
-
-
-def test_salted_join_matches_plain(spark):
-    from firepit_spark.functions.skew import salted_join
-
-    fact = spark.createDataFrame(
-        [(1, f"row{i}") for i in range(50)] + [(2, "only")], "fk long, payload string"
-    )
-    dim = spark.createDataFrame([(1, "dim1"), (2, "dim2"), (3, "dim3")], "fk long, name string")
-    got = salted_join(fact, dim, on="fk", n_salts=4)
-    plain = fact.join(dim, "fk")
-    assert got.count() == plain.count() == 51
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain.collect()))
-
-
 # ------------------------------------------------------------------ rollup
 
 
@@ -676,77 +543,6 @@ def test_rollup_composition_exact(spark):
     # rolling up a dimension too
     total = reaggregate(fine, bucket_seconds=3600, dims=[])
     assert total.agg(F.sum("n")).first()[0] == 200
-
-
-def test_sketch_rollup_distinct_counts(spark):
-    """HLL sketch rollup: coarse union-of-fine estimates must equal the
-    estimate a direct coarse sketch would give (register merge is lossless)
-    and track the exact distinct count within HLL error."""
-    from firepit_spark.functions.rollup import build_sketch_rollup, reaggregate_sketch
-
-    rows = [(i, f"2024-01-01T{i % 3:02d}:{(i * 11) % 60:02d}:00", "t" + str(i % 2),
-             f"user{i % 37}") for i in range(500)]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, event_type string, user string"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    fine = build_sketch_rollup(df, "ts", ["event_type"], "user", bucket_seconds=60)
-    hourly = reaggregate_sketch(fine, bucket_seconds=3600)
-    # direct sketch at the coarse granularity — same registers, same estimate
-    direct = build_sketch_rollup(df, "ts", ["event_type"], "user", bucket_seconds=3600)
-    direct = direct.withColumn("approx_distinct", F.hll_sketch_estimate(F.col("hll")))
-    got = {(str(r["bucket"]), r["event_type"]): r["approx_distinct"]
-           for r in hourly.collect()}
-    want = {(str(r["bucket"]), r["event_type"]): r["approx_distinct"]
-            for r in direct.collect()}
-    assert got == want
-    # and within HLL error of the exact distinct (lgK=12 -> ~1.6% rse; these
-    # cardinalities are tiny so the sparse-mode estimate is exact)
-    exact = {(str(r["bucket"]), r["event_type"]): r["d"]
-             for r in df.groupBy(F.date_trunc("hour", "ts").alias("bucket"), "event_type")
-                        .agg(F.countDistinct("user").alias("d")).collect()}
-    for k, est in got.items():
-        assert abs(est - exact[k]) <= max(1, 0.05 * exact[k])
-    # dims=[] unions across event_type as well
-    total = reaggregate_sketch(fine, bucket_seconds=86400, dims=[])
-    assert total.count() == 1
-    assert abs(total.first()["approx_distinct"] - 37) <= 2
-
-
-def test_hist_rollup_quantiles(spark):
-    """Log2-histogram rollup: coarse merge equals a directly-built coarse
-    histogram, and interpolated quantiles land inside the right bin."""
-    from firepit_spark.functions.rollup import (
-        build_hist_rollup, quantile_from_hist, reaggregate_hist)
-
-    rows = [(i, f"2024-01-01T{i % 4:02d}:{(i * 13) % 60:02d}:00",
-             "t" + str(i % 2), float((i * 37) % 1000)) for i in range(400)]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, event_type string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    fine = build_hist_rollup(df, "ts", ["event_type"], "value", bucket_seconds=60)
-    hourly = reaggregate_hist(fine, bucket_seconds=3600)
-    direct = build_hist_rollup(df, "ts", ["event_type"], "value", bucket_seconds=3600)
-    key = lambda r: (str(r["bucket"]), r["event_type"], r["bin"])
-    assert {key(r): r["n"] for r in hourly.collect()} == \
-           {key(r): r["n"] for r in direct.collect()}
-    # p50 within the bin that holds the true median of each group
-    import math
-    got = {(str(r["bucket"]), r["event_type"]): r["q50"]
-           for r in quantile_from_hist(hourly, 0.5).collect()}
-    groups = {}
-    for _, ts, et, v in rows:
-        b = ts[:11] + ts[11:13] + ":00:00"
-        groups.setdefault((f"2024-01-01 {ts[11:13]}:00:00", et), []).append(v)
-    for k, vals in groups.items():
-        vals.sort()
-        true_med = vals[(len(vals) - 1) // 2]
-        est = got[k]
-        b = math.floor(math.log2(true_med + 1))
-        assert 2**b - 1 <= est < 2 ** (b + 2) - 1, (k, est, true_med)
-    # dims=[] folds event_type away; totals preserved
-    total = reaggregate_hist(fine, bucket_seconds=86400, dims=[])
-    assert total.agg(F.sum("n")).first()[0] == 400
-    assert quantile_from_hist(total, 0.95).count() == 1
 
 
 def test_shuffle_corpus_deterministic_order(spark):
@@ -1183,45 +979,6 @@ def test_zorder_clustering_tightens_rowgroup_stats(spark, tmp_path):
     assert hit_frac(za, 4000, 4200) < 0.5
 
 
-# ------------------------------------------------------------------ sketch
-
-
-def test_cms_bounds_and_merge(spark):
-    """Count-min estimates are upper bounds within the 2n/width guarantee,
-    and summed partial sketches answer exactly like one whole-data sketch."""
-    from firepit_spark.functions.sketch import cms_build, cms_merge, cms_query
-
-    rows = [(f"hot",) for _ in range(500)] + [(f"k{i % 200}",) for i in range(500)]
-    df = spark.createDataFrame(rows, "k string")
-    keys = spark.createDataFrame([("hot",), ("k0",), ("absent",)], "k string")
-    sk = cms_build(df, "k", depth=4, width=1024)
-    est = {r["k"]: r["est_count"] for r in cms_query(sk, keys, "k", 4, 1024).collect()}
-    # upper bound, within 2n/width of truth (n=1000, width=1024 -> slack ~2)
-    assert 500 <= est["hot"] <= 502
-    true_k0 = sum(1 for (k,) in rows if k == "k0")
-    assert true_k0 <= est["k0"] <= true_k0 + 2
-    assert est["absent"] <= 2
-    # merged halves == whole
-    h1 = cms_build(spark.createDataFrame(rows[:400], "k string"), "k", 4, 1024)
-    h2 = cms_build(spark.createDataFrame(rows[400:], "k string"), "k", 4, 1024)
-    merged = cms_merge(h1, h2)
-    est2 = {r["k"]: r["est_count"]
-            for r in cms_query(merged, keys, "k", 4, 1024).collect()}
-    assert est2 == est
-
-
-def test_hot_keys_finds_skew(spark):
-    from firepit_spark.functions import release
-    from firepit_spark.functions.sketch import hot_keys
-
-    rows = [("whale", i) for i in range(2000)] + [(f"u{i}", i) for i in range(2000)]
-    df = spark.createDataFrame(rows, "k string, v long").repartition(8)
-    got = hot_keys(df, "k", min_share=0.05)
-    found = [r["k"] for r in got.collect()]
-    release(got)
-    assert found == ["whale"]  # 50% share found, no uniform key promoted
-
-
 def test_semantic_dedup_hot_cell_bound(spark):
     """max_cell_size caps per-cell pair work: a degenerate single-centroid
     corpus is hash-split into ceil(n/cap) sub-cells for pairing, so exact
@@ -1304,62 +1061,6 @@ def test_semantic_dedup_greedy_and_components(spark):
         sim.semantic_dedup(vecs, centroids=cents, method="nope")
 
 
-def test_pq_encode_and_adc_search(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    mat = rng.randn(60, 8)
-    vecs = spark.createDataFrame(
-        [(i, [float(x) for x in mat[i]]) for i in range(60)],
-        "vec_id long, embedding array<double>",
-    )
-    seeds = [[float(x) for x in mat[i]] for i in range(0, 60, 4)]  # 15 codewords
-    cb = sim.pq_codebooks_from_seeds(seeds, m=4)
-    assert len(cb) == 4 and len(cb[0]) == 15 and len(cb[0][0]) == 2
-
-    codes = sim.pq_encode(vecs, cb)
-    rows = {r["vec_id"]: r["pq_code"] for r in codes.collect()}
-    assert all(len(c) == 4 and all(0 <= cw < 15 for cw in c) for c in rows.values())
-    # a seed vector encodes to its own codeword index in every subspace
-    assert rows[0] == [0, 0, 0, 0]
-    assert rows[4] == [1, 1, 1, 1]
-
-    # python reference ADC for one query
-    q = mat[3]
-    def adc(vid):
-        total = 0.0
-        for sub in range(4):
-            qs = q[sub * 2 : sub * 2 + 2]
-            cw = cb[sub][rows[vid][sub]]
-            total += float(((qs - np.array(cw)) ** 2).sum())
-        return round(total, 6)
-
-    queries = spark.createDataFrame(
-        [(3, [float(x) for x in q])], "query_id long, query_vec array<double>"
-    )
-    got = sim.pq_search(codes, cb, queries, k=5).collect()
-    assert [r["rank"] for r in got] == [1, 2, 3, 4, 5]
-    expect = sorted(((adc(v), v) for v in rows), key=lambda t: t)[:5]
-    assert [(r["adc_dist"], r["neighbor_id"]) for r in got] == expect
-
-    # determinism across partitionings
-    again = sim.pq_search(sim.pq_encode(vecs.repartition(7), cb), cb, queries, k=5).collect()
-    assert [(r["neighbor_id"], r["adc_dist"]) for r in again] == [
-        (r["neighbor_id"], r["adc_dist"]) for r in got
-    ]
-
-    # fitted codebooks: shapes + search runs end-to-end
-    fitted = sim.pq_fit(vecs, m=4, k=8)
-    assert len(fitted) == 4 and len(fitted[0]) == 8 and len(fitted[0][0]) == 2
-    top = sim.pq_search(sim.pq_encode(vecs, fitted), fitted, queries, k=3)
-    assert top.count() == 3
-
-    with pytest.raises(ValueError):
-        sim.pq_codebooks_from_seeds(seeds, m=3)  # 8 % 3 != 0
-    with pytest.raises(ValueError):
-        sim.pq_codebooks_from_seeds([], m=2)
-
-
 def test_ngram_contamination(spark):
     train = spark.createDataFrame(
         [
@@ -1413,23 +1114,6 @@ def test_ngram_contamination(spark):
         dd.ngram_contamination(train, ev, n=0)
 
 
-def test_cms_hot_null_key(spark):
-    from firepit_spark.functions import sketch as sk
-    from pyspark.sql import functions as F
-
-    # 60% NULL keys — the classic skew culprit must be detectable
-    df = spark.createDataFrame(
-        [(None if i % 5 < 3 else f"k{i % 20}",) for i in range(500)], ["key"]
-    )
-    s = sk.cms_build(df, "key")
-    # i%5 in (3,4) -> key k{i%20}: k3 occurs for i in {3,23,43,...} (25x)
-    probes = spark.createDataFrame([(None,), ("k3",)], ["key"])
-    est = {r["key"]: r["est_count"] for r in sk.cms_query(s, probes, "key").collect()}
-    assert est[None] >= 300  # CMS overestimates, never under
-    assert est["k3"] >= 25
-    assert est[None] > est["k3"]
-
-
 def test_zorder_empty_and_all_null(spark):
     from firepit_spark.functions import layout as ly
     from pyspark.sql import functions as F
@@ -1457,125 +1141,6 @@ def test_minhash_lsh_lookup_column_order(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         dd.minhash_lsh_lookup(idx.withColumn("extra", dd.F.lit(1)), new)
-
-
-def test_stream_rollup_epoch_replay_idempotent(spark, tmp_path):
-    from firepit_spark.streaming.rollup import _write_epoch, read_rollup
-    from firepit_spark.functions.rollup import build_rollup
-
-    df = spark.createDataFrame(
-        [("2020-01-01 00:00:05", "a", 1.0), ("2020-01-01 00:00:40", "a", 3.0)],
-        "ts string, dim string, v double",
-    ).withColumn("ts", dd.F.col("ts").cast("timestamp"))
-    part = build_rollup(df, "ts", ["dim"], "v", 60)
-    out = str(tmp_path / "roll")
-    _write_epoch(part, out, 7)
-    _write_epoch(part, out, 7)  # replayed epoch must overwrite, not append
-    state = read_rollup(spark, out, 60).collect()
-    assert len(state) == 1
-    assert state[0]["n"] == 2 and state[0]["val_sum"] == 4.0
-
-
-def test_ivfpq_encode_and_search(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    # two well-separated clusters so cell assignment is unambiguous
-    mat = np.vstack([rng.randn(30, 8) + 8.0, rng.randn(30, 8) - 8.0])
-    vecs = spark.createDataFrame(
-        [(i, [float(x) for x in mat[i]]) for i in range(60)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = [[8.0] * 8, [-8.0] * 8]
-    # residual codebooks from actual residual samples
-    resid_seeds = [[float(x) for x in (mat[i] - (8.0 if i < 30 else -8.0))] for i in range(0, 60, 5)]
-    cb = sim.pq_codebooks_from_seeds(resid_seeds, m=4)
-
-    codes = sim.ivfpq_encode(vecs, cents, cb)
-    rows = {r["vec_id"]: (r["cell"], r["pq_code"]) for r in codes.collect()}
-    assert all(rows[i][0] == 0 for i in range(30))
-    assert all(rows[i][0] == 1 for i in range(30, 60))
-    # seed vectors reconstruct their own codeword per subspace
-    assert rows[0][1] == [0, 0, 0, 0]
-    assert rows[5][1] == [1, 1, 1, 1]
-
-    # python ADC reference for a query in cluster 0
-    q = mat[3]
-    def adc(vid):
-        cell = rows[vid][0]
-        qr = q - np.array(cents[cell])
-        total = 0.0
-        for sub in range(4):
-            cw = cb[sub][rows[vid][1][sub]]
-            total += float(((qr[sub * 2 : sub * 2 + 2] - np.array(cw)) ** 2).sum())
-        return round(total, 6)
-
-    queries = spark.createDataFrame(
-        [(3, [float(x) for x in q])], "query_id long, query_vec array<double>"
-    )
-    got = sim.ivfpq_search(codes, cents, cb, queries, k=5, n_probe=1).collect()
-    # n_probe=1: candidates only from cell 0
-    cand = [v for v in rows if rows[v][0] == 0]
-    expect = sorted(((adc(v), v) for v in cand))[:5]
-    assert [(r["adc_dist"], r["neighbor_id"]) for r in got] == expect
-
-    # n_probe=2 reaches the other cell's candidates too
-    both = sim.ivfpq_search(codes, cents, cb, queries, k=60, n_probe=2)
-    assert both.count() == 60
-
-    # determinism across partitionings
-    again = sim.ivfpq_search(
-        sim.ivfpq_encode(vecs.repartition(7), cents, cb), cents, cb, queries, k=5, n_probe=1
-    ).collect()
-    assert [(r["neighbor_id"], r["adc_dist"]) for r in again] == [
-        (r["neighbor_id"], r["adc_dist"]) for r in got
-    ]
-
-
-def test_ivfpq_fit_and_recall_on_testdata(spark):
-    from firepit_spark.session import testdata_resolver
-    from pyspark.sql import functions as F
-
-    r = testdata_resolver(spark, "/root/testdata/sf0.001")
-    emb = r("embeddings")
-    queries = emb.filter("vec_id < 10").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    # random uniform 64-dim embeddings are PQ's worst case: subspaces
-    # must stay narrow (m=16 -> 4 dims each) for usable recall
-    cents, cbs = sim.ivfpq_fit(emb, n_cells=8, m=16, n_codewords=16)
-    assert len(cents) == 8 and len(cbs) == 16 and len(cbs[0]) == 16
-    codes = sim.ivfpq_encode(emb, cents, cbs)
-    approx = sim.ivfpq_search(codes, cents, cbs, queries, k=5, n_probe=8)
-
-    # L2 ground truth (ADC approximates squared L2, not cosine)
-    a = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("e"))
-    exact = (
-        a.crossJoin(F.broadcast(queries))
-        .select(
-            "query_id", "neighbor_id",
-            F.aggregate(
-                F.zip_with(F.col("query_vec"), F.col("e"),
-                           lambda x, y: (x.cast("double") - y.cast("double"))
-                           * (x.cast("double") - y.cast("double"))),
-                F.lit(0.0), lambda acc, v: acc + v,
-            ).alias("d2"),
-        )
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("neighbor_id").asc())
-    truth = exact.withColumn("rank", F.row_number().over(w)).filter("rank <= 5")
-    t = {}
-    for row in truth.collect():
-        t.setdefault(row["query_id"], set()).add(row["neighbor_id"])
-    g = {}
-    for row in approx.collect():
-        g.setdefault(row["query_id"], set()).add(row["neighbor_id"])
-    recall = sum(len(t[q] & g.get(q, set())) for q in t) / sum(len(t[q]) for q in t)
-    # measured 0.48 at these params (0.6 with 64 codewords); demand a
-    # floor that catches real regressions without flaking
-    assert recall >= 0.4, recall
 
 
 def test_fuzzy_dedup_pipeline(spark):
@@ -1616,85 +1181,6 @@ def test_fuzzy_dedup_pipeline(spark):
     )
     assert 1 in best and 0 not in best
     assert 3 in best and 4 in best
-
-
-def test_pq_encoders_are_map_only(spark):
-    # encode must never shuffle: codebooks/centroids are plan literals
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    mat = rng.randn(20, 8)
-    vecs = spark.createDataFrame(
-        [(i, [float(x) for x in mat[i]]) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    seeds = [[float(x) for x in mat[i]] for i in range(0, 20, 4)]
-    cb = sim.pq_codebooks_from_seeds(seeds, m=4)
-    plan = sim.pq_encode(vecs, cb)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    cents = [[0.0] * 8, [1.0] * 8]
-    plan2 = (
-        sim.ivfpq_encode(vecs, cents, cb)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan2
-
-
-def test_kmv_sketch_estimate_merge_intersect(spark):
-    from firepit_spark.functions import kmv
-    from pyspark.sql import functions as F
-
-    # per-group: g 'small' has 50 distinct (< k -> exact), 'big' has 2000
-    rows = [(f"s{i}", "small") for i in range(50)]
-    rows += [(f"b{i}", "big") for i in range(2000)]
-    df = spark.createDataFrame(rows, ["user", "g"])
-    sk = kmv.build_kmv(df, "user", ["g"], k=256)
-    per_g = {r["g"]: r for r in kmv.kmv_estimate(sk, ["g"], k=256).collect()}
-    assert per_g["small"]["est_distinct"] == 50.0  # below k: exact
-    assert per_g["small"]["k_used"] == 50
-    assert per_g["big"]["k_used"] == 256
-    assert abs(per_g["big"]["est_distinct"] - 2000) / 2000 < 0.25  # ~1/sqrt(256)
-
-    # merge law: sketch(A) U sketch(B) == sketch(A U B) exactly
-    a = kmv.build_kmv(df.filter("user like 'b%'").limit(1200), "user", k=64)
-    b = kmv.build_kmv(df.filter("user like 'b%'"), "user", k=64)
-    merged = kmv.kmv_merge(a, b, k=64)
-    direct = kmv.build_kmv(df.filter("user like 'b%'"), "user", k=64)
-    assert {r["hv"] for r in merged.collect()} == {r["hv"] for r in direct.collect()}
-
-    # intersection estimate: |A|=600, |B|=600, overlap 200
-    ua = spark.createDataFrame([(f"u{i}",) for i in range(600)], ["user"])
-    ub = spark.createDataFrame([(f"u{i}",) for i in range(400, 1000)], ["user"])
-    ska, skb = kmv.build_kmv(ua, "user", k=256), kmv.build_kmv(ub, "user", k=256)
-    est = kmv.kmv_intersect_estimate(ska, skb, k=256)
-    assert abs(est - 200) / 200 < 0.35
-    # duplicates don't inflate: distinct semantics
-    dup = kmv.build_kmv(ua.unionAll(ua), "user", k=256)
-    est_dup = kmv.kmv_estimate(dup, k=256).collect()[0]["est_distinct"]
-    base = kmv.kmv_estimate(ska, k=256).collect()[0]["est_distinct"]
-    assert est_dup == base
-
-    # mixed-k merge: trim to min(k of inputs) and estimate at that k —
-    # the small-k sketch can't contribute hashes above its own theta, so
-    # merging at the LARGER k would bias the union estimate low
-    part_a = spark.createDataFrame([(f"m{i}",) for i in range(1500)], ["user"])
-    part_b = spark.createDataFrame([(f"m{i}",) for i in range(1500, 3000)], ["user"])
-    sk_small = kmv.build_kmv(part_a, "user", k=64)
-    sk_big = kmv.build_kmv(part_b, "user", k=512)
-    merged_min = kmv.kmv_merge(sk_small, sk_big, k=64)
-    assert merged_min.count() == 64
-    est_min = kmv.kmv_estimate(merged_min, k=64).collect()[0]["est_distinct"]
-    assert abs(est_min - 3000) / 3000 < 0.4  # ~1/sqrt(64) band
-    # the documented failure mode: merging at the larger k underestimates
-    merged_big = kmv.kmv_merge(sk_small, sk_big, k=512)
-    est_big = kmv.kmv_estimate(merged_big, k=512).collect()[0]["est_distinct"]
-    assert est_big < 3000 * 0.8
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        kmv.build_kmv(df, "user", k=1)
 
 
 def test_funnel_and_retention(spark):
@@ -2123,91 +1609,3 @@ def test_jpeg_features_header_and_entropy():
     # non-JPEG input -> None
     assert mm.jpeg_features(b"not a jpeg") is None
     assert mm.jpeg_features(None) is None
-
-
-def test_extract_features_real_jpeg_fallback(spark):
-    """extract_features(use_fake=False) on a JPEG without a pixel codec
-    lands the header+entropy JSON (not NULL): the last honest stub now
-    only covers video and truly undecodable blobs."""
-    import json as _json
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(_synthetic_jpeg(bytes(range(0, 250))))),
-            (2, "image", bytearray(b"\x00garbage")),
-        ],
-        "media_id long, kind string, content binary",
-    )
-    rows = {r["media_id"]: r for r in extract_features(media, use_fake=False).collect()}
-    feat = rows[1]["feature"]
-    assert feat is not None
-    parsed = _json.loads(feat)
-    # Pillow-present environments decode pixels (mean/std); bare
-    # environments land the jpeg-header scan — accept either real result
-    assert ("mean" in parsed) or (
-        parsed["width"] == 640 and "byte_entropy" in parsed
-    )
-    assert rows[2]["feature"] is None  # undecodable garbage degrades
-
-
-def test_kmv_intersect_by_key(spark):
-    """Grouped engine-side intersection (r6, verdict note): exact in the
-    below-k regime, within theta error when full, 0 for disjoint or
-    one-sided groups, and consistent with the driver-side estimator."""
-    from firepit_spark.functions import kmv
-
-    # group g1: A={0..59}, B={40..99} -> overlap 20 (below k=256: exact)
-    # group g2: A={0..29}, B={100..129} -> overlap 0
-    # group g3: only in A
-    rows_a = [(f"u{i}", "g1") for i in range(60)]
-    rows_a += [(f"u{i}", "g2") for i in range(30)]
-    rows_a += [(f"u{i}", "g3") for i in range(10)]
-    rows_b = [(f"u{i}", "g1") for i in range(40, 100)]
-    rows_b += [(f"u{i}", "g2") for i in range(100, 130)]
-    a = kmv.build_kmv(spark.createDataFrame(rows_a, ["user", "g"]), "user", ["g"])
-    b = kmv.build_kmv(spark.createDataFrame(rows_b, ["user", "g"]), "user", ["g"])
-    got = {r["g"]: r["est_intersect"] for r in
-           kmv.kmv_intersect_by_key(a, b, ["g"]).collect()}
-    assert got == {"g1": 20.0, "g2": 0.0, "g3": 0.0}
-
-    # full-sketch regime: 600 vs 600 with overlap 200 at k=256 — within
-    # theta error, and equal to the ungrouped driver-side estimator on
-    # the same sketches (same union/trim arithmetic)
-    ua = spark.createDataFrame([(f"v{i}", "g") for i in range(600)], ["user", "g"])
-    ub = spark.createDataFrame(
-        [(f"v{i}", "g") for i in range(400, 1000)], ["user", "g"]
-    )
-    ska = kmv.build_kmv(ua, "user", ["g"], k=256)
-    skb = kmv.build_kmv(ub, "user", ["g"], k=256)
-    est = kmv.kmv_intersect_by_key(ska, skb, ["g"], k=256).collect()[0]
-    assert abs(est["est_intersect"] - 200) / 200 < 0.35
-    driver_est = kmv.kmv_intersect_estimate(
-        ska.drop("g"), skb.drop("g"), k=256
-    )
-    assert est["est_intersect"] == driver_est
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="group_cols"):
-        kmv.kmv_intersect_by_key(ska, skb, [])
-
-
-def test_frame_index_plan(spark):
-    """Sample-number frame plan from the real stts walk: media 5 has 6000ms
-    x 24fps = 144 frames; every 24th -> indices 0,24,...,120 (6 rows), with
-    exact millisecond timestamps floor(idx*1000/24)."""
-    from firepit_spark.functions.multimodal import frame_index_plan
-
-    media = synthesize_media(spark, n=9, partitions=2)
-    rows = frame_index_plan(media, every_n=24).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["media_id"], []).append((r["frame_idx"], r["frame_ts_ms"]))
-    assert set(by_id) == {2, 5, 8}  # video rows only; others unparsable
-    five = sorted(by_id[5])
-    assert [i for i, _ in five] == [0, 24, 48, 72, 96, 120]
-    assert five[1] == (24, 1000) and five[2] == (48, 2000)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        frame_index_plan(media, every_n=0)

@@ -1,661 +1,12 @@
-"""Stateful streaming operators (streaming/sessions.py)."""
+"""Batch curation expressions lifted onto Structured Streaming unchanged."""
 
 import json
-import os
-import time
-
-from firepit_spark.streaming.sessions import (
-    gap_sessions,
-    windowed_observation_rollup,
-)
 
 
 def _write_events(path, rows):
     with open(path, "w") as fp:
         for r in rows:
             fp.write(json.dumps(r) + "\n")
-
-
-def test_windowed_rollup(spark, tmp_path):
-    indir = tmp_path / "obs"
-    indir.mkdir()
-    rows = [
-        {"first_observed": f"2020-01-01T00:0{m}:00", "number_observed": m + 1}
-        for m in range(10)
-    ]
-    _write_events(indir / "a.json", rows)
-    schema = "first_observed timestamp, number_observed long"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    out = windowed_observation_rollup(stream, window="5 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rollup_t")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            str(r["window_start"]): (r["n_observations"], r["number_observed"])
-            for r in spark.sql("select * from rollup_t").collect()
-        }
-    finally:
-        q.stop()
-    assert got == {
-        "2020-01-01 00:00:00": (5, 15),  # minutes 0-4 -> 1+2+3+4+5
-        "2020-01-01 00:05:00": (5, 40),  # minutes 5-9 -> 6+..+10
-    }
-
-
-def test_gap_sessions_emit_on_watermark(spark, tmp_path):
-    indir = tmp_path / "ev"
-    indir.mkdir()
-    rows = [
-        {"src": "a", "ts": "2020-01-01T00:00:00"},
-        {"src": "a", "ts": "2020-01-01T00:00:30"},
-        {"src": "b", "ts": "2020-01-01T00:01:00"},
-    ]
-    _write_events(indir / "a.json", rows)
-    schema = "src string, ts timestamp"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    sess = gap_sessions(stream, "src", "ts", gap_seconds=60)
-    q = (
-        sess.writeStream.format("memory")
-        .queryName("sess_t")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # nothing can close before the watermark moves
-        assert spark.sql("select * from sess_t").count() == 0
-        # an event far in event-time future pushes the watermark past
-        # last_event + gap for keys a and b -> their sessions close
-        _write_events(indir / "b.json", [{"src": "c", "ts": "2020-01-01T01:00:00"}])
-        q.processAllAvailable()
-        deadline = time.time() + 60
-        rows_out = []
-        while time.time() < deadline:
-            rows_out = spark.sql("select * from sess_t").collect()
-            if len(rows_out) >= 2:
-                break
-            _write_events(
-                indir / f"tick_{int(time.time()*1000)}.json",
-                [{"src": "c", "ts": "2020-01-01T01:00:01"}],
-            )
-            q.processAllAvailable()
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    by_key = {r["key"]: r for r in rows_out}
-    assert "a" in by_key and "b" in by_key
-    a = by_key["a"]
-    assert a["n_events"] == 2
-    assert str(a["session_start"]).startswith("2020-01-01 00:00:00")
-    assert str(a["session_end"]).startswith("2020-01-01 00:00:30")
-    assert by_key["b"]["n_events"] == 1
-
-
-def test_stream_rollup_exact_across_batches(spark, tmp_path):
-    """The streaming continuous aggregate equals the batch answer no matter
-    how the stream was chopped into micro-batches."""
-    from firepit_spark.functions.rollup import build_rollup, reaggregate
-    from firepit_spark.streaming.rollup import read_rollup, stream_rollup
-
-    indir = tmp_path / "ev"
-    indir.mkdir()
-    out = str(tmp_path / "ru")
-    rows1 = [{"ts": f"2024-01-01T00:{m:02d}:00", "event_type": "a", "value": float(m)}
-             for m in range(30)]
-    rows2 = [{"ts": f"2024-01-01T00:{m:02d}:30", "event_type": "b", "value": float(m)}
-             for m in range(30)]
-    _write_events(indir / "a.json", rows1)
-    schema = "ts timestamp, event_type string, value double"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    q = stream_rollup(stream, out, "ts", ["event_type"], "value",
-                      bucket_seconds=60, checkpoint_dir=str(tmp_path / "ck"))
-    try:
-        q.processAllAvailable()
-        _write_events(indir / "b.json", rows2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = read_rollup(spark, out, bucket_seconds=600)
-    batch_df = spark.read.schema(schema).json(str(indir))
-    want = reaggregate(
-        build_rollup(batch_df, "ts", ["event_type"], "value", 60), 600
-    )
-    key = lambda r: (str(r["bucket"]), r["event_type"])
-    g = {key(r): (r["n"], float(r["val_sum"]), r["val_min"], r["val_max"]) for r in got.collect()}
-    w = {key(r): (r["n"], float(r["val_sum"]), r["val_min"], r["val_max"]) for r in want.collect()}
-    assert g == w and len(g) >= 6
-
-
-def test_stream_sketch_rollup_matches_batch(spark, tmp_path):
-    """Streaming HLL maintenance: the union of per-batch sketches gives the
-    same approx-distinct as one batch sketch over all rows — batching
-    boundaries don't show (register union is order/merge-insensitive)."""
-    from firepit_spark.functions.rollup import build_sketch_rollup, reaggregate_sketch
-    from firepit_spark.streaming.rollup import read_sketch_rollup, stream_sketch_rollup
-    from pyspark.sql import functions as F
-
-    indir = tmp_path / "ev"
-    indir.mkdir()
-    out = str(tmp_path / "sk")
-    rows1 = [{"ts": f"2024-01-01T00:{m:02d}:00", "user": f"u{m % 7}"} for m in range(30)]
-    rows2 = [{"ts": f"2024-01-01T00:{m:02d}:30", "user": f"u{m % 11}"} for m in range(30)]
-    _write_events(indir / "a.json", rows1)
-    schema = "ts timestamp, user string"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    q = stream_sketch_rollup(stream, out, "ts", [], "user",
-                             bucket_seconds=600, checkpoint_dir=str(tmp_path / "ck2"))
-    try:
-        q.processAllAvailable()
-        _write_events(indir / "b.json", rows2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {str(r["bucket"]): r["approx_distinct"]
-           for r in read_sketch_rollup(spark, out, bucket_seconds=600).collect()}
-    batch_df = spark.read.schema(schema).json(str(indir))
-    want = {str(r["bucket"]): r["approx_distinct"]
-            for r in reaggregate_sketch(
-                build_sketch_rollup(batch_df, "ts", [], "user", 600), 600).collect()}
-    assert got == want and len(got) == 3
-    # tiny cardinalities -> sparse-mode estimates are exact
-    exact = {str(r["bucket"]): r["d"] for r in batch_df.groupBy(
-        F.window("ts", "10 minutes").start.alias("bucket")).agg(
-        F.countDistinct("user").alias("d")).collect()}
-    assert {k: round(v) for k, v in got.items()} == exact
-
-
-def test_stream_dedup_exact(spark, tmp_path):
-    """Streaming twin of dedup_exact: one survivor per fingerprint within
-    the watermark horizon, duplicate dropped across micro-batches."""
-    from firepit_spark.streaming.dedup import stream_dedup_exact
-
-    indir = tmp_path / "docs"
-    indir.mkdir()
-    rows1 = [
-        {"ts": "2024-01-01T00:00:00", "doc_id": 0, "text": "alpha beta gamma"},
-        {"ts": "2024-01-01T00:00:01", "doc_id": 1, "text": "alpha  beta   GAMMA"},
-        {"ts": "2024-01-01T00:00:02", "doc_id": 2, "text": "something else"},
-    ]
-    _write_events(indir / "a.json", rows1)
-    schema = "ts timestamp, doc_id long, text string"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    out = stream_dedup_exact(stream, "ts", watermark_delay="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_t")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second micro-batch: same fingerprints arrive again inside the
-        # watermark horizon -> dropped; one genuinely new doc survives
-        _write_events(indir / "b.json", [
-            {"ts": "2024-01-01T00:01:00", "doc_id": 3, "text": "alpha beta gamma"},
-            {"ts": "2024-01-01T00:01:01", "doc_id": 4, "text": "fresh content"},
-        ])
-        q.processAllAvailable()
-        got = {r["doc_id"] for r in spark.sql("select * from dedup_t").collect()}
-    finally:
-        q.stop()
-    # doc 1 normalizes to doc 0's fingerprint (whitespace+case), doc 3 is a
-    # cross-batch duplicate of doc 0 — only first-seen docs pass
-    assert got == {0, 2, 4}
-
-
-def test_stream_enrich_and_score(spark, tmp_path):
-    from firepit_spark.streaming.enrich import stream_enrich, stream_score
-
-    indir = tmp_path / "docs"
-    indir.mkdir()
-    _write_events(
-        indir / "a.json",
-        [
-            {"doc_id": 0, "src": "web", "text": "hello world"},
-            {"doc_id": 1, "src": "books", "text": "lorem ipsum"},
-            {"doc_id": 2, "src": "unknown", "text": "zzz"},
-        ],
-    )
-    dim = spark.createDataFrame(
-        [("web", 0.5), ("books", 2.0)], ["src", "sample_rate"]
-    )
-    stream = spark.readStream.schema("doc_id long, src string, text string").json(
-        str(indir)
-    )
-    enriched = stream_enrich(stream, dim, "src")
-    scored = stream_score(enriched)
-    q = (
-        scored.writeStream.format("memory")
-        .queryName("enrich_t")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {r["doc_id"]: r for r in spark.sql("select * from enrich_t").collect()}
-    finally:
-        q.stop()
-    assert rows[0]["sample_rate"] == 0.5 and rows[1]["sample_rate"] == 2.0
-    assert rows[2]["sample_rate"] is None  # left join keeps unmatched stream rows
-    # stream scores match the batch inference op exactly
-    from firepit_spark.functions.inference import _hash_unit
-
-    for i, text in ((0, "hello world"), (1, "lorem ipsum"), (2, "zzz")):
-        assert rows[i]["model_score"] == _hash_unit(text, "quality|")
-
-    # threshold routing + inner join drop unmatched
-    inner = stream_enrich(stream, dim, "src", how="inner")
-    gated = stream_score(inner, threshold=2.0)  # impossible threshold -> empty
-    q2 = (
-        gated.writeStream.format("memory").queryName("gate_t")
-        .outputMode("append").start()
-    )
-    try:
-        q2.processAllAvailable()
-        n = spark.sql("select count(*) c from gate_t").collect()[0]["c"]
-    finally:
-        q2.stop()
-    assert n == 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        stream_enrich(stream, dim, "src", how="full")
-
-
-def test_stream_cms_hot_keys(spark, tmp_path):
-    from firepit_spark.streaming.rollup import read_cms, stream_cms
-    from firepit_spark.functions import sketch as sk
-
-    indir = tmp_path / "keys"
-    indir.mkdir()
-    _write_events(indir / "a.json", [{"k": "hot"} for _ in range(50)] + [{"k": f"c{i}"} for i in range(10)])
-    stream = spark.readStream.schema("k string").json(str(indir))
-    out = str(tmp_path / "cms")
-    q = stream_cms(stream, out, "k")
-    try:
-        q.processAllAvailable()
-        # second batch arrives later: counters must ADD across epochs
-        _write_events(indir / "b.json", [{"k": "hot"} for _ in range(30)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sketch, depth, width = read_cms(spark, out)
-    assert (depth, width) == (4, 1024)
-    probes = spark.createDataFrame([("hot",), ("c1",), ("absent",)], ["k"])
-    est = {r["k"]: r["est_count"]
-           for r in sk.cms_query(sketch, probes, "k", depth, width).collect()}
-    assert est["hot"] >= 80  # both epochs folded
-    assert est["c1"] >= 1
-    assert est["hot"] > est["c1"]
-
-
-def test_stream_interval_join(spark, tmp_path):
-    """Stream-stream event-time interval join matches the batch
-    inequality join exactly, and outer rows survive with nulls."""
-    from firepit_spark.streaming.joins import stream_interval_join
-
-    ldir, rdir = tmp_path / "clicks", tmp_path / "buys"
-    ldir.mkdir(); rdir.mkdir()
-    clicks = [
-        {"user": "u1", "ts": "2020-01-01T00:00:00", "page": "a"},
-        {"user": "u1", "ts": "2020-01-01T00:04:00", "page": "b"},
-        {"user": "u2", "ts": "2020-01-01T00:00:00", "page": "c"},
-        {"user": "u3", "ts": "2020-01-01T00:00:00", "page": "d"},
-    ]
-    buys = [
-        {"user": "u1", "ts": "2020-01-01T00:05:00", "amount": 10.0},
-        {"user": "u2", "ts": "2020-01-01T00:30:00", "amount": 5.0},  # outside
-    ]
-    _write_events(ldir / "a.json", clicks)
-    _write_events(rdir / "a.json", buys)
-    lschema = "user string, ts timestamp, page string"
-    rschema = "user string, ts timestamp, amount double"
-
-    lstream = spark.readStream.schema(lschema).json(str(ldir))
-    rstream = spark.readStream.schema(rschema).json(str(rdir))
-    out = stream_interval_join(
-        lstream, rstream, on="user", lower_seconds=0, upper_seconds=300
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ij_t")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("select * from ij_t").collect()
-    finally:
-        q.stop()
-    got = sorted((r["user"], r["page"], r["right_amount"]) for r in rows)
-    # u1: both clicks within 5 min of the 00:05 purchase; u2's purchase
-    # is 30 min later (outside the interval); u3 has no purchase
-    assert got == [("u1", "a", 10.0), ("u1", "b", 10.0)]
-
-    # identical semantics on batch frames (watermarks no-op)
-    lb = spark.createDataFrame(
-        [(c["user"], c["ts"].replace("T", " "), c["page"]) for c in clicks],
-        "user string, ts string, page string",
-    ).withColumn("ts", __import__("pyspark").sql.functions.to_timestamp("ts"))
-    rb = spark.createDataFrame(
-        [(b["user"], b["ts"].replace("T", " "), b["amount"]) for b in buys],
-        "user string, ts string, amount double",
-    ).withColumn("ts", __import__("pyspark").sql.functions.to_timestamp("ts"))
-    batch = stream_interval_join(lb, rb, on="user", lower_seconds=0, upper_seconds=300)
-    bgot = sorted((r["user"], r["page"], r["right_amount"]) for r in batch.collect())
-    assert bgot == got
-
-    # leftOuter keeps unmatched clicks with null right side
-    outer = stream_interval_join(
-        lb, rb, on="user", lower_seconds=0, upper_seconds=300, how="leftOuter"
-    )
-    ogot = {(r["user"], r["page"]): r["right_amount"] for r in outer.collect()}
-    assert ogot[("u2", "c")] is None and ogot[("u3", "d")] is None
-    assert ogot[("u1", "a")] == 10.0
-
-
-def test_stream_latest_enrich(spark, tmp_path):
-    """Latest-per-key control-stream enrichment: O(1) state per key,
-    event-time order within batch (updates win ties), NULL before the
-    first update, newest update wins."""
-    from firepit_spark.streaming.joins import stream_latest_enrich
-
-    edir, udir = tmp_path / "ev", tmp_path / "up"
-    edir.mkdir(); udir.mkdir()
-    _write_events(edir / "a.json", [
-        {"user": "u1", "ts": "2020-01-01T00:00:30", "event_id": 1},
-        {"user": "u1", "ts": "2020-01-01T00:02:00", "event_id": 2},
-        {"user": "u2", "ts": "2020-01-01T00:01:00", "event_id": 3},
-    ])
-    _write_events(udir / "a.json", [
-        {"user": "u1", "ts": "2020-01-01T00:00:00", "profile": "bronze"},
-        {"user": "u1", "ts": "2020-01-01T00:01:00", "profile": "gold"},
-    ])
-    ev = spark.readStream.schema("user string, ts timestamp, event_id long").json(str(edir))
-    up = spark.readStream.schema("user string, ts timestamp, profile string").json(str(udir))
-    out = stream_latest_enrich(ev, up, key="user", value_col="profile")
-    q = (
-        out.writeStream.format("memory").queryName("latest_t")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {r["event_id"]: r["latest_profile"]
-                for r in spark.sql("select * from latest_t").collect()}
-    finally:
-        q.stop()
-    # event 1 (00:00:30) sees bronze; event 2 (00:02) sees gold; u2 has
-    # no update -> NULL
-    assert rows == {1: "bronze", 2: "gold", 3: None}
-
-    # state carries across micro-batches: a later event batch sees the
-    # absorbed latest value
-    _write_events(edir / "b.json", [
-        {"user": "u1", "ts": "2020-01-01T00:05:00", "event_id": 4},
-        {"user": "u2", "ts": "2020-01-01T00:05:00", "event_id": 5},
-    ])
-    _write_events(udir / "b.json", [
-        {"user": "u2", "ts": "2020-01-01T00:04:00", "profile": "silver"},
-    ])
-    q = (
-        stream_latest_enrich(ev, up, key="user", value_col="profile")
-        .writeStream.format("memory").queryName("latest_t2")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-        rows2 = {r["event_id"]: r["latest_profile"]
-                 for r in spark.sql("select * from latest_t2").collect()}
-    finally:
-        q.stop()
-    assert rows2[4] == "gold" and rows2[5] == "silver"
-
-
-def test_stream_bloom_dedup(spark, tmp_path):
-    """Bloom-state streaming dedup: keys seen in ANY earlier micro-batch
-    are dropped (no watermark horizon), state stays a bounded bitset, and
-    the folded seen-filter equals a batch-built filter over the admitted
-    keys."""
-    from pyspark.sql import functions as F
-
-    from firepit_spark.functions.bloom import bloom_build, bloom_might_contain
-    from firepit_spark.streaming.dedup import read_seen_bloom, stream_bloom_dedup
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    out_dir, state_dir = str(tmp_path / "out"), str(tmp_path / "state")
-    bits, hashes = 1 << 14, 4
-
-    _write_events(indir / "a.json", [
-        {"doc_id": 0, "url": "http://a.example/x"},
-        {"doc_id": 1, "url": "http://b.example/y"},
-        {"doc_id": 2, "url": "http://a.example/x"},  # in-batch dup
-        {"doc_id": 7, "url": None},                  # NULL key
-    ])
-    schema = "doc_id long, url string"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    q = stream_bloom_dedup(
-        stream, "url", out_dir, state_dir, bits, hashes,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    try:
-        q.processAllAvailable()
-        _write_events(indir / "b.json", [
-            {"doc_id": 3, "url": "http://a.example/x"},  # cross-batch dup
-            {"doc_id": 4, "url": "http://c.example/z"},  # new
-            {"doc_id": 8, "url": None},                  # cross-batch NULL dup
-        ])
-        q.processAllAvailable()
-        survivors = spark.read.parquet(out_dir).drop("__epoch")
-        rows = survivors.collect()
-        urls = sorted(r.url for r in rows if r.url is not None)
-    finally:
-        q.stop()
-    assert urls == ["http://a.example/x", "http://b.example/y", "http://c.example/z"]
-    # NULL keys dedup across batches like a key value: exactly one survives
-    assert sum(1 for r in rows if r.url is None) == 1
-
-    # the live seen-set equals a batch-built filter over the admitted keys
-    # (hashed through the same NULL sentinel the stream uses)
-    seen = read_seen_bloom(spark, state_dir)
-    keyed = survivors.select(
-        F.coalesce(F.col("url"), F.lit("\x00__null__")).alias("k")
-    )
-    direct = bloom_build(keyed, "k", bits, hashes)
-    assert {(r.word_idx, r.word) for r in seen.collect()} == {
-        (r.word_idx, r.word) for r in direct.collect()
-    }
-    # and flags every admitted key as seen
-    flagged = bloom_might_contain(keyed, "k", seen, bits, hashes)
-    assert flagged.filter(~flagged.might_contain).count() == 0
-
-
-def test_stream_bloom_dedup_replay_idempotent(spark, tmp_path):
-    """Real foreachBatch replay: delete the checkpoint's commit marker so
-    the restarted query re-runs the batch — the per-epoch dynamic
-    overwrite + __epoch < N state reads must leave survivors and state
-    byte-identical (at-least-once becomes effectively exactly-once)."""
-    import os
-
-    from firepit_spark.streaming.dedup import stream_bloom_dedup
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    out_dir, state_dir = str(tmp_path / "out"), str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    bits, hashes = 1 << 14, 4
-
-    _write_events(indir / "a.json", [
-        {"doc_id": 0, "url": "http://a.example/x"},
-        {"doc_id": 1, "url": "http://b.example/y"},
-    ])
-    schema = "doc_id long, url string"
-
-    def start():
-        stream = spark.readStream.schema(schema).json(str(indir))
-        return stream_bloom_dedup(
-            stream, "url", out_dir, state_dir, bits, hashes, checkpoint_dir=ckpt
-        )
-
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    first = sorted(
-        (r.doc_id, r.url) for r in spark.read.parquet(out_dir).collect()
-    )
-    state_first = sorted(
-        (r.word_idx, r.word) for r in spark.read.parquet(state_dir).drop("__epoch").collect()
-    )
-
-    # simulate a failure after the sink write but before the commit:
-    # removing commits/0 makes the restarted query replay batch 0
-    # (the .crc sidecar must go too or the re-commit rename fails)
-    os.remove(os.path.join(ckpt, "commits", "0"))
-    crc = os.path.join(ckpt, "commits", ".0.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    second = sorted(
-        (r.doc_id, r.url) for r in spark.read.parquet(out_dir).collect()
-    )
-    state_second = sorted(
-        (r.word_idx, r.word) for r in spark.read.parquet(state_dir).drop("__epoch").collect()
-    )
-    assert second == first
-    assert state_second == state_first
-
-
-def test_stream_rollup_replay_idempotent(spark, tmp_path):
-    """Same commit-marker replay drill for the continuous aggregate: a
-    re-run batch dynamically overwrites its own __epoch partition, so
-    the folded rollup cannot double-count."""
-    import os
-
-    from firepit_spark.streaming.rollup import read_rollup, stream_rollup
-
-    indir = tmp_path / "ev"
-    indir.mkdir()
-    out = str(tmp_path / "ru")
-    ckpt = str(tmp_path / "ck")
-    rows = [{"ts": f"2024-01-01T00:{m:02d}:00", "event_type": "a", "value": float(m)}
-            for m in range(10)]
-    _write_events(indir / "a.json", rows)
-    schema = "ts timestamp, event_type string, value double"
-
-    def start():
-        stream = spark.readStream.schema(schema).json(str(indir))
-        return stream_rollup(stream, out, "ts", ["event_type"], "value",
-                             bucket_seconds=60, checkpoint_dir=ckpt)
-
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    snap = lambda: sorted(
-        (str(r["bucket"]), r["event_type"], r["n"], float(r["val_sum"]))
-        for r in read_rollup(spark, out, bucket_seconds=60).collect()
-    )
-    first = snap()
-    os.remove(os.path.join(ckpt, "commits", "0"))
-    crc = os.path.join(ckpt, "commits", ".0.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert snap() == first
-
-
-def test_stream_bloom_dedup_param_mismatch_raises(spark, tmp_path):
-    """(num_bits, num_hashes) persist to state_dir/_meta on first start;
-    restarting against the same state with different parameters must raise
-    instead of silently corrupting membership (advisor r5)."""
-    import pytest
-
-    from firepit_spark.streaming.dedup import read_seen_bloom, stream_bloom_dedup
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    out_dir, state_dir = str(tmp_path / "out"), str(tmp_path / "state")
-    _write_events(indir / "a.json", [{"doc_id": 0, "url": "http://a.example/x"}])
-    stream = spark.readStream.schema("doc_id long, url string").json(str(indir))
-    q = stream_bloom_dedup(
-        stream, "url", out_dir, state_dir, 1 << 14, 4,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # changed num_bits -> positions mod a different filter size: refuse
-    stream2 = spark.readStream.schema("doc_id long, url string").json(str(indir))
-    with pytest.raises(ValueError, match="num_bits"):
-        stream_bloom_dedup(
-            stream2, "url", out_dir, state_dir, 1 << 15, 4,
-            checkpoint_dir=str(tmp_path / "ckpt2"),
-        )
-    # read_seen_bloom validates when given the probe parameters
-    with pytest.raises(ValueError, match="num_hashes"):
-        read_seen_bloom(spark, state_dir, 1 << 14, 5)
-    # matching parameters restart + probe fine
-    assert read_seen_bloom(spark, state_dir, 1 << 14, 4).count() >= 1
-
-    # corrupt/partial meta surfaces as the descriptive ValueError, not a
-    # KeyError/TypeError from the comparison (advisor r6)
-    import shutil
-
-    meta_dir = state_dir.rstrip("/") + "/_meta"
-    shutil.rmtree(meta_dir)  # also clears Spark's .crc sidecars
-    os.makedirs(meta_dir)
-    with open(os.path.join(meta_dir, "part-00000.json"), "w") as fh:
-        fh.write(json.dumps({"num_bits": "garbled"}) + "\n")
-    with pytest.raises(ValueError, match="corrupt"):
-        read_seen_bloom(spark, state_dir, 1 << 14, 4)
-
-    # the read API must NOT create meta where none exists (advisor r6):
-    # a bare partials dir probed via read_seen_bloom stays meta-less
-    bare = str(tmp_path / "bare_state")
-    spark.read.parquet(state_dir).write.parquet(bare)
-    read_seen_bloom(spark, bare, 1 << 14, 4)
-    assert not os.path.exists(bare + "/_meta")
-
-
-def test_stream_interval_join_prefix_collision_raises(spark):
-    """A left column that already carries the right_ prefix of a right
-    column must fail fast (advisor r5: silent duplicate output columns)."""
-    import datetime
-
-    import pytest
-
-    from firepit_spark.streaming.joins import stream_interval_join
-
-    ts = datetime.datetime(2024, 1, 1)
-    left = spark.createDataFrame(
-        [("k", ts, 1.0)], "user string, ts timestamp, right_amount double"
-    )
-    right = spark.createDataFrame(
-        [("k", ts, 2.0)], "user string, ts timestamp, amount double"
-    )
-    with pytest.raises(ValueError, match="right_amount"):
-        stream_interval_join(left, right, on="user")
-    # a non-colliding prefix still works
-    out = stream_interval_join(left, right, on="user", right_prefix="rhs_")
-    assert "rhs_amount" in out.columns and out.count() == 1
 
 
 def test_stream_quality_gate_and_token_ids(spark, tmp_path):
@@ -745,132 +96,3 @@ def test_stream_url_curation_lift(spark, tmp_path):
     want = {r["doc_id"]: r.asDict() for r in wb.parse_urls(batch_df).collect()}
     assert got == want
     assert got[2]["url_norm"] is None
-
-
-def test_stream_cap_per_key_across_batches(spark, tmp_path):
-    """Lifetime admission cap: the count carries across micro-batches, so
-    a key that filled its cap in batch 1 admits only the remainder in
-    batch 2 and nothing after."""
-    import pytest
-
-    from firepit_spark.streaming.dedup import stream_cap_per_key
-
-    indir = tmp_path / "capdocs"
-    indir.mkdir()
-    _write_events(
-        indir / "a.json",
-        [{"doc_id": i, "domain": "big.com"} for i in range(3)]
-        + [{"doc_id": 100, "domain": "tiny.org"}],
-    )
-    stream = spark.readStream.schema("doc_id long, domain string").json(str(indir))
-    out = stream_cap_per_key(stream, "domain", cap=4)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cap_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got1 = spark.sql("select * from cap_t").collect()
-        assert len([r for r in got1 if r["domain"] == "big.com"]) == 3
-        # batch 2: five more big.com rows, only ONE admitted (3 + 1 = cap)
-        _write_events(
-            indir / "b.json",
-            [{"doc_id": 10 + i, "domain": "big.com"} for i in range(5)]
-            + [{"doc_id": 101, "domain": "tiny.org"}],
-        )
-        q.processAllAvailable()
-        got2 = spark.sql("select * from cap_t").collect()
-        assert len([r for r in got2 if r["domain"] == "big.com"]) == 4
-        assert len([r for r in got2 if r["domain"] == "tiny.org"]) == 2
-        # batch 3: nothing more admitted for the capped key
-        _write_events(
-            indir / "c.json", [{"doc_id": 99, "domain": "big.com"}]
-        )
-        q.processAllAvailable()
-        got3 = spark.sql("select * from cap_t").collect()
-        assert len([r for r in got3 if r["domain"] == "big.com"]) == 4
-    finally:
-        q.stop()
-
-    with pytest.raises(ValueError):
-        stream_cap_per_key(stream, "domain", cap=0)
-
-
-def test_stream_cap_per_key_ttl_resets_per_window_and_evicts(spark, tmp_path):
-    """TTL mode (r9): the admission counter is per (key, tumbling ttl
-    window of event time), carries across micro-batches WITHIN a window,
-    resets for the next window, and sealed-window state is evicted via
-    event-time timeout so an infinite stream holds bounded state."""
-    import pytest
-
-    from firepit_spark.streaming.dedup import stream_cap_per_key
-
-    indir = tmp_path / "capttl"
-    indir.mkdir()
-    # window 1 (00:00-00:10): 3 big.com rows, cap 2 -> 2 admitted
-    _write_events(
-        indir / "a.json",
-        [
-            {"doc_id": i, "domain": "big.com", "ts": f"2020-01-01T00:0{i}:00"}
-            for i in range(3)
-        ],
-    )
-    schema = "doc_id long, domain string, ts timestamp"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    out = stream_cap_per_key(
-        stream, "domain", cap=2, ttl="10 minutes", time_col="ts"
-    )
-    assert out.schema == stream.schema  # no internal window column leaks
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cap_ttl_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got1 = spark.sql("select * from cap_ttl_t").collect()
-        assert len(got1) == 2  # window-1 cap
-        # batch 2: one more window-1 row (rejected: window already full)
-        # plus three window-2 rows (00:10-00:20) -> counter RESET, 2 pass
-        _write_events(
-            indir / "b.json",
-            [{"doc_id": 9, "domain": "big.com", "ts": "2020-01-01T00:05:00"}]
-            + [
-                {"doc_id": 10 + i, "domain": "big.com", "ts": f"2020-01-01T00:1{i}:00"}
-                for i in range(3)
-            ],
-        )
-        q.processAllAvailable()
-        got2 = spark.sql("select * from cap_ttl_t").collect()
-        assert len(got2) == 4
-        win2 = [r for r in got2 if r["doc_id"] >= 10]
-        assert len(win2) == 2  # fresh counter for the new window
-        # batch 3: event time far ahead -> watermark seals old windows;
-        # their timers fire and the state store DROPS their counters
-        # (this is the bounded-state claim, asserted via store metrics)
-        _write_events(
-            indir / "c.json",
-            [{"doc_id": 50, "domain": "big.com", "ts": "2020-01-01T03:00:00"}],
-        )
-        q.processAllAvailable()
-        state = q.lastProgress["stateOperators"][0]
-        assert state["numRowsTotal"] == 1  # only the 03:00 window survives
-        _write_events(
-            indir / "d.json",
-            [{"doc_id": 51, "domain": "big.com", "ts": "2020-01-01T03:01:00"}],
-        )
-        q.processAllAvailable()
-        got3 = spark.sql("select * from cap_ttl_t").collect()
-        assert len(got3) == 6
-    finally:
-        q.stop()
-
-    with pytest.raises(ValueError):
-        stream_cap_per_key(stream, "domain", cap=2, ttl="10 minutes")
-    with pytest.raises(ValueError):
-        stream_cap_per_key(stream, "domain", cap=2, ttl="bogus", time_col="ts")
