@@ -3245,9 +3245,8 @@ def _stix_store(spark, sf_dir):
             }
         )
     bundle = {"type": "bundle", "id": "bundle--events-bridge", "objects": objects}
-    # snapshot the bundle to JSON BEFORE the driver-side ingest: flatten()
-    # mutates observations in place (del obs["objects"]), so dumping after
-    # st.cache would feed the distributed path gutted observations
+    # snapshot the bundle to JSON for the distributed ingest below; flatten()
+    # works on a copy, so both ingests read the same observations
     import json as _json
 
     bpath = os.path.join(tempfile.mkdtemp(prefix="fp_stix_bundle_"), "bundle.json")

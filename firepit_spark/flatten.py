@@ -7,9 +7,10 @@ hyphenated keys), STIX 2.0 index references are rewritten to deterministic
 ``__contains`` / ``__reflist`` rows, and "root" objects get
 ``x_firepit_rank`` via the same src/dst + same-type-tree heuristics.
 
-Everything here is pure-Python per-observation logic: the storage layer
-applies it driver-side for small bundles and inside ``mapInPandas`` for
-distributed ingest, so one implementation serves both paths.
+Everything here is pure-Python per-observation logic and types nothing:
+``SparkStorage.cache`` applies it on the driver and ``cache_distributed``
+inside ``mapInPandas``, and both hand the flat records to the one typing
+pipeline in sources/bundles.py (``encode_records`` -> ``ingest_flat``).
 """
 
 from __future__ import annotations

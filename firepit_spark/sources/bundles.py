@@ -1,22 +1,26 @@
-"""Distributed STIX bundle ingest.
+"""STIX bundle ingest: the one typing pipeline every ingest call shares.
 
-The storage's ``cache()`` parses small bundles driver-side (reference
-parity: firepit/sqlstorage.py:410-444 is inherently driver-side too). This
-module is the 100 TB path: bundle files are read by executors, each
-observation is flattened *where it is read* via ``mapInPandas`` (the same
-pure-Python flatten kernel), and per-type schemas are captured **in the
-same pass** — each flatten partition emits per-type "kind fragments"
-(column -> {bool,int,float,list,str}) alongside the records, the driver
-merges the fragments with the exact type lattice the driver-side ingest
-uses (storage._infer_field), and each type is parsed with one JVM-side
-``from_json`` scan against that explicit schema.  No ``spark.read.json``
-schema inference anywhere, so ingest is one flatten pass + one bounded
-parse pass per type instead of ~2 full scans per type, and both ingest
-paths now agree on column types byte-for-byte (dicts -> sort_keys JSON
-text, mixed numerics -> double, lists -> array<string>).
+A flattened record is typed in exactly one place, :func:`encode_records`:
+values are canonicalized (dicts -> sort_keys JSON text, list elements ->
+strings, datetimes -> UTC ISO text), serialized to one JSON text per
+record, and their column kinds ({bool,int,float,list,str}) collected per
+type. The kinds become an explicit schema (:func:`_type_schema`) and each
+type is parsed with one JVM-side ``from_json`` scan; ``ingest_dataframe``'s
+normalization then types timestamps and widens numerics. No
+``spark.read.json`` schema inference anywhere.
 
-Pipeline shape (all distributed):
-  read bundles -> explode objects -> mapInPandas(flatten + kind capture) ->
+Two producers feed the same ``(otype, record-json)`` flat frame:
+
+- :func:`cache_distributed` (the 100 TB path): bundle files are read whole
+  by executors, one task per file, and each observation is flattened
+  *where it is read* via ``mapInPandas``; each partition emits its kind
+  fragments alongside the records and the driver merges them.
+- :func:`ingest_records` (``SparkStorage.cache``/``load``/``upsert_many``/
+  ``reassign``): the driver already holds its records, so it encodes them
+  itself and passes the kinds in, skipping the fragment collect.
+
+Pipeline shape:
+  read bundles -> explode objects -> mapInPandas(flatten + encode) ->
   (type, json) rows -> per-type from_json(explicit schema) -> upsert merge
 
 Shuffle analysis: the only wide operations are the per-type upsert
@@ -29,6 +33,7 @@ driver, never object data.
 from __future__ import annotations
 
 import json
+from datetime import datetime, timezone
 from typing import Iterator
 
 import pandas as pd
@@ -48,6 +53,7 @@ from firepit_spark.flatten import flatten
 _FLAT_SCHEMA = StructType(
     [StructField("otype", StringType()), StructField("record", StringType())]
 )
+_OBJECT_SCHEMA = StructType([StructField("value", StringType())])
 
 # in-band marker for per-partition schema fragments ("\x00" can never be a
 # STIX type name, which the validators restrict to [a-z0-9-])
@@ -55,7 +61,7 @@ SCHEMA_MARKER = "\x00schema"
 
 
 def _kind(v) -> str:
-    """Python-value kind tag; mirrors storage._infer_field's lattice input."""
+    """Python-value kind tag, the input of the :func:`_type_schema` lattice."""
     if isinstance(v, bool):  # bool before int: bool is an int subclass
         return "bool"
     if isinstance(v, int):
@@ -68,10 +74,10 @@ def _kind(v) -> str:
 
 
 def _canonicalize(rec: dict) -> dict:
-    """Pre-serialize the values the driver path coerces (storage._coerce):
-    dicts -> sort_keys JSON text, list elements -> strings.  Doing it in the
-    kernel keeps the downstream ``from_json`` parse lossless and makes both
-    ingest paths produce identical bytes."""
+    """Pre-serialize dicts to sort_keys JSON text and list elements to
+    strings, so the ``from_json`` parse is lossless. Datetimes (a record
+    read back through ``lookup``) become UTC ISO text; a naive one is local
+    time, as PySpark hands it out."""
     out = {}
     for k, v in rec.items():
         if isinstance(v, dict):
@@ -81,54 +87,71 @@ def _canonicalize(rec: dict) -> dict:
                 x if isinstance(x, str) else json.dumps(x, sort_keys=True)
                 for x in v
             ]
+        elif isinstance(v, datetime):
+            out[k] = v.astimezone(timezone.utc).isoformat()
         else:
             out[k] = v
     return out
 
 
+def encode_records(records) -> tuple[list, list, dict]:
+    """Flattened records -> (otype per record, record JSON per record,
+    ``{otype: {column: kinds}}``). The only place a record is typed: the
+    executor kernel and the driver-side ingest both call it."""
+    otypes, texts = [], []
+    kinds: dict[str, dict[str, set]] = {}
+    for rec in records:
+        canon = _canonicalize(rec)
+        t = canon["type"]
+        kmap = kinds.setdefault(t, {})
+        for k, v in canon.items():
+            if k == "type":
+                continue
+            s = kmap.setdefault(k, set())
+            if v is not None:
+                s.add(_kind(v))
+        otypes.append(t)
+        texts.append(json.dumps(canon, default=str))
+    return otypes, texts, kinds
+
+
+def explode_bundles(texts: DataFrame) -> DataFrame:
+    """Whole bundle texts (a ``value`` column) -> one row per object's
+    JSON text."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for text in pdf["value"]:
+                bundle = json.loads(text)
+                out.extend(json.dumps(o) for o in bundle.get("objects", []))
+            yield pd.DataFrame({"value": out})
+
+    return texts.mapInPandas(run, schema=_OBJECT_SCHEMA)
+
+
 def read_bundle_objects(spark: SparkSession, paths) -> DataFrame:
     """One row per STIX object (as a JSON string) from bundle file(s).
 
-    ``multiLine`` JSON gives one task per bundle file — ingest parallelism
-    comes from the number of files, which is how 100 TB arrives in practice
-    (many bundle files on object storage).
+    Each file is read whole as one task — ingest parallelism comes from
+    the number of files, which is how 100 TB arrives in practice (many
+    bundle files on object storage) — and objects reach ``flatten`` as
+    written, with no schema inference over the bundles.
     """
-    raw = spark.read.option("multiLine", "true").json(paths)
-    if "objects" not in raw.columns:
-        raise ValueError("not a STIX bundle: missing 'objects'")
-    return raw.select(F.explode("objects").alias("obj")).select(
-        F.to_json("obj").alias("value")
-    )
+    return explode_bundles(spark.read.text(paths, wholetext=True))
 
 
 def flatten_objects(objects_df: DataFrame) -> DataFrame:
     """(json string) rows -> (otype, flattened record json) rows, plus one
     ``SCHEMA_MARKER`` row per (partition-batch, type) carrying the observed
-    column kinds.
-
-    Arrow-batched: each worker flattens its partition's observations with
-    the identical kernel the driver-side path uses, so both ingest paths
-    produce byte-identical records.
-    """
+    column kinds. Arrow-batched: each worker flattens and encodes its
+    partition's observations."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_t, out_r = [], []
-            kinds: dict[str, dict[str, set]] = {}
-            for raw in pdf["value"]:
-                obj = json.loads(raw)
-                for rec in flatten(obj):
-                    canon = _canonicalize(rec)
-                    t = canon["type"]
-                    kmap = kinds.setdefault(t, {})
-                    for k, v in canon.items():
-                        if k == "type":
-                            continue
-                        s = kmap.setdefault(k, set())
-                        if v is not None:
-                            s.add(_kind(v))
-                    out_t.append(t)
-                    out_r.append(json.dumps(canon, default=str))
+            out_t, out_r, kinds = encode_records(
+                rec for raw in pdf["value"] for rec in flatten(json.loads(raw))
+            )
             for t, cols in kinds.items():
                 out_t.append(SCHEMA_MARKER)
                 out_r.append(
@@ -153,9 +176,8 @@ def _merge_fragments(frag_rows) -> dict:
 
 
 def _type_schema(cols: dict) -> StructType:
-    """Kind sets -> Spark schema; the same lattice as storage._infer_field
-    (timestamp props stay strings here — ingest_dataframe converts them,
-    exactly as it did for the inferred-schema path)."""
+    """Kind sets -> Spark schema (timestamp props stay strings here —
+    ingest_dataframe's normalization converts them)."""
     fields = []
     for c in sorted(cols):
         ks = cols[c]
@@ -169,74 +191,61 @@ def _type_schema(cols: dict) -> StructType:
             t = ArrayType(StringType())
         else:
             # mixed kinds / all-null / text: from_json renders any token as
-            # its text when the target is string (verified: numbers, objects,
-            # arrays all arrive as raw JSON text, not null)
+            # its JSON text when the target is string (numbers, booleans,
+            # objects and arrays all arrive as raw text, not null)
             t = StringType()
         fields.append(StructField(c, t))
     return StructType(fields)
 
 
 def ingest_flat(
-    storage,
-    flat: DataFrame,
-    query_id: str,
-    max_concurrent_types: int = 8,
-):
-    """Merge a ``flatten_objects`` output frame into the warehouse.
+    storage, flat: DataFrame, query_id: str | None, kinds: dict | None = None
+) -> list:
+    """Merge a ``flatten_objects``-shaped frame into the warehouse as one
+    ingest call: one ``from_json`` parse per type, the types merged
+    concurrently, one ``__queries`` batch. Returns the ingested types.
 
-    Shared by batch (:func:`cache_distributed`) and streaming
-    (streaming/ingest.py) — one fragment-collect over the persisted flat
-    frame, then one ``from_json`` parse scan per type.  Per-type parse/
-    merge/write jobs are independent Spark jobs, so they run concurrently
-    from a small driver thread pool — type count (~10) rather than data
-    size bounds the win, and the batch-partition write path needs no
-    cross-type coordination.
+    Shared by batch (:func:`cache_distributed`), streaming
+    (streaming/ingest.py) and the driver-side :func:`ingest_records`,
+    which passes its ``kinds`` in; otherwise they are collected from the
+    frame's ``SCHEMA_MARKER`` rows.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     flat = flat.persist()
     try:
-        frags = [
-            r[0]
-            for r in flat.filter(F.col("otype") == SCHEMA_MARKER)
-            .select("record")
-            .collect()
-        ]
-        merged = _merge_fragments(frags)
-
-        def ingest_one(otype: str):
-            cols = merged[otype]
-            if not cols:
-                return
-            schema = _type_schema(cols)
-            type_df = (
-                flat.filter(F.col("otype") == otype)
-                .select(F.from_json("record", schema).alias("r"))
-                .select("r.*")
+        if kinds is None:
+            kinds = _merge_fragments(
+                r[0]
+                for r in flat.filter(F.col("otype") == SCHEMA_MARKER)
+                .select("record")
+                .collect()
             )
-            storage.ingest_dataframe(otype, type_df, str(query_id))
-
-        with ThreadPoolExecutor(max_workers=max_concurrent_types) as pool:
-            list(pool.map(ingest_one, sorted(merged)))
+        frames = {
+            otype: flat.filter(F.col("otype") == otype)
+            .select(F.from_json("record", _type_schema(cols)).alias("r"))
+            .select("r.*")
+            for otype, cols in sorted(kinds.items())
+            if cols
+        }
+        return storage._ingest_frames(frames, query_id)
     finally:
         flat.unpersist()
 
 
-def cache_distributed(
-    storage,
-    query_id: str,
-    paths,
-    repartition: int | None = None,
-    max_concurrent_types: int = 8,
-):
+def ingest_records(storage, records, query_id: str | None) -> list:
+    """Driver-side entry to :func:`ingest_flat`: flattened record dicts ->
+    the same flat frame the executor kernel emits, kinds passed in."""
+    otypes, texts, kinds = encode_records(records)
+    flat = storage.spark.createDataFrame(
+        pd.DataFrame({"otype": otypes, "record": texts}, dtype=object),
+        schema=_FLAT_SCHEMA,
+    )
+    return ingest_flat(storage, flat, query_id, kinds)
+
+
+def cache_distributed(storage, query_id: str, paths, repartition: int | None = None):
     """Distributed equivalent of ``storage.cache`` for large bundle sets."""
-    spark = storage.spark
-    objects = read_bundle_objects(spark, paths)
+    objects = read_bundle_objects(storage.spark, paths)
     if repartition:
         objects = objects.repartition(repartition)
-    ingest_flat(
-        storage,
-        flatten_objects(objects),
-        str(query_id),
-        max_concurrent_types=max_concurrent_types,
-    )
+    if not ingest_flat(storage, flatten_objects(objects), str(query_id)):
+        raise ValueError(f"not a STIX bundle: no objects in {paths}")

@@ -1107,31 +1107,9 @@ def convert_log(
             mapping = MAPPINGS[mapping]
         wide = to_wide(df, mapping)
         scos = wide_to_scos(wide, identity_id=identity_id)
-    created = []
     try:
-        # per-type ingests land in DIFFERENT tables, so their jobs are
-        # independent: submit them from a small thread pool (guide-§2.6
-        # job overlap — the serial form paid one isEmpty probe + one
-        # write-job latency per type end to end). Shared tables
-        # (__queries tags) serialize their batch numbering under the
-        # per-table write lock and merge order-independently.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _ingest(item):
-            otype, sco_df = item
-            # only observed types get tables (reference parity); the probe
-            # is a limit-1 scan over the persisted wide frame — cheap
-            if sco_df.isEmpty():
-                return None
-            storage.ingest_dataframe(otype, sco_df, query_id)
-            return otype
-
-        items = list(scos.items())
-        if len(items) <= 1:
-            created = [t for t in map(_ingest, items) if t]
-        else:
-            with ThreadPoolExecutor(max_workers=min(4, len(items))) as pool:
-                created = [t for t in pool.map(_ingest, items) if t]
+        # only observed types get tables (reference parity); each probe is
+        # a limit-1 scan over the persisted wide frame — cheap
+        return storage._ingest_frames(scos, query_id, skip_empty=True)
     finally:
         scos.release()
-    return sorted(created)

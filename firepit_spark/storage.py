@@ -24,21 +24,19 @@ import re
 import shutil
 import threading
 import uuid
-from collections import defaultdict
+from concurrent import futures
 from dataclasses import dataclass, field
-from datetime import datetime
+from functools import reduce
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
+    ByteType,
+    FloatType,
+    IntegerType,
+    ShortType,
     StructType,
-    TimestampType,
 )
 
 from firepit_spark import flatten as raftmod
@@ -55,7 +53,8 @@ from firepit_spark.patterns import compile_pattern, pattern_time_range
 from firepit_spark import props
 from firepit_spark.props import auto_aggs, primary_prop
 from firepit_spark.query import Aggregation, BinnedColumn, Query
-from firepit_spark.timestamp import TIMESTAMP_PROPS, to_datetime
+from firepit_spark.sources import bundles as _bundles
+from firepit_spark.timestamp import TIMESTAMP_PROPS
 from firepit_spark.validate import validate_name, validate_path
 
 CONTAINS = "__contains"
@@ -111,12 +110,13 @@ class SparkStorage:
         self._deref = DerefPlanner(self)
         # fold batch partitions back into one past this many (see compact())
         self.auto_compact_batches = 32
-        # one lock per table: concurrent ingest threads (cache_distributed
-        # and _write_objects run per-type jobs in parallel) contend only on
-        # shared tables like __queries, where the next-batch-number probe
-        # must be atomic. Lock CREATION itself goes through _write_lock():
-        # a bare defaultdict __getitem__ can hand two racing threads two
-        # different Lock objects for the same brand-new key.
+        # one lock per table: concurrent ingest threads (_ingest_frames
+        # runs per-type jobs in parallel, and callers may ingest from
+        # several threads) contend only on shared tables, where the
+        # next-batch-number probe must be atomic. Lock CREATION itself
+        # goes through _write_lock(): a bare defaultdict __getitem__ can
+        # hand two racing threads two different Lock objects for the same
+        # brand-new key.
         self._write_locks: dict[str, threading.RLock] = {}
         self._write_locks_guard = threading.Lock()
         # memoized observation plans (r14-opt, guide §1.2/§2.4): the
@@ -446,11 +446,13 @@ class SparkStorage:
         (parity: firepit/sqlstorage.py:410-444)."""
         if not isinstance(bundles, list):
             bundles = [bundles]
-        objects = []
-        for bundle in bundles:
-            for obj in raftmod.get_objects(bundle):
-                objects.extend(raftmod.flatten(obj))
-        self._write_objects(objects, str(query_id))
+        records = [
+            rec
+            for bundle in bundles
+            for obj in raftmod.get_objects(bundle)
+            for rec in raftmod.flatten(obj)
+        ]
+        _bundles.ingest_records(self, records, str(query_id))
 
     def load(
         self,
@@ -485,7 +487,7 @@ class SparkStorage:
             if "id" not in obj or not preserve_ids:
                 obj["id"] = makeid(obj)
             prepared.append(raftmod.normalize_obj(obj))
-        self._write_objects(prepared, str(query_id))
+        _bundles.ingest_records(self, prepared, str(query_id))
         self.extract(viewname, sco_type, query_id, "")
         return sco_type
 
@@ -519,8 +521,8 @@ class SparkStorage:
                 obj = dict(obj)
             obj.setdefault("type", tablename)
             prepared.append(obj)
-        self._write_objects(
-            prepared, str(query_id) if query_id is not None else None
+        _bundles.ingest_records(
+            self, prepared, str(query_id) if query_id is not None else None
         )
 
     def upsert(self, cursor, tablename, obj, query_id, schema=None):
@@ -554,13 +556,14 @@ class SparkStorage:
             for obj in split:
                 if "type" not in obj:
                     raise InvalidObject("missing `type`")
-            self._write_objects(split, None)
-            # view definition itself is unchanged; clear caches so dependents
-            # see the merged rows
+            # the view definition itself is unchanged; the writes drop the
+            # table caches, so dependents see the merged rows
+            _bundles.ingest_records(self, split, None)
         else:
             # aggregate-shaped data: snapshot as a standalone table
-            recs = [dict(o) for o in objects]
-            self._write_type_batch(viewname, recs, None)
+            _bundles.ingest_records(
+                self, [{**o, "type": viewname} for o in objects], None
+            )
             self._views.pop(viewname, None)
             if viewname in self._meta:
                 # drop any persisted recipe/snapshot: the table IS the data now
@@ -582,36 +585,69 @@ class SparkStorage:
         self.ingest_dataframe(otype, df)
 
     def ingest_dataframe(self, otype: str, df: DataFrame, query_id: str | None = None):
-        """Merge an already-flattened per-type DataFrame into the warehouse —
-        the distributed-ingest entry point (see sources/bundles.py). Applies
-        the same schema normalization as the driver-side path: known
-        timestamp props become TimestampType, struct columns (un-recursed
-        custom SCO dicts) become JSON text, and narrow numerics widen to
-        long/double — the driver path writes python ints/floats as
-        BIGINT/DOUBLE, and parquet schema merge across batches refuses
-        INT-vs-BIGINT, so an engine-built frame (e.g. a log conversion
-        using int literals) must land with the wide types."""
-        from pyspark.sql.types import (
-            ByteType as _Byte,
-            FloatType as _Float,
-            IntegerType as _Int,
-            ShortType as _Short,
-            StructType as _St,
-        )
+        """Merge an already-flattened per-type DataFrame into the warehouse,
+        tagged with ``query_id`` when given: the one-type case of
+        :meth:`_ingest_frames`."""
+        self._ingest_frames({otype: df}, query_id)
 
-        drop = [c for c in ("type",) if c in df.columns]
-        df = df.drop(*drop)
+    def _ingest_frames(
+        self, frames: dict, query_id: str | None, skip_empty: bool = False
+    ) -> list:
+        """Merge ``{otype: frame}`` as one ingest call; returns the types
+        written (with ``skip_empty``, empty frames are probed and skipped).
+
+        Each type lands in its own table, so the types merge concurrently
+        from one pool: Spark schedules concurrent jobs FIFO, one type's
+        write-job tail backfills with the next type's work, and the driver
+        threads spend their time blocked on py4j reads, not the GIL. Each
+        task carries the caller's job group and local properties. After
+        every type table has landed, one ``__queries`` batch tags the ids of
+        every id-bearing frame written."""
+
+        def merge(otype: str, df: DataFrame):
+            if skip_empty and df.isEmpty():
+                return None
+            return otype, self._merge_frame(otype, df)
+
+        with futures.ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [
+                # one wrap per task: each clones the caller's properties
+                pool.submit(inheritable_thread_target(self.spark)(merge), otype, df)
+                for otype, df in frames.items()
+            ]
+            done = [r for r in (f.result() for f in futs) if r]
+        tagged = [
+            df.select(F.col("id").alias("sco_id")) for _, df in done if df is not None
+        ]
+        if query_id and tagged:
+            tags = reduce(DataFrame.unionByName, tagged).withColumn(
+                "query_id", F.lit(str(query_id))
+            )
+            self._merge_edges(QUERIES, tags, ["sco_id", "query_id"])
+        return sorted(otype for otype, _ in done)
+
+    def _merge_frame(self, otype: str, df: DataFrame) -> DataFrame | None:
+        """Normalize one type's frame and merge it; returns the normalized
+        frame when its rows are SCOs that a query tag can name.
+
+        Normalization: known timestamp props become TimestampType, struct
+        columns (un-recursed custom SCO dicts) become JSON text, narrow
+        numerics widen to long/double (parquet schema merge across batches
+        refuses INT-vs-BIGINT, so an engine-built frame, e.g. a log
+        conversion using int literals, must land with the wide types), and
+        extension columns take their short names."""
+        df = df.drop("type")
         for f in df.schema.fields:
             name = f.name
             base = name.rsplit(".", 1)[-1].rsplit(":", 1)[-1].strip("'")
             col = F.col(f"`{name}`")
             if base in TIMESTAMP_PROPS and f.dataType.simpleString() == "string":
                 df = df.withColumn(name, F.to_timestamp(col))
-            elif isinstance(f.dataType, _St):
+            elif isinstance(f.dataType, StructType):
                 df = df.withColumn(name, F.to_json(col))
-            elif isinstance(f.dataType, (_Int, _Short, _Byte)):
+            elif isinstance(f.dataType, (IntegerType, ShortType, ByteType)):
                 df = df.withColumn(name, col.cast("long"))
-            elif isinstance(f.dataType, _Float):
+            elif isinstance(f.dataType, FloatType):
                 df = df.withColumn(name, col.cast("double"))
         df = df.toDF(*[shorten_extension_name(c) for c in df.columns])
         if otype == CONTAINS:
@@ -619,139 +655,11 @@ class SparkStorage:
         elif otype == REFLIST:
             self._merge_edges(otype, df, ["ref_name", "source_ref", "target_ref"])
         elif "id" in df.columns:
-            df = self._merge_batch_dups(otype, df)
-            self._merge_upsert(otype, df)
-            if query_id:
-                tags = df.select(
-                    F.col("id").alias("sco_id"), F.lit(query_id).alias("query_id")
-                )
-                self._merge_edges(QUERIES, tags, ["sco_id", "query_id"])
+            self._merge_upsert(otype, self._merge_batch_dups(otype, df))
+            return df
         else:
             self._append(otype, df)
-
-    def _write_objects(self, objects: list, query_id: str | None):
-        by_type = defaultdict(list)
-        for obj in objects:
-            rec = {shorten_extension_name(k): v for k, v in obj.items()}
-            by_type[rec["type"]].append(rec)
-        # Per-type batches land in DIFFERENT tables, so their write jobs
-        # are independent — submit them from a small thread pool so one
-        # type's write-job tail backfills with the next type's work
-        # (Spark schedules concurrent jobs FIFO; the driver threads spend
-        # their time blocked on py4j socket reads, so the GIL is not a
-        # bottleneck). Result-determinism is unaffected: each type table
-        # sees exactly one batch per call, and the only tables touched by
-        # MULTIPLE types in one call (__queries tags, edge tables) merge
-        # across batches order-independently (distinct / groupBy-max) and
-        # serialize their batch-number assignment under the per-table
-        # write lock. Measured 3.2x on a 6-type bundle ingest.
-        items = list(by_type.items())
-        if len(items) <= 1:
-            for otype, recs in items:
-                self._write_type_batch(otype, recs, query_id)
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, len(items))) as pool:
-            futs = [
-                pool.submit(self._write_type_batch, otype, recs, query_id)
-                for otype, recs in items
-            ]
-            for f in futs:
-                f.result()
-
-    # -- schema inference / record coercion ---------------------------------
-
-    @staticmethod
-    def _infer_field(key: str, values: list) -> StructField:
-        base = key.rsplit(".", 1)[-1].rsplit(":", 1)[-1].strip("'")
-        if base in TIMESTAMP_PROPS:
-            return StructField(key, TimestampType())
-        kinds = set()
-        for v in values:
-            if v is None:
-                continue
-            if isinstance(v, bool):
-                kinds.add("bool")
-            elif isinstance(v, int):
-                kinds.add("int")
-            elif isinstance(v, float):
-                kinds.add("float")
-            elif isinstance(v, list):
-                kinds.add("list")
-            elif isinstance(v, dict):
-                kinds.add("dict")
-            else:
-                kinds.add("str")
-        if kinds == {"bool"}:
-            return StructField(key, BooleanType())
-        if kinds == {"int"}:
-            return StructField(key, LongType())
-        if kinds <= {"int", "float"} and kinds:
-            return StructField(key, DoubleType())
-        if kinds == {"list"}:
-            return StructField(key, ArrayType(StringType()))
-        return StructField(key, StringType())
-
-    @classmethod
-    def _batch_schema(cls, recs: list) -> StructType:
-        cols = {}
-        for rec in recs:
-            for k in rec:
-                if k != "type":
-                    cols.setdefault(k, []).append(rec[k])
-        fields = [cls._infer_field(k, vs) for k, vs in cols.items()]
-        return StructType(fields)
-
-    @staticmethod
-    def _coerce(value, dtype):
-        if value is None:
-            return None
-        if isinstance(dtype, TimestampType):
-            return to_datetime(value).replace(tzinfo=None)
-        if isinstance(dtype, LongType):
-            return int(value)
-        if isinstance(dtype, DoubleType):
-            return float(value)
-        if isinstance(dtype, BooleanType):
-            return bool(value)
-        if isinstance(dtype, ArrayType):
-            if not isinstance(value, (list, tuple)):
-                value = [value]
-            return [
-                v if isinstance(v, str) else json.dumps(v, sort_keys=True)
-                for v in value
-            ]
-        if isinstance(value, (dict, list)):
-            return json.dumps(value, sort_keys=True)
-        return str(value)
-
-    def _records_to_df(self, recs: list) -> DataFrame:
-        schema = self._batch_schema(recs)
-        rows = [
-            tuple(self._coerce(rec.get(f.name), f.dataType) for f in schema.fields)
-            for rec in recs
-        ]
-        return self.spark.createDataFrame(rows, schema)
-
-    # -- merge ---------------------------------------------------------------
-
-    def _write_type_batch(self, otype: str, recs: list, query_id: str | None):
-        new_df = self._records_to_df(recs)
-        if otype == CONTAINS:
-            self._merge_edges(otype, new_df, ["source_ref", "target_ref"])
-        elif otype == REFLIST:
-            self._merge_edges(otype, new_df, ["ref_name", "source_ref", "target_ref"])
-        elif "id" in new_df.columns:
-            new_df = self._merge_batch_dups(otype, new_df)
-            self._merge_upsert(otype, new_df)
-            if query_id:
-                tags = new_df.select(
-                    F.col("id").alias("sco_id"), F.lit(query_id).alias("query_id")
-                )
-                self._merge_edges(QUERIES, tags, ["sco_id", "query_id"])
-        else:
-            self._append(otype, new_df)
+        return None
 
     def _merge_batch_dups(self, otype: str, df: DataFrame) -> DataFrame:
         """Collapse duplicate ids within one batch using upsert semantics
@@ -901,7 +809,7 @@ class SparkStorage:
             if qid:
                 tags = resolve(QUERIES).filter(F.col("query_id") == qid)
                 df = df.join(
-                    tags.select(F.col("sco_id")).distinct(),
+                    tags.select(F.col("sco_id")),
                     df["id"] == F.col("sco_id"),
                     "left_semi",
                 )

@@ -10,16 +10,9 @@ re-merge via deterministic SCO ids.
 
 from __future__ import annotations
 
-import json
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StringType, StructField, StructType
 
-from firepit_spark.sources.bundles import flatten_objects, ingest_flat
-
-_BUNDLE_SCHEMA = StructType([StructField("value", StringType())])
+from firepit_spark.sources.bundles import explode_bundles, flatten_objects, ingest_flat
 
 
 def stream_bundles(
@@ -47,20 +40,9 @@ def stream_bundles(
     raw = reader.load(input_dir)
 
     def handle_batch(batch_df: DataFrame, epoch_id: int):
-        # bundle text -> one row per object json
-        def explode_bundle(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = []
-                for text in pdf["value"]:
-                    bundle = json.loads(text)
-                    out.extend(
-                        json.dumps(o) for o in bundle.get("objects", [])
-                    )
-                yield pd.DataFrame({"value": out})
-
-        objects = batch_df.mapInPandas(explode_bundle, schema=_BUNDLE_SCHEMA)
-        # same single-scan-schema merge path as batch cache_distributed
-        ingest_flat(storage, flatten_objects(objects), f"{query_id}-{epoch_id}")
+        # the same explode + flatten + merge path as batch cache_distributed
+        flat = flatten_objects(explode_bundles(batch_df))
+        ingest_flat(storage, flat, f"{query_id}-{epoch_id}")
 
     writer = raw.writeStream.foreachBatch(handle_batch).outputMode("append")
     if checkpoint_dir:

@@ -173,3 +173,84 @@ def test_streaming_ingest_backpressure(spark, tmp_path):
         q.stop()
     assert batches >= 3  # one file per micro-batch, not one giant batch
     assert st.count("observed-data") == 30  # ids overlap; upsert dedups
+
+
+def test_cache_stores_offset_timestamps_as_utc_under_any_local_tz(
+    spark, tmp_path, monkeypatch
+):
+    """The driver-side path types timestamps the way the distributed path
+    does (JVM-side, session time zone UTC), not through the Python
+    process's local time zone; mixed bool/str columns store JSON text."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        st = SparkStorage(str(tmp_path / "wh_tz"), spark=spark)
+        st.cache("q1", {"type": "bundle", "id": "bundle--tz", "objects": [
+            {"type": "observed-data", "id": "observed-data--tz1",
+             "first_observed": "2020-01-01T05:00:00+02:00",
+             "last_observed": "2020-01-01T05:00:00+02:00", "number_observed": 1,
+             "objects": {"0": {"type": "url", "value": "http://a/", "x_m": True},
+                         "1": {"type": "url", "value": "http://b/", "x_m": "b"},
+                         "2": {"type": "user-account", "user_id": "u1",
+                               "account_last_login": "2020-01-01T05:00:00+02:00"}}}]})
+
+        def as_text(table, col):
+            df = st.get_df(table)
+            return df.select(F.col(col).cast("string")).first()[0]
+
+        assert as_text("observed-data", "first_observed") == "2020-01-01 03:00:00"
+        assert as_text("user-account", "account_last_login") == "2020-01-01 03:00:00"
+        # a write-back of looked-up rows (naive local datetimes) keeps it
+        st.extract("users", "user-account", "q1", "")
+        st.reassign("users", [dict(r, x_note="seen") for r in st.lookup("users")])
+        assert as_text("user-account", "x_note") == "seen"
+        assert as_text("user-account", "account_last_login") == "2020-01-01 03:00:00"
+        mixed = {r["value"]: r["x_m"] for r in st.get_df("url").collect()}
+        assert mixed == {"http://a/": "true", "http://b/": "b"}
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_cache_distributed_rejects_files_without_objects(spark, tmp_path):
+    import pytest
+
+    path = tmp_path / "empty.json"
+    path.write_text(json.dumps({"type": "bundle", "id": "bundle--empty"}))
+    st = SparkStorage(str(tmp_path / "wh_empty"), spark=spark)
+    with pytest.raises(ValueError, match="not a STIX bundle"):
+        cache_distributed(st, "q1", str(path))
+    assert st.tables() == []
+
+
+def test_ingest_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """Every Spark job of an ingest call runs under the caller's job group,
+    including those submitted from the per-type merge pool."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bundle = make_bundle(10)
+    path = tmp_path / "b.json"
+    path.write_text(json.dumps(bundle))
+    st = SparkStorage(str(tmp_path / "wh_groups"), spark=spark)
+
+    def ungrouped():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = ungrouped()
+    try:
+        sc.setJobGroup("fp-ingest-cache", "cache")
+        st.cache("q1", bundle)
+        sc.setJobGroup("fp-ingest-dist", "cache_distributed")
+        cache_distributed(st, "q2", str(path))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert ungrouped() - before == set()
+    assert tracker.getJobIdsForGroup("fp-ingest-cache")
+    assert tracker.getJobIdsForGroup("fp-ingest-dist")
