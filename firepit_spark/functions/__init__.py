@@ -42,6 +42,18 @@ def pin(df):
     return df
 
 
+def unpin(df) -> None:
+    """Unpersist one pinned frame now and drop it from the registry (for an
+    owner that knows its frame went stale before the next :func:`release`).
+    """
+    with _pinned_lock:
+        for i, cached in enumerate(_pinned):
+            if cached is df:
+                del _pinned[i]
+                break
+    df.unpersist()
+
+
 def release(df=None) -> None:
     """Unpersist every frame the library has pinned, process-wide.
 

@@ -48,6 +48,7 @@ from firepit_spark.exceptions import (
     StixPatternError,
     UnknownViewname,
 )
+from firepit_spark.functions import pin, unpin
 from firepit_spark.identifiers import makeid
 from firepit_spark.patterns import compile_pattern, pattern_time_range
 from firepit_spark import props
@@ -119,13 +120,14 @@ class SparkStorage:
         # brand-new key.
         self._write_locks: dict[str, threading.RLock] = {}
         self._write_locks_guard = threading.Lock()
-        # memoized observation plans (r14-opt, guide §1.2/§2.4): the
-        # __contains ⋈ observed-data edge frame and the per-view triple
-        # join behind the observation-count family, shared as lazy plans
-        # (never persisted) so every op of a session composes the same
-        # canonical join (q56 plan: 28 -> 20 parquet scans).
+        # memoized observation plans: the __contains ⋈ observed-data edge
+        # frame (a lazy plan) and, per view, the triple join behind the
+        # observation-count family, pinned (functions.pin) so back-to-back
+        # value_counts / number_observed / summary / timestamped calls on
+        # one view scan it from memory instead of re-running the join.
         # Invalidation: any table write drops both levels; view
-        # (re)definition drops the per-view frames.
+        # (re)definition or removal, delete and close drop the per-view
+        # frames, and each dropped frame is unpersisted.
         self._obs_edges_df: DataFrame | None = None
         self._obs_frames: dict[str, DataFrame] = {}
         # materialized-view symtable: views snapshotted to parquet so a new
@@ -364,10 +366,19 @@ class SparkStorage:
             p = self._table_path(name)
             if not os.path.exists(p):
                 raise UnknownViewname(name)
-            raw = self.spark.read.option("mergeSchema", "true").parquet(p)
-            self._df_cache[name] = self._merge_batches(
-                name, raw, len(self._batch_numbers(p))
-            )
+            nums = self._batch_numbers(p)
+            reader = self.spark.read.option("mergeSchema", "true")
+            if nums:
+                # read the batch dirs, not the root: Spark's hidden-path
+                # filter skips names starting with "_" unless they hold "=",
+                # so a root read of __queries/__contains/__reflist logs a
+                # false "All paths were ignored" warning
+                raw = reader.option("basePath", p).parquet(
+                    *[os.path.join(p, f"{BATCH_PREFIX}{n}") for n in nums]
+                )
+            else:
+                raw = reader.parquet(p)
+            self._df_cache[name] = self._merge_batches(name, raw, len(nums))
         return self._df_cache[name]
 
     def _resolve(self, name: str) -> DataFrame:
@@ -866,9 +877,15 @@ class SparkStorage:
             (F.col("last_observed") >= F.to_timestamp(F.lit(start)))
             & (F.col("first_observed") <= F.to_timestamp(F.lit(stop)))
         )
+        # a semi join, not an inner one: Catalyst sizes an inner join as the
+        # product of its inputs and plans a sort-merge join (which AQE only
+        # demotes after two shuffle jobs), while a semi join is sized as its
+        # left side and plans as a broadcast. Rows are the same, since the
+        # consumer is itself a semi join on id.
         in_range = (
             resolve(CONTAINS)
-            .join(obs.select(F.col("id").alias("source_ref")), "source_ref")
+            .join(obs.select(F.col("id").alias("source_ref")), "source_ref",
+                  "left_semi")
             .select(F.col("target_ref").alias("id"))
         )
         return df.join(in_range, "id", "left_semi")
@@ -1059,11 +1076,11 @@ class SparkStorage:
         """Fetch a view with auto-deref + pagination, rows as dicts
         (parity: firepit/sqlstorage.py:602-665).
 
-        With a ``limit`` this collects the bounded page directly.  With no
-        limit the rows are pulled through ``toLocalIterator`` — one partition
-        in driver memory at a time instead of the whole view materialized
-        JVM-side at once (the returned list is still unbounded; callers that
-        can stream should use :meth:`lookup_iter`).
+        The rows come back in one ``collect()``: the returned list holds
+        every row on the driver anyway, so streaming them partition by
+        partition would only add a job and a socket round per partition.
+        Callers that can stream an unbounded view should use
+        :meth:`lookup_iter`.
 
         ``col_dict`` is accepted for API compatibility only: in the
         reference it is a pre-fetched column-metadata cache that avoids DB
@@ -1072,10 +1089,7 @@ class SparkStorage:
         """
         df = self._lookup_df(viewname, cols=cols, limit=limit, offset=offset)
         sco_type = self.table_type(viewname)
-        if limit:
-            rows = [r.asDict() for r in df.collect()]
-        else:
-            rows = [r.asDict() for r in df.toLocalIterator(prefetchPartitions=True)]
+        rows = [r.asDict() for r in df.collect()]
         # reference adds the type column only for '*' or when asked
         # (sqlstorage.py:661-664) — explicit cols stay exactly as given
         if sco_type and (not cols or "type" in cols):
@@ -1110,10 +1124,10 @@ class SparkStorage:
 
     def values(self, path: str, viewname: str) -> list:
         """Single-column extraction by STIX path
-        (parity: firepit/sqlstorage.py:667-683).  Unbounded by contract, so
-        pulled partition-at-a-time rather than one full JVM collect."""
-        sel = self.values_df(path, viewname)
-        return [r[0] for r in sel.toLocalIterator(prefetchPartitions=True)]
+        (parity: firepit/sqlstorage.py:667-683).  One ``collect()``: the
+        returned list holds every value on the driver anyway; stream
+        :meth:`values_df` instead when the column may not fit there."""
+        return [r[0] for r in self.values_df(path, viewname).collect()]
 
     def run_query(self, query: Query) -> list:
         return [r.asDict() for r in query.resolve(self._resolve).collect()]
@@ -1126,13 +1140,18 @@ class SparkStorage:
     _OBS_PREFIX = "__fp_obs_"
 
     def _invalidate_obs_caches(self, edges: bool = True):
-        """Drop the memoized observation plans. Called on every table write
-        (``edges=False`` keeps the __contains ⋈ observed-data frame when
-        neither of those tables changed), on view (re)definition/removal,
-        and on delete/close."""
-        self._obs_frames = {}
+        """Drop the memoized observation plans and unpersist the per-view
+        frames. Called on every table write (``edges=False`` keeps the
+        __contains ⋈ observed-data frame when neither of those tables
+        changed), on view (re)definition/removal, and on delete/close.
+        The memo dict is swapped out before its frames are unpersisted:
+        ingest-pool threads call this concurrently, and each dropped dict
+        must be walked by one caller only."""
+        dropped, self._obs_frames = self._obs_frames, {}
         if edges:
             self._obs_edges_df = None
+        for df in dropped.values():
+            unpin(df)
 
     def _obs_edges(self) -> DataFrame:
         """Memoized ``__contains ⋈ observed-data`` frame — the shared,
@@ -1169,14 +1188,20 @@ class SparkStorage:
         )
 
     def _obs_view_frame(self, viewname: str) -> DataFrame | None:
-        """Memoized triple join for one view: every view column under its
-        own name plus every observed-data column under ``__fp_obs_<name>``.
-        ``None`` — callers then take the uncached path and fail exactly
-        where the old code did — when the view has no ``id`` column
-        (nothing to join on) or already carries a ``__fp_obs_`` column
-        (the prefixed names would collide)."""
-        df = self._obs_frames.get(viewname)
-        if df is None:
+        """Memoized, pinned triple join for one view: every view column
+        under its own name plus every observed-data column under
+        ``__fp_obs_<name>``. The first aggregate over it builds the cache;
+        the rest of the family scans it from memory. A frame unpersisted
+        by :func:`~firepit_spark.functions.release` is rebuilt and pinned
+        again on its next use. ``None`` — callers then take the uncached
+        path and fail exactly where the old code did — when the view has
+        no ``id`` column (nothing to join on) or already carries a
+        ``__fp_obs_`` column (the prefixed names would collide)."""
+        # store into the dict read here: if a write swaps the memo out
+        # meanwhile, this frame (built before the write) is not memoized
+        frames = self._obs_frames
+        df = frames.get(viewname)
+        if df is None or not df.is_cached:
             v = self._resolve(viewname)
             if "id" not in v.columns or any(
                 x.startswith(self._OBS_PREFIX) for x in v.columns
@@ -1184,14 +1209,14 @@ class SparkStorage:
                 return None
             joined = self._obs_join(v)
             obs_cols = self.table_df("observed-data").columns
-            df = joined.select(
+            df = pin(joined.select(
                 *[F.col(f"v.`{x}`").alias(x) for x in v.columns],
                 *[
                     F.col(f"obs.`{x}`").alias(self._OBS_PREFIX + x)
                     for x in obs_cols
                 ],
-            )
-            self._obs_frames[viewname] = df
+            ))
+            frames[viewname] = df
         return df
 
     def _obs_path_frame(self, viewname: str, path: str):

@@ -22,6 +22,33 @@ def spark():
     yield spark
 
 
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def count_jobs(spark, fn) -> int:
+    """Run ``fn()`` under a fresh job group and return how many Spark jobs
+    it started (broadcast and AQE stage jobs inherit the group). The
+    caller's job group is restored afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS}
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def make_bundle(n_obs: int = 100) -> dict:
     """Deterministic STIX 2.0 bundle: each observation holds src+dst ipv4,
     one network-traffic, most hold a url and a user-account."""

@@ -13,7 +13,7 @@ from firepit_spark.query import (
     Query,
 )
 
-from tests.conftest import distinct_urls, url_occurrences
+from tests.conftest import count_jobs, distinct_urls, url_occurrences
 
 # bundle facts (see tests/conftest.py): 100 obs, 90 url occurrences over
 # distinct_urls() values, 14 user logins, dst 192.168.x, src 10.0.x
@@ -117,8 +117,7 @@ def test_view_spec_rebuilds_live_across_processes(store):
     }
     st2.cache("q1", extra)
     assert st2.count("urls") == n_before + 1  # live rebuild, not stale snapshot
-    """Paged lookup over a multi-batch store equals the unbounded lookup —
-    and the unbounded path streams partitions rather than one full collect."""
+    # paged lookup over a multi-batch store equals the unbounded lookup
     import copy
 
     from tests.conftest import make_bundle
@@ -719,3 +718,172 @@ def test_concurrent_ingest_across_auto_compaction(spark, tmp_path):
     assert st.table_df("url").select("id").distinct().count() == (
         n_threads * n_batches * n_rows
     )
+
+
+# -- observation memo, START/STOP filter, list reads, batch reads --------
+
+def _url_obs(n_obs: int = 100) -> list:
+    """(first_observed, number_observed, url) per url-bearing observation
+    of the conftest bundle."""
+    from tests.conftest import make_bundle
+
+    out = []
+    for o in make_bundle(n_obs)["objects"]:
+        if o["type"] != "observed-data":
+            continue
+        for sco in o["objects"].values():
+            if sco["type"] == "url":
+                out.append((o["first_observed"], o["number_observed"], sco["value"]))
+    return out
+
+
+def _spark_ts(stix: str):
+    """A STIX timestamp as PySpark hands a TIMESTAMP back (naive local)."""
+    from datetime import datetime
+
+    return datetime.fromtimestamp(
+        datetime.fromisoformat(stix.replace("Z", "+00:00")).timestamp()
+    )
+
+
+def test_obs_family_reuses_pinned_view_frame(spark, store):
+    """After value_counts builds the view's pinned triple join, summary,
+    number_observed and timestamped scan it from memory instead of
+    re-running view ⋈ __contains ⋈ observed-data."""
+    from collections import Counter
+
+    obs = _url_obs()
+    store.extract("urls", "url", "q1", "")
+    counts = store.value_counts("urls", "url:value")
+    assert {r["url:value"]: r["count"] for r in counts} == Counter(u for _, _, u in obs)
+
+    out = {}
+    jobs = {
+        "summary": count_jobs(spark, lambda: out.update(s=store.summary("urls"))),
+        "number_observed": count_jobs(
+            spark, lambda: out.update(n=store.number_observed("urls", "url:value"))
+        ),
+        "timestamped": count_jobs(
+            spark, lambda: out.update(t=store.timestamped("urls", path="url:value"))
+        ),
+    }
+    assert jobs["summary"] <= 2, jobs
+    assert jobs["number_observed"] <= 2, jobs
+    assert jobs["timestamped"] <= 3, jobs
+
+    total = sum(n for _, n, _ in obs)
+    assert out["n"] == total
+    assert out["s"] == {
+        "first_observed": _spark_ts(min(f for f, _, _ in obs)),
+        "last_observed": _spark_ts(max(f for f, _, _ in obs)),
+        "number_observed": total,
+    }
+    assert Counter((r["first_observed"], r["url:value"]) for r in out["t"]) == Counter(
+        (_spark_ts(f), u) for f, _, u in obs
+    )
+    df = store.summary_df("urls")
+    df.collect()
+    assert "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_obs_memo_unpersists_on_invalidation(spark, store):
+    """A table write and a view redefinition each unpersist the pinned
+    frame they drop, the aggregates see the new rows, and release()
+    leaves the CacheManager empty."""
+    from firepit_spark.functions import release
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    obs = _url_obs()
+    store.extract("urls", "url", "q1", "[url:value LIKE '%page/1']")
+    page1 = sum(n for _, n, u in obs if u.endswith("page/1"))
+    assert store.number_observed("urls", "url:value") == page1
+    first = store._obs_frames["urls"]
+    assert first.is_cached
+
+    store.cache("q1", {"type": "bundle", "id": "bundle--more", "objects": [
+        {"type": "identity", "id": "identity--9", "name": "x"},
+        {"type": "observed-data", "id": "observed-data--more",
+         "created_by_ref": "identity--9",
+         "first_observed": "2024-05-02T00:00:00Z",
+         "last_observed": "2024-05-02T00:00:00Z", "number_observed": 5,
+         "objects": {"0": {"type": "url", "value": "http://new.example.com/page/1"}}},
+    ]})
+    assert not first.is_cached
+    assert store.number_observed("urls", "url:value") == page1 + 5
+    second = store._obs_frames["urls"]
+    assert second.is_cached and second is not first
+
+    store.extract("urls", "url", "q1", "[url:value LIKE '%page/2']")
+    assert not second.is_cached
+    page2 = sum(n for _, n, u in obs if u.endswith("page/2"))
+    assert store.summary("urls")["number_observed"] == page2
+
+    release()
+    assert cm.isEmpty()
+    # a released frame is rebuilt and pinned again on its next use
+    assert store.number_observed("urls", "url:value") == page2
+    assert store._obs_frames["urls"].is_cached
+    release()
+    assert cm.isEmpty()
+
+
+def test_time_filter_returns_each_sco_once_without_sort_merge(spark, tmp_path):
+    """START/STOP keeps an SCO contained in several in-window observations
+    exactly once, and plans the window as broadcast semi joins. At 2,000
+    observations an inner join of __contains with the windowed
+    observations is estimated past the broadcast threshold and planned
+    as a sort-merge join."""
+    from firepit_spark.storage import SparkStorage
+    from tests.conftest import make_bundle
+
+    n_obs = 2000
+    store = SparkStorage(str(tmp_path / "wh_window"), spark=spark)
+    store.cache("q1", make_bundle(n_obs))
+    window = ("2024-05-01T12:00:00Z", "2024-05-01T12:02:00Z")
+    lo, hi = (_spark_ts(t) for t in window)
+    inside = [u for f, _, u in _url_obs(n_obs) if lo <= _spark_ts(f) <= hi]
+    assert len(inside) > len(set(inside))  # some url repeats in the window
+    store.extract(
+        "recent", "url", "q1",
+        f"[url:value LIKE 'http://%'] START t'{window[0]}' STOP t'{window[1]}'",
+        honor_qualifiers=True,
+    )
+    plan = store._resolve("recent")._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+    vals = store.values("url:value", "recent")
+    assert sorted(vals) == sorted(set(inside))
+
+
+def test_list_reads_match_streamed_rows(store):
+    """values and lookup (one collect) return the rows lookup_iter streams,
+    in the same order for a sorted view."""
+    store.extract("conns", "network-traffic", "q1", "")
+    store.assign("by_sport", "conns", op="sort", by="network-traffic:src_port",
+                 ascending=False)
+    rows = store.lookup("by_sport")
+    assert rows == list(store.lookup_iter("by_sport"))
+    ports = [r["src_port"] for r in rows]
+    assert ports == sorted(ports, reverse=True) and len(ports) == 100
+    assert store.values("network-traffic:src_port", "by_sport") == ports
+
+
+def test_multi_batch_edge_table_reads_merge(spark, tmp_path):
+    """A two-batch __contains, read through its batch dirs, merges to the
+    same rows as its one-batch compaction."""
+    import copy
+    import os
+
+    from firepit_spark.storage import CONTAINS, SparkStorage
+    from tests.conftest import make_bundle
+
+    st = SparkStorage(str(tmp_path / "wh_batches"), spark=spark)
+    st.cache("q1", copy.deepcopy(make_bundle(30)))
+    st.cache("q2", copy.deepcopy(make_bundle(60)))
+    assert len(st._batch_numbers(os.path.join(st.tables_dir, CONTAINS))) == 2
+    edges = st.table_df(CONTAINS)
+    assert "_fp_batch" not in edges.columns
+    merged = sorted(map(tuple, edges.collect()))
+    st.compact(CONTAINS)
+    st._df_cache.clear()
+    assert sorted(map(tuple, st.table_df(CONTAINS).collect())) == merged
+    assert len(merged) == len(set(merged))
