@@ -40,12 +40,10 @@ def uuid5_hex_col(name: Column, namespace_bytes: bytes = _NS_BYTES) -> Column:
 def uuid5_from_hex(h: Column) -> Column:
     """Assemble the RFC-4122 uuid5 string from its SHA1 hex digest: slice
     the digest and patch the version nibble to 5 and the variant bits to
-    10xx. Cheap (substrings + one conv); reference ``h`` as a bound
+    10xx. Cheap (substrings + one translate); reference ``h`` as a bound
     attribute when the digest expression is expensive."""
-    # variant nibble: (x & 0x3) | 0x8  ==  (x mod 4) + 8  for a hex digit
-    variant = F.lower(
-        F.conv(((F.conv(F.substring(h, 17, 1), 16, 10) % 4) + 8).cast("string"), 10, 16)
-    )
+    # variant nibble: (x & 0x3) | 0x8 for a hex digit x
+    variant = F.translate(F.substring(h, 17, 1), "0123456789abcdef", "89ab" * 4)
     return F.concat_ws(
         "-",
         F.substring(h, 1, 8),
@@ -66,59 +64,32 @@ def uuid5_col(name: Column, namespace_bytes: bytes = _NS_BYTES) -> Column:
     return uuid5_from_hex(uuid5_hex_col(name, namespace_bytes))
 
 
-def _json_escape(col: Column) -> Column:
-    """Escape a string for embedding in the canonical JSON exactly as
-    json.dumps does: backslash, quote, the short control escapes, and the
-    ujson ``\\/`` slash escape (see identifiers._canonical_json). Other
-    control characters (< 0x20) are not expected in id-contributing values
-    and are guarded by the parity fuzz test's domain."""
-    col = F.regexp_replace(col, r"\\", r"\\\\")
-    col = F.regexp_replace(col, '"', '\\\\"')
-    col = F.regexp_replace(col, "\b", "\\\\b")
-    col = F.regexp_replace(col, "\f", "\\\\f")
-    col = F.regexp_replace(col, "\n", "\\\\n")
-    col = F.regexp_replace(col, "\r", "\\\\r")
-    col = F.regexp_replace(col, "\t", "\\\\t")
-    return F.regexp_replace(col, "/", "\\\\/")
-
-
-def _render_value(col: Column, kind: str) -> Column:
+def _typed(col: Column, kind: str) -> Column:
     if kind == "int":
-        return col.cast("long").cast("string")
-    if kind == "raw":
-        # caller pre-rendered the JSON fragment (e.g. a hashes sub-object)
-        return col
+        return col.cast("long")
+    if kind == "str":
+        return col.cast("string")
     if kind == "str_list":
-        # JSON array of strings, e.g. protocols: ["tcp"]
-        return F.concat(
-            F.lit("["),
-            F.concat_ws(
-                ",",
-                F.transform(col, lambda x: F.concat(F.lit('"'), _json_escape(x), F.lit('"'))),
-            ),
-            F.lit("]"),
-        )
-    return F.concat(F.lit('"'), _json_escape(col.cast("string")), F.lit('"'))
+        # null elements render as nothing, e.g. protocols: ["tcp"]
+        return F.array_compact(col)
+    return col  # "map": a JSON sub-object, e.g. hashes: {"MD5": ...}
 
 
 def canonical_json_col(props: dict) -> Column:
     """Canonical JSON object over column-valued properties.
 
     ``props`` maps property name -> (Column, kind) with kind in
-    {"str", "int", "str_list"}. Keys are emitted sorted, null-valued
-    properties are skipped (concat_ws drops null fragments), matching
-    identifiers._canonical_json for flat values.
+    {"str", "int", "str_list", "map"}. Keys are emitted sorted and
+    null-valued properties are skipped, matching identifiers._canonical_json:
+    ``to_json`` writes compact JSON and escapes as json.dumps does (quote,
+    backslash, the short control escapes), and the ujson ``\\/`` slash
+    escape is added. Other control characters (< 0x20) are not expected in
+    id-contributing values and are outside the parity fuzz test's domain.
     """
-    fragments = []
-    for key in sorted(props):
-        col, kind = props[key]
-        fragments.append(
-            F.when(
-                col.isNotNull(),
-                F.concat(F.lit(f'"{key}":'), _render_value(col, kind)),
-            )
-        )
-    return F.concat(F.lit("{"), F.concat_ws(",", *fragments), F.lit("}"))
+    obj = F.struct(*[_typed(*props[key]).alias(key) for key in sorted(props)])
+    return F.regexp_replace(
+        F.to_json(obj, {"ignoreNullFields": "true"}), "/", "\\\\/"
+    )
 
 
 def sco_id_hex_col(props: dict) -> Column:

@@ -17,14 +17,11 @@ file listing, and every expression here stays inside whole-stage codegen.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, functions as F
 
-from firepit_spark.functions.ids import (
-    sco_id_col,
-    sco_id_from_hex,
-    sco_id_hex_col,
-    uuid5_from_hex,
-)
+from firepit_spark.functions.ids import sco_id_from_hex, sco_id_hex_col, uuid5_from_hex
 from firepit_spark.identifiers import ID_PROPS
 from firepit_spark.timestamp import TIMESTAMP_PROPS
 
@@ -314,23 +311,48 @@ def _addr_cases(v: Column) -> list:
     ]
 
 
-def _addr_ladder_from_hex(v: Column, cases: list, hex_col: Column) -> Column:
+def _addr_ladder_from_hex(v: Column, hex_col: Column) -> Column:
     """Guess-ladder id column assembled from a pre-bound uuid5 digest.
 
     All four guesses share ONE uuid5 — the canonical JSON is
     {"value": ...} regardless of the guessed type, only the ``<type>--``
     prefix differs — so the ladder is four cheap concats over the same
-    digest attribute instead of four full sha1+escape trees (the old
-    inline form carried ~24 copies of the JSON tree per id column and
-    blew the ingest stage out of whole-stage codegen; r13-opt). Identical
-    values: the old per-guess sco_id_col's random-uuid fallback was dead
-    code under the outer isNotNull guard."""
+    digest attribute."""
     u = uuid5_from_hex(hex_col)
     id_col = None
-    for otype, cond in reversed(cases):
+    for otype, cond in reversed(_addr_cases(v)):
         this = F.concat(F.lit(f"{otype}--"), u)
         id_col = this if id_col is None else F.when(cond, this).otherwise(id_col)
     return F.when(v.isNotNull(), id_col)
+
+
+def _bind_ids(wide: DataFrame, specs: dict) -> DataFrame:
+    """Bind one wave of SCO id columns onto ``wide``.
+
+    ``specs`` maps an id column name to ``(otype, props, guard)``: ``props``
+    as in :func:`sco_id_hex_col` (empty for a random ``uuid()`` id),
+    ``otype`` ``None`` for the address guess ladder over ``props["value"]``,
+    and the id is null wherever ``guard`` (if not ``None``) is false. Each
+    uuid5 digest is bound as its own column first and the id is assembled
+    from the digest attribute: inlined, the sha1 + canonical-JSON tree is
+    copied into every one of the ~10 places an id refers to its digest,
+    which overflows Janino's 64 KB method limit and drops the stage out of
+    whole-stage codegen. A later wave may refer to an earlier wave's ids.
+    """
+    digests = {f"__h_{n}": sco_id_hex_col(p) for n, (_, p, _) in specs.items() if p}
+    wide = wide.withColumns(digests)
+    ids = {}
+    for name, (otype, props, guard) in specs.items():
+        digest = F.col(f"__h_{name}")
+        if otype is None:
+            v = props["value"][0]
+            id_col = _addr_ladder_from_hex(v, digest)
+        elif props:
+            id_col = sco_id_from_hex(otype, props, digest)
+        else:
+            id_col = F.concat(F.lit(f"{otype}--"), F.expr("uuid()"))
+        ids[name] = id_col if guard is None else F.when(guard, id_col)
+    return wide.withColumns(ids).drop(*digests)
 
 
 class ScoFrames(dict):
@@ -352,6 +374,44 @@ class ScoFrames(dict):
         if self._cache is not None:
             self._cache.unpersist()
             self._cache = None
+
+
+def _addr_parts(v: Column, id_name: str) -> list:
+    """Parts (see :func:`_sco_frames`) of the address objects behind one
+    bound guess ladder, split per guessed type: the first matching case
+    wins, so each row lands in exactly one table."""
+    parts, seen = [], None
+    for otype, cond in _addr_cases(v):
+        eff = cond if seen is None else cond & ~seen
+        seen = cond if seen is None else (seen | cond)
+        parts.append((otype, id_name, [v.alias("value")], v.isNotNull() & eff))
+    return parts
+
+
+def _sco_frames(wide: DataFrame, parts: list, extra: dict) -> ScoFrames:
+    """Project the persisted ``wide`` into per-type frames and ``__contains``.
+
+    ``parts`` lists ``(otype, id column, columns, condition)``; each part
+    selects the rows where its bound id is set (or ``condition`` holds),
+    and the parts of one type are unioned. ``__contains`` is one projection
+    too: each row's observation contains every non-null bound id."""
+    out: dict[str, DataFrame] = {}
+    for otype, id_name, cols, cond in parts:
+        rows = F.col(id_name).isNotNull() if cond is None else cond
+        frame = wide.filter(rows).select(F.col(id_name).alias("id"), *cols)
+        out[otype] = (
+            frame
+            if otype not in out
+            else out[otype].unionByName(frame, allowMissingColumns=True)
+        )
+    ids = list(dict.fromkeys(id_name for _, id_name, _, _ in parts))
+    if ids:
+        edges = wide.select(
+            F.col("__obs_id").alias("source_ref"),
+            F.explode(F.array(*ids)).alias("target_ref"),
+        )
+        out["__contains"] = edges.filter(F.col("target_ref").isNotNull())
+    return ScoFrames({**out, **extra}, cache=wide)
 
 
 def wide_to_scos(wide: DataFrame, identity_id: str | None = None) -> "ScoFrames":
@@ -377,136 +437,45 @@ def wide_to_scos(wide: DataFrame, identity_id: str | None = None) -> "ScoFrames"
                 continue
         by_type.setdefault(otype, {})[rest] = p
 
-    # r13-opt: every uuid5 id expression (sha1 over canonical JSON with 8
-    # regexp escapes per string prop, 4-way guess-ladder CASE per ref
-    # path) is bound as a CONCRETE COLUMN of the persisted wide frame
-    # instead of being re-embedded in every consumer projection. Before,
-    # each per-type frame / ref frame / __contains edge / x-oca-event
-    # cross-link carried its own copy of these trees (~178 KB optimized
-    # plan for a 10-column zeek frame), and every ingest write job paid
-    # seconds of planning + whole-stage-codegen compile for 400 rows —
-    # and at scale re-ran the sha1+escape kernel once per consumer.
-    # Bound once: the kernels run once per row at cache materialization
-    # and every consumer reads an 8-byte-pointer attribute. This also
-    # closes the uuid() consistency hazard for types with no
-    # id-contributing props: their random ids are now pinned by the same
-    # cache that already pinned __obs_id.
-    # The uuid5 digests (sha1 over canonical JSON with 8 regexp escapes
-    # per string prop) are bound FIRST as their own columns, and the id
-    # columns assemble uuids from the digest ATTRIBUTES: uuid5_from_hex
-    # references its digest six times and the guess ladder four more, so
-    # inlining the digest tree at every reference made ONE bound id
-    # column ~24 JSON-tree copies of generated code — the stacked id
-    # projection blew Janino's 64 KB method limit and the whole ingest
-    # stage fell back out of whole-stage codegen (observed live on the
-    # q55/q56 fixture build; r13-opt). Staged, each projection compiles
-    # and every digest kernel runs once per row. The staging columns are
-    # dropped before the persist so the cache holds only real columns;
-    # the multi-referenced digest aliases survive CollapseProject, so
-    # the stages stay separate projections in the optimized plan.
-    addr_id_name: dict[str, str] = {}
-    addr_filters: dict[str, dict] = {}
-    addr_hex_cols: dict[str, Column] = {}
-    for i, path in enumerate(ref_cols):
-        v = F.col(f"`{path}`").cast("string")
-        addr_id_name[path] = f"__addr_id_{i}"
-        addr_filters[path] = dict(_addr_cases(v))
-        addr_hex_cols[f"__ah_{i}"] = sco_id_hex_col({"value": (v, "str")})
-    wide = wide.withColumns(addr_hex_cols)
-    id_cols: dict[str, Column] = {"__obs_id": F.concat(
-        F.lit("observed-data--"), F.expr("uuid()")
-    )}
-    for i, path in enumerate(ref_cols):
-        v = F.col(f"`{path}`").cast("string")
-        id_cols[addr_id_name[path]] = _addr_ladder_from_hex(
-            v, _addr_cases(v), F.col(f"__ah_{i}")
-        )
-    wide = wide.withColumns(id_cols)
-    addr_ids: dict[str, Column] = {
-        p: F.col(n) for p, n in addr_id_name.items()
-    }
+    def col(path: str) -> Column:
+        return F.col(f"`{path}`")
 
-    # 2a. per-type id digests (referencing the addr id ATTRIBUTES), then
-    # the id columns over the digest attributes, then persist once
-    type_contrib: dict[str, dict | None] = {}
-    type_hex_cols: dict[str, Column] = {}
-    type_hex_name: dict[str, str] = {}
+    # wave 1: observation ids and the referenced addresses' guess ladders;
+    # wave 2: one id per type, a ref contributing its target's id (parity:
+    # makeid resolves _ref props to target ids, identifiers.py:126-131),
+    # null on rows that set none of the type's paths
+    addr_ids = {path: f"__addr_id_{i}" for i, path in enumerate(ref_cols)}
+    wave1 = {"__obs_id": ("observed-data", {}, None)}
+    for path, name in addr_ids.items():
+        wave1[name] = (None, {"value": (col(path).cast("string"), "str")}, None)
+    wide = _bind_ids(wide, wave1)
+    type_ids: dict[str, str] = {}
+    type_cols: dict[str, list] = {}
+    wave2 = {}
     for j, (otype, props) in enumerate(by_type.items()):
-        id_contrib = {}
+        contrib, present = {}, list(props.values())
+        cols = [col(path).alias(prop) for prop, path in props.items()]
         for prop, path in props.items():
             if prop in ID_PROPS.get(otype, ()):
-                dtype = wide.schema[path].dataType
-                id_contrib[prop] = (F.col(f"`{path}`"), _kind(prop, dtype))
-        # refs contribute the referenced object's id (parity: makeid resolves
-        # _ref props to target ids, identifiers.py:126-131)
-        for path, (ref_otype, rname) in ref_cols.items():
-            if ref_otype == otype and rname in ID_PROPS.get(otype, ()):
-                id_contrib[rname] = (addr_ids[path], "str")
-        type_contrib[otype] = id_contrib or None
-        if id_contrib:
-            type_hex_name[otype] = f"__th_{j}"
-            type_hex_cols[f"__th_{j}"] = sco_id_hex_col(id_contrib)
-    wide = wide.withColumns(type_hex_cols)
-    type_id_name = {
-        otype: f"__tid_{i}" for i, otype in enumerate(type_contrib)
-    }
-    tid_cols: dict[str, Column] = {}
-    for otype, contrib in type_contrib.items():
-        if contrib is not None:
-            tid_cols[type_id_name[otype]] = sco_id_from_hex(
-                otype, contrib, F.col(type_hex_name[otype])
-            )
-        else:
-            tid_cols[type_id_name[otype]] = F.concat(
-                F.lit(f"{otype}--"), F.expr("uuid()")
-            )
-    wide = wide.withColumns(tid_cols).drop(
-        *addr_hex_cols, *type_hex_cols
-    ).persist()
-
-    out: dict[str, DataFrame] = {}
-
-    # 1. referenced address/domain objects, split per guessed type
-    # (first matching case wins, so each row lands in exactly one table).
-    # Under the first-match filter the bound guess-ladder column equals
-    # the per-type id expression it replaced (same branch evaluates).
-    for path, (otype, rname) in ref_cols.items():
-        v = F.col(f"`{path}`").cast("string")
-        seen = None
-        for ref_type, cond in addr_filters[path].items():
-            eff = cond if seen is None else cond & ~seen
-            seen = cond if seen is None else (seen | cond)
-            part = wide.filter(v.isNotNull() & eff).select(
-                addr_ids[path].alias("id"),
-                v.alias("value"),
-                F.col("__obs_id"),
-            )
-            out[ref_type] = (
-                part if ref_type not in out else out[ref_type].unionByName(part)
-            )
-
-    # 2b. per-type frames read the bound id/ref attributes
-    type_exprs: dict[str, tuple] = {}  # otype -> (id_col, any_set, cols)
-    for otype, props in by_type.items():
-        id_col = F.col(type_id_name[otype])
-        cols = [id_col.alias("id")]
-        any_set = None
-        for prop, path in props.items():
-            cols.append(F.col(f"`{path}`").alias(prop))
-            nn = F.col(f"`{path}`").isNotNull()
-            any_set = nn if any_set is None else (any_set | nn)
+                contrib[prop] = (col(path), _kind(prop, wide.schema[path].dataType))
         for path, (ref_otype, rname) in ref_cols.items():
             if ref_otype == otype:
-                cols.append(addr_ids[path].alias(rname))
-                nn = F.col(f"`{path}`").isNotNull()
-                any_set = nn if any_set is None else (any_set | nn)
-        type_exprs[otype] = (id_col, any_set, cols)
+                present.append(path)
+                cols.append(F.col(addr_ids[path]).alias(rname))
+                if rname in ID_PROPS.get(otype, ()):
+                    contrib[rname] = (F.col(addr_ids[path]), "str")
+        type_ids[otype], type_cols[otype] = f"__tid_{j}", cols
+        guard = reduce(Column.__or__, [col(p).isNotNull() for p in present])
+        wave2[type_ids[otype]] = (otype, contrib, guard)
+    wide = _bind_ids(wide, wave2).persist()
 
+    parts = []
+    for path, name in addr_ids.items():
+        parts += _addr_parts(col(path).cast("string"), name)
     # cross-link the event record to its sibling SCOs from the same log row
     # (parity: the x-oca-event fix-up in dict2observation,
     # firepit/woodchipper.py:265-287)
-    if "x-oca-event" in type_exprs:
-        _, ev_any, ev_cols = type_exprs["x-oca-event"]
+    if "x-oca-event" in type_cols:
         links = {
             "process": "process_ref",
             "x-oca-asset": "host_ref",
@@ -514,45 +483,16 @@ def wide_to_scos(wide: DataFrame, identity_id: str | None = None) -> "ScoFrames"
             "domain-name": "domain_ref",
         }
         for t, rname in links.items():
-            if t in type_exprs:
-                t_id, t_any, _ = type_exprs[t]
-                ref = t_id if t_any is None else F.when(t_any, t_id)
-                ev_cols.append(ref.alias(rname))
+            if t in type_ids:
+                type_cols["x-oca-event"].append(F.col(type_ids[t]).alias(rname))
+    parts += [(t, type_ids[t], cols, None) for t, cols in type_cols.items()]
 
-    for otype, (id_col, any_set, cols) in type_exprs.items():
-        df = wide.select(*cols, F.col("__obs_id"))
-        if any_set is not None:
-            df = wide.filter(any_set).select(*cols, F.col("__obs_id"))
-        out[otype] = df
-
-    # 3. observed-data
-    obs_cols = [F.col("__obs_id").alias("id")] + [
-        F.col(f"`{p}`").alias(p) for p in obs_props
-    ]
-    obs = wide.select(*obs_cols).withColumn("number_observed", F.lit(1))
+    obs = wide.select(
+        F.col("__obs_id").alias("id"), *[col(p).alias(p) for p in obs_props]
+    ).withColumn("number_observed", F.lit(1))
     if identity_id:
         obs = obs.withColumn("created_by_ref", F.lit(identity_id))
-    out["observed-data"] = obs
-
-    # 4. __contains edges (observation -> each contained SCO)
-    contains = None
-    for otype, df in out.items():
-        if otype == "observed-data":
-            continue
-        edge = df.select(
-            F.col("__obs_id").alias("source_ref"), F.col("id").alias("target_ref")
-        )
-        contains = edge if contains is None else contains.unionByName(edge)
-    if contains is not None:
-        out["__contains"] = contains
-
-    return ScoFrames(
-        {
-            k: (v.drop("__obs_id") if "__obs_id" in v.columns else v)
-            for k, v in out.items()
-        },
-        cache=wide,
-    )
+    return _sco_frames(wide, parts, {"observed-data": obs})
 
 
 # ------------------------------------------------------- windows/sysmon
@@ -560,9 +500,10 @@ def wide_to_scos(wide: DataFrame, identity_id: str | None = None) -> "ScoFrames"
 # Per-EventID node graph (parity: firepit/woodchipper.py:432-523
 # windows_mapping merged over SdsMapper.common_mapping:598-614, with the
 # split_image/split_file_path/split_reg_key_value helpers:361-400 and the
-# SdsMapper message enhancement:575-595). The reference converts row dicts
-# on the driver; here every per-EventID rule is a CASE column expression, so
-# the whole conversion is one map-only select in whole-stage codegen.
+# SdsMapper message enhancement:575-595). Every per-EventID rule is a column
+# expression and every node id is bound once in the persisted wide frame
+# (_bind_ids), so the frame's one stage compiles in whole-stage codegen and
+# each output frame is a plain projection of it.
 
 
 def _basename_col(col: Column) -> Column:
@@ -579,33 +520,29 @@ def _hash_part(col: Column, tag: str) -> Column:
     return F.nullif(F.regexp_extract(col, tag + r"=([0-9A-Fa-f]+)", 1), F.lit(""))
 
 
-def _hashes_json(md5: Column, sha1: Column, sha256: Column) -> Column:
-    """Pre-rendered canonical-JSON hashes fragment in the reference's
-    preference order (identifiers.HASH_PREFERENCE: MD5 first)."""
-    return (
-        F.when(md5.isNotNull(), F.concat(F.lit('{"MD5":"'), md5, F.lit('"}')))
-        .when(sha1.isNotNull(), F.concat(F.lit('{"SHA-1":"'), sha1, F.lit('"}')))
-        .when(sha256.isNotNull(), F.concat(F.lit('{"SHA-256":"'), sha256, F.lit('"}')))
-    )
+def _lookup(table: dict, key: Column) -> Column:
+    """``table[key]`` as a column, null for a key not in ``table``."""
+    return F.create_map(*[F.lit(x) for kv in table.items() for x in kv])[key]
 
 
-def _addr_guess_id(v: Column) -> tuple:
-    """(id column, ordered [(type, filter)]) for an address-valued string
-    (same guess ladder as _addr_split)."""
-    cases = [
-        ("mac-addr", v.rlike(MAC_RE)),
-        ("ipv4-addr", v.rlike(V4_RE)),
-        ("ipv6-addr", v.contains(":")),
-        ("domain-name", F.lit(True)),
-    ]
-    id_col = None
-    for otype, cond in reversed(cases):
-        this = sco_id_col(otype, {"value": (v, "str")})
-        id_col = this if id_col is None else F.when(cond, this).otherwise(id_col)
-    return F.when(v.isNotNull(), id_col), cases
+# Sysmon hash tag -> STIX hashes key, in the reference's id preference
+# order (identifiers.HASH_PREFERENCE: MD5 first)
+HASH_TAGS = {"MD5": "MD5", "SHA1": "'SHA-1'", "SHA256": "'SHA-256'"}
 
 
-def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> dict:
+def _hashes_map(f: str) -> Column:
+    """The id-contributing ``hashes`` of file ``f``: the first hash present
+    in preference order."""
+    out = None
+    for tag, key in HASH_TAGS.items():
+        h = F.col(f"{f}_{tag}")
+        this = F.create_map(F.lit(key.strip("'")), h)
+        present = h.isNotNull()
+        out = F.when(present, this) if out is None else out.when(present, this)
+    return out
+
+
+def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> "ScoFrames":
     """Windows/Sysmon event log -> {otype: DataFrame} node graph.
 
     Builds the process (with parent/binary/user refs), file+directory,
@@ -620,10 +557,16 @@ def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> dict:
             return F.col(f"`{name}`").cast("string")
         return F.lit(None).cast("string")
 
-    eid = src("EventID").cast("int")
+    def num(name: str) -> Column:
+        # cast from the column's own type: the string form of a JSON
+        # double ("400.0") is not a valid long
+        col = F.col(f"`{name}`") if name in have else F.lit(None)
+        return col.cast("long")
+
+    eid = num("EventID").cast("int")
 
     def by_event(spec: dict, default: Column | None = None) -> Column:
-        out = default if default is not None else F.lit(None).cast("string")
+        out = default if default is not None else F.lit(None)
         for ids, c in spec.items():
             ids = ids if isinstance(ids, tuple) else (ids,)
             out = F.when(eid.isin(*ids) & c.isNotNull(), c).otherwise(out)
@@ -637,12 +580,10 @@ def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> dict:
         {(1, 3, 5, 7, 10, 11, 12, 13): src("Image"), 4688: src("NewProcessName")},
         default=F.coalesce(src("Application"), src("ProcessName")),
     )
-    pid = by_event({4688: src("NewProcessId")}, default=src("ProcessId")).cast("long")
-    guid = src("ProcessGuid")
+    pid = by_event({4688: num("NewProcessId")}, default=num("ProcessId"))
     cmdline = by_event({(1, 7, 4688): src("CommandLine")})
-    created = F.when(eid == 1, ts)
     p_image = by_event({1: src("ParentImage"), 4688: src("ParentProcessName")})
-    p_pid = by_event({1: src("ParentProcessId"), 4688: src("ProcessId")}).cast("long")
+    p_pid = by_event({1: num("ParentProcessId"), 4688: num("ProcessId")})
     p_guid = by_event({(1, 4688): src("ParentProcessGuid")})
     p_cmdline = by_event({1: src("ParentCommandLine")})
 
@@ -653,28 +594,41 @@ def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> dict:
         src("TargetUserName"),
         src("SubjectUserName"),
     )
-    user_id = F.when(user_raw != "-", user_raw)
 
     # --- network connection (3 Sysmon, 5156 Security firewall)
     proto_num = src("Protocol")
-    proto_named = F.lit(None).cast("string")
-    for num, name in sorted(_proto_names().items()):
-        proto_named = F.when(proto_num == str(num), F.lit(name)).otherwise(proto_named)
+    proto_names = {str(n): name for n, name in _proto_names().items()}
+    proto_named = _lookup(proto_names, proto_num)
     protocol = F.lower(
         by_event({3: src("Protocol"), 5156: F.coalesce(proto_named, proto_num)})
     )
-    src_ip = by_event({3: src("SourceIp"), 5156: src("SourceAddress")})
-    dst_ip = by_event({3: src("DestinationIp"), 5156: src("DestAddress")})
-    src_port = F.when(eid.isin(3, 5156), src("SourcePort")).cast("long")
-    dst_port = by_event({3: src("DestinationPort"), 5156: src("DestPort")}).cast("long")
 
-    # --- files: process image, parent image, loaded image (7), created (11)
-    img_hashes = F.when(eid == 1, src("Hashes"))
-    loaded_hashes = F.when(eid.isin(*LOADED_FILE_EVENTS), src("Hashes"))
-    loaded_image = F.when(eid.isin(*LOADED_FILE_EVENTS), src("ImageLoaded"))
-    target_file = F.when(eid.isin(*TARGET_FILE_EVENTS), src("TargetFilename"))
-    # Sysmon 15 carries its hash in `Hash` (not `Hashes`)
-    target_hashes = F.when(eid == 15, F.coalesce(src("Hash"), src("Hashes")))
+    # --- files: process image, parent image, loaded image (6, 7), created
+    # (11, 15); prefix -> (path, Sysmon hashes string)
+    files = {
+        "img": (image, F.when(eid == 1, src("Hashes"))),
+        "p": (p_image, None),
+        "l": (
+            F.when(eid.isin(*LOADED_FILE_EVENTS), src("ImageLoaded")),
+            F.when(eid.isin(*LOADED_FILE_EVENTS), src("Hashes")),
+        ),
+        # Sysmon 15 carries its hash in `Hash` (not `Hashes`)
+        "t": (
+            F.when(eid.isin(*TARGET_FILE_EVENTS), src("TargetFilename")),
+            F.when(eid == 15, F.coalesce(src("Hash"), src("Hashes"))),
+        ),
+    }
+    file_cols = []
+    for f, (path, hashes) in files.items():
+        file_cols += [
+            path.alias(f"{f}_path"),
+            _basename_col(path).alias(f"{f}_name"),
+            _dirname_col(path).alias(f"{f}_dir"),
+        ]
+        if hashes is not None:
+            file_cols += [
+                _hash_part(hashes, tag).alias(f"{f}_{tag}") for tag in HASH_TAGS
+            ]
 
     # --- registry (12 create/delete: whole key; 13 set: key \ value name;
     # SDS 'Details: DWORD (...)' message carries the value payload)
@@ -711,312 +665,184 @@ def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> dict:
     # --- event action: EventType-derived beats Message prefix beats the
     # event-id catalog (the reference's last-write-wins dict order)
     etype = F.nullif(F.regexp_extract(msg, r"EventType: (\w+)", 1), F.lit(""))
-    etype_action = F.lit(None).cast("string")
-    for ename, code in SDS_EVENT_TYPES.items():
-        etype_action = F.when(
-            etype == ename, F.lit(f"{WINDOWS_EVENT_NAMES[code]} - {ename}")
-        ).otherwise(etype_action)
+    etype_names = {
+        e: f"{WINDOWS_EVENT_NAMES[code]} - {e}" for e, code in SDS_EVENT_TYPES.items()
+    }
     prefix_action = F.nullif(F.regexp_extract(msg, r"^([^:.]*)", 1), F.lit(""))
-    table_action = F.lit(None).cast("string")
-    for code, name in WINDOWS_EVENT_NAMES.items():
-        table_action = F.when(eid == code, F.lit(name)).otherwise(table_action)
-    action = F.coalesce(etype_action, prefix_action, table_action)
-
-    # node ids with a RANDOM fallback must be materialized inside the
-    # persisted wide frame — a uuid() evaluated per output projection would
-    # mint a different id in each frame and break ref/edge consistency
-    pproc_any_src = (
-        p_image.isNotNull()
-        | p_pid.isNotNull()
-        | p_guid.isNotNull()
-        | p_cmdline.isNotNull()
+    action = F.coalesce(
+        _lookup(etype_names, etype), prefix_action, _lookup(WINDOWS_EVENT_NAMES, eid)
     )
-    reg_any_src = reg_key.isNotNull() | reg_values.isNotNull()
 
     wide = df.select(
         eid.alias("eid"),
         ts.alias("ts"),
-        sco_id_col("process", {"x_unique_id": (guid, "str")}).alias("proc_id"),
-        F.when(
-            pproc_any_src, sco_id_col("process", {"x_unique_id": (p_guid, "str")})
-        ).alias("pproc_id"),
-        F.when(
-            reg_any_src, F.concat(F.lit("windows-registry-key--"), F.expr("uuid()"))
-        ).alias("reg_id"),
         src("Channel").alias("module"),
         src("SourceName").alias("provider"),
         F.when(src("Category").isNotNull(), F.array(src("Category"))).alias("category"),
         action.alias("action"),
         F.when(msg.isNotNull(), F.base64(F.encode(msg, "UTF-8"))).alias("payload_bin"),
         src("Hostname").alias("hostname"),
-        image.alias("image"),
         pid.alias("pid"),
-        guid.alias("guid"),
+        src("ProcessGuid").alias("guid"),
         cmdline.alias("cmdline"),
-        created.alias("created"),
-        p_image.alias("p_image"),
+        F.when(eid == 1, ts).alias("created"),
         p_pid.alias("p_pid"),
         p_guid.alias("p_guid"),
         p_cmdline.alias("p_cmdline"),
-        user_id.alias("user_id"),
+        F.when(user_raw != "-", user_raw).alias("user_id"),
         protocol.alias("protocol"),
-        src_ip.alias("src_ip"),
-        dst_ip.alias("dst_ip"),
-        src_port.alias("src_port"),
-        dst_port.alias("dst_port"),
-        img_hashes.alias("img_hashes"),
-        loaded_hashes.alias("loaded_hashes"),
-        loaded_image.alias("loaded_image"),
-        target_file.alias("target_file"),
-        target_hashes.alias("target_hashes"),
+        by_event({3: src("SourceIp"), 5156: src("SourceAddress")}).alias("src_ip"),
+        by_event({3: src("DestinationIp"), 5156: src("DestAddress")}).alias("dst_ip"),
+        F.when(eid.isin(3, 5156), num("SourcePort")).alias("src_port"),
+        by_event({3: num("DestinationPort"), 5156: num("DestPort")}).alias("dst_port"),
+        *file_cols,
         reg_key.alias("reg_key"),
         reg_values.alias("reg_values"),
         qname.alias("qname"),
         qip.alias("qip"),
-    ).withColumn(
-        "__obs_id", F.concat(F.lit("observed-data--"), F.expr("uuid()"))
-    ).persist()
+    )
 
+    # node ids, bound in the persisted wide frame (the random ones must be:
+    # a uuid() evaluated per output projection would differ per frame)
     c = F.col
-    out: dict[str, DataFrame] = {}
-    contains: list = []
 
-    def emit(otype: str, presence: Column, cols: list):
-        frame = wide.filter(presence).select(*cols, c("__obs_id"))
-        out[otype] = (
-            frame
-            if otype not in out
-            else out[otype].unionByName(frame, allowMissingColumns=True)
-        )
+    def any_set(*names: str) -> Column:
+        return reduce(Column.__or__, [c(n).isNotNull() for n in names])
 
-    # file + directory nodes: (name, dir, hashes-json, presence)
-    def file_node(path_col: Column, hashes_str: Column | None):
-        name = _basename_col(path_col)
-        dirp = _dirname_col(path_col)
-        if hashes_str is not None:
-            hj = _hashes_json(
-                _hash_part(hashes_str, "MD5"),
-                _hash_part(hashes_str, "SHA1"),
-                _hash_part(hashes_str, "SHA256"),
-            )
-        else:
-            hj = F.lit(None).cast("string")
-        dir_id = F.when(
-            path_col.isNotNull(), sco_id_col("directory", {"path": (dirp, "str")})
-        )
-        file_id = F.when(
-            path_col.isNotNull(),
-            sco_id_col(
-                "file",
-                {
-                    "name": (name, "str"),
-                    "hashes": (hj, "raw"),
-                    "parent_directory_ref": (dir_id, "str"),
-                },
-            ),
-        )
-        return name, dirp, hj, dir_id, file_id
+    def keyed(otype: str, prop: str, name: str) -> tuple:
+        return otype, {prop: (c(name), "str")}, c(name).isNotNull()
 
-    img_name, img_dir, img_hj, img_dir_id, img_file_id = file_node(
-        c("image"), c("img_hashes")
-    )
-    p_name, p_dir, _, p_dir_id, p_file_id = file_node(c("p_image"), None)
-    l_name, l_dir, l_hj, l_dir_id, l_file_id = file_node(
-        c("loaded_image"), c("loaded_hashes")
-    )
-    t_name, t_dir, t_hj, t_dir_id, t_file_id = file_node(
-        c("target_file"), c("target_hashes")
-    )
-
-    proc_id = c("proc_id")
-    pproc_any = (
-        c("p_image").isNotNull()
-        | c("p_pid").isNotNull()
-        | c("p_guid").isNotNull()
-        | c("p_cmdline").isNotNull()
-    )
-    pproc_id = c("pproc_id")
-    user_sco_id = F.when(
-        c("user_id").isNotNull(),
-        sco_id_col("user-account", {"user_id": (c("user_id"), "str")}),
-    )
-    asset_id = F.when(
-        c("hostname").isNotNull(),
-        sco_id_col("x-oca-asset", {"hostname": (c("hostname"), "str")}),
-    )
-    src_addr_id, _ = _addr_guess_id(c("src_ip"))
-    dst_addr_id, _ = _addr_guess_id(c("dst_ip"))
-    qip_id, _ = _addr_guess_id(c("qip"))
-    nt_any = (
-        c("src_ip").isNotNull()
-        | c("dst_ip").isNotNull()
-        | c("src_port").isNotNull()
-        | c("dst_port").isNotNull()
-    )
-    protocols = F.when(c("protocol").isNotNull(), F.array(c("protocol")))
-    nt_id = F.when(
-        nt_any,
-        sco_id_col(
-            "network-traffic",
-            {
-                "src_ref": (src_addr_id, "str"),
-                "dst_ref": (dst_addr_id, "str"),
-                "src_port": (c("src_port"), "int"),
-                "dst_port": (c("dst_port"), "int"),
-                "protocols": (protocols, "str_list"),
-            },
+    wave1 = {
+        "__obs_id": ("observed-data", {}, None),
+        "event_id": ("x-oca-event", {}, c("eid").isNotNull()),
+        # windows-registry-key has no contributing props (the reference's
+        # ID_PROPS carries the 'windows-registry-keys' typo, so makeid
+        # falls back to uuid4 — firepit/stix21.py:28): random id, parity
+        "reg_id": ("windows-registry-key", {}, any_set("reg_key", "reg_values")),
+        "proc_id": (
+            "process",
+            {"x_unique_id": (c("guid"), "str")},
+            any_set("pid", "guid", "img_path", "cmdline"),
         ),
-    )
-    dns_id = F.when(
-        c("qname").isNotNull(),
-        sco_id_col("domain-name", {"value": (c("qname"), "str")}),
-    )
-    # windows-registry-key has no contributing props (the reference's
-    # ID_PROPS carries the 'windows-registry-keys' typo, so makeid falls
-    # back to uuid4 — firepit/stix21.py:28): random id, reference parity
-    reg_any = c("reg_key").isNotNull() | c("reg_values").isNotNull()
-    reg_id = c("reg_id")
-    artifact_id = F.when(
-        c("payload_bin").isNotNull(),
-        sco_id_col("artifact", {"payload_bin": (c("payload_bin"), "str")}),
-    )
-    proc_any = (
-        c("pid").isNotNull()
-        | c("guid").isNotNull()
-        | c("image").isNotNull()
-        | c("cmdline").isNotNull()
-    )
+        "pproc_id": (
+            "process",
+            {"x_unique_id": (c("p_guid"), "str")},
+            any_set("p_pid", "p_guid", "p_path", "p_cmdline"),
+        ),
+        "user_ref": keyed("user-account", "user_id", "user_id"),
+        "asset_id": keyed("x-oca-asset", "hostname", "hostname"),
+        "dns_id": keyed("domain-name", "value", "qname"),
+        "artifact_id": keyed("artifact", "payload_bin", "payload_bin"),
+    }
+    for f in files:
+        wave1[f"{f}_dir_id"] = keyed("directory", "path", f"{f}_dir")
+    for ip in ("src_ip", "dst_ip", "qip"):
+        wave1[f"{ip}_id"] = (None, {"value": (c(ip), "str")}, None)
+    wide = _bind_ids(wide, wave1)
+
+    protocols = F.when(c("protocol").isNotNull(), F.array(c("protocol")))
+    nt_props = {
+        "src_ref": (c("src_ip_id"), "str"),
+        "dst_ref": (c("dst_ip_id"), "str"),
+        "src_port": (c("src_port"), "int"),
+        "dst_port": (c("dst_port"), "int"),
+        "protocols": (protocols, "str_list"),
+    }
+    wave2 = {
+        "nt_id": (
+            "network-traffic",
+            nt_props,
+            any_set("src_ip", "dst_ip", "src_port", "dst_port"),
+        )
+    }
+    for f, (_, hashes) in files.items():
+        props = {
+            "name": (c(f"{f}_name"), "str"),
+            "parent_directory_ref": (c(f"{f}_dir_id"), "str"),
+        }
+        if hashes is not None:
+            props["hashes"] = (_hashes_map(f), "map")
+        wave2[f"{f}_file_id"] = ("file", props, c(f"{f}_path").isNotNull())
+    wide = _bind_ids(wide, wave2).persist()
+
+    parts = []
+
+    def emit(otype: str, id_name: str, *cols: Column):
+        parts.append((otype, id_name, list(cols), None))
 
     # x-oca-event links (parity: dict2observation fix-up,
-    # firepit/woodchipper.py:248-287; file_ref only for file-centric events)
-    file_ref = F.when(c("eid").isin(*LOADED_FILE_EVENTS), l_file_id).when(
-        c("eid").isin(*TARGET_FILE_EVENTS), t_file_id
-    )
+    # firepit/woodchipper.py:248-287; file_ref only for the file-centric
+    # events, the only ones that set a loaded or target file)
     emit(
         "x-oca-event",
-        c("eid").isNotNull(),
-        [
-            F.concat(F.lit("x-oca-event--"), F.expr("uuid()")).alias("id"),
-            c("eid").alias("code"),
-            c("action").alias("action"),
-            c("module").alias("module"),
-            c("provider").alias("provider"),
-            c("category").alias("category"),
-            F.when(proc_any, proc_id).alias("process_ref"),
-            pproc_id.alias("parent_process_ref"),
-            nt_id.alias("network_ref"),
-            dns_id.alias("domain_ref"),
-            asset_id.alias("host_ref"),
-            file_ref.alias("file_ref"),
-        ],
+        "event_id",
+        c("eid").alias("code"),
+        c("action"),
+        c("module"),
+        c("provider"),
+        c("category"),
+        c("proc_id").alias("process_ref"),
+        c("pproc_id").alias("parent_process_ref"),
+        c("nt_id").alias("network_ref"),
+        c("dns_id").alias("domain_ref"),
+        c("asset_id").alias("host_ref"),
+        F.coalesce(c("l_file_id"), c("t_file_id")).alias("file_ref"),
     )
+    emit("x-oca-asset", "asset_id", c("hostname"))
+    emit("artifact", "artifact_id", c("payload_bin"))
     emit(
-        "x-oca-asset",
-        c("hostname").isNotNull(),
-        [asset_id.alias("id"), c("hostname").alias("hostname")],
-    )
-    emit(
-        "artifact",
-        c("payload_bin").isNotNull(),
-        [artifact_id.alias("id"), c("payload_bin").alias("payload_bin")],
+        "process",
+        "proc_id",
+        c("pid"),
+        c("guid").alias("x_unique_id"),
+        c("img_name").alias("name"),
+        c("cmdline").alias("command_line"),
+        c("created"),
+        c("img_file_id").alias("binary_ref"),
+        c("pproc_id").alias("parent_ref"),
+        c("user_ref").alias("creator_user_ref"),
     )
     emit(
         "process",
-        proc_any,
-        [
-            proc_id.alias("id"),
-            c("pid").alias("pid"),
-            c("guid").alias("x_unique_id"),
-            img_name.alias("name"),
-            c("cmdline").alias("command_line"),
-            c("created").alias("created"),
-            img_file_id.alias("binary_ref"),
-            pproc_id.alias("parent_ref"),
-            user_sco_id.alias("creator_user_ref"),
-        ],
+        "pproc_id",
+        c("p_pid").alias("pid"),
+        c("p_guid").alias("x_unique_id"),
+        c("p_name").alias("name"),
+        c("p_cmdline").alias("command_line"),
+        c("p_file_id").alias("binary_ref"),
     )
-    emit(
-        "process",
-        pproc_any,
-        [
-            pproc_id.alias("id"),
-            c("p_pid").alias("pid"),
-            c("p_guid").alias("x_unique_id"),
-            p_name.alias("name"),
-            c("p_cmdline").alias("command_line"),
-            p_file_id.alias("binary_ref"),
-        ],
-    )
-    for path_col, hashes_col, name, dirp, hj, dir_id, file_id in (
-        ("image", "img_hashes", img_name, img_dir, img_hj, img_dir_id, img_file_id),
-        ("p_image", None, p_name, p_dir, None, p_dir_id, p_file_id),
-        ("loaded_image", "loaded_hashes", l_name, l_dir, l_hj, l_dir_id, l_file_id),
-        ("target_file", "target_hashes", t_name, t_dir, t_hj, t_dir_id, t_file_id),
-    ):
-        present = c(path_col).isNotNull()
-        file_cols = [
-            file_id.alias("id"),
-            name.alias("name"),
-            dir_id.alias("parent_directory_ref"),
+    for f, (_, hashes) in files.items():
+        hash_cols = [
+            c(f"{f}_{tag}").alias(f"hashes.{key}") for tag, key in HASH_TAGS.items()
         ]
-        if hj is not None:
-            src_hashes = c(hashes_col)
-            file_cols += [
-                _hash_part(src_hashes, "MD5").alias("hashes.MD5"),
-                _hash_part(src_hashes, "SHA1").alias("hashes.'SHA-1'"),
-                _hash_part(src_hashes, "SHA256").alias("hashes.'SHA-256'"),
-            ]
-        emit("file", present, file_cols)
-        emit("directory", present, [dir_id.alias("id"), dirp.alias("path")])
-    emit(
-        "user-account",
-        c("user_id").isNotNull(),
-        [user_sco_id.alias("id"), c("user_id").alias("user_id")],
-    )
-    # address nodes split per guessed type, first match wins
-    for ip_col, addr_id in (("src_ip", src_addr_id), ("dst_ip", dst_addr_id), ("qip", qip_id)):
-        v = c(ip_col)
-        seen = None
-        for ref_type, cond_builder in _addr_guess_id(v)[1]:
-            cond = cond_builder
-            eff = cond if seen is None else cond & ~seen
-            seen = cond if seen is None else (seen | cond)
-            emit(
-                ref_type,
-                v.isNotNull() & eff,
-                [
-                    sco_id_col(ref_type, {"value": (v, "str")}).alias("id"),
-                    v.alias("value"),
-                ],
-            )
+        emit(
+            "file",
+            f"{f}_file_id",
+            c(f"{f}_name").alias("name"),
+            c(f"{f}_dir_id").alias("parent_directory_ref"),
+            *(hash_cols if hashes is not None else []),
+        )
+        emit("directory", f"{f}_dir_id", c(f"{f}_dir").alias("path"))
+    emit("user-account", "user_ref", c("user_id"))
+    for ip in ("src_ip", "dst_ip", "qip"):
+        parts += _addr_parts(c(ip), f"{ip}_id")
     emit(
         "network-traffic",
-        nt_any,
-        [
-            nt_id.alias("id"),
-            src_addr_id.alias("src_ref"),
-            dst_addr_id.alias("dst_ref"),
-            c("src_port").alias("src_port"),
-            c("dst_port").alias("dst_port"),
-            protocols.alias("protocols"),
-        ],
+        "nt_id",
+        c("src_ip_id").alias("src_ref"),
+        c("dst_ip_id").alias("dst_ref"),
+        c("src_port"),
+        c("dst_port"),
+        protocols.alias("protocols"),
     )
-    emit(
-        "domain-name",
-        c("qname").isNotNull(),
-        [dns_id.alias("id"), c("qname").alias("value")],
-    )
+    emit("domain-name", "dns_id", c("qname").alias("value"))
     emit(
         "windows-registry-key",
-        reg_any,
-        [
-            reg_id.alias("id"),
-            c("reg_key").alias("key"),
-            c("reg_values").alias("values"),
-        ],
+        "reg_id",
+        c("reg_key").alias("key"),
+        c("reg_values").alias("values"),
     )
 
-    # observed-data + containment edges
     obs_cols = [
         c("__obs_id").alias("id"),
         c("ts").alias("first_observed"),
@@ -1025,40 +851,23 @@ def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> dict:
     ]
     if identity_id:
         obs_cols.append(F.lit(identity_id).alias("created_by_ref"))
-    out["observed-data"] = wide.select(*obs_cols)
-
-    for otype, frame in list(out.items()):
-        if otype == "observed-data":
-            continue
-        contains.append(
-            frame.select(
-                c("__obs_id").alias("source_ref"), c("id").alias("target_ref")
-            )
-        )
-    edges = contains[0]
-    for e in contains[1:]:
-        edges = edges.unionByName(e)
-    out["__contains"] = edges
 
     # reflist edges: process -> network-traffic, domain-name -> resolved ip
-    conn = wide.filter(nt_any & proc_any).select(
-        F.lit("opened_connection_refs").alias("ref_name"),
-        proc_id.alias("source_ref"),
-        nt_id.alias("target_ref"),
-    )
-    resolved = wide.filter(c("qname").isNotNull() & c("qip").isNotNull()).select(
-        F.lit("resolves_to_refs").alias("ref_name"),
-        dns_id.alias("source_ref"),
-        qip_id.alias("target_ref"),
-    )
-    out["__reflist"] = conn.unionByName(resolved)
+    def reflist(name: str, source: str, target: str) -> DataFrame:
+        return wide.filter(any_set(source) & any_set(target)).select(
+            F.lit(name).alias("ref_name"),
+            c(source).alias("source_ref"),
+            c(target).alias("target_ref"),
+        )
 
-    return ScoFrames(
+    return _sco_frames(
+        wide,
+        parts,
         {
-            k: (v.drop("__obs_id") if "__obs_id" in v.columns else v)
-            for k, v in out.items()
+            "observed-data": wide.select(*obs_cols),
+            "__reflist": reflist("opened_connection_refs", "proc_id", "nt_id")
+            .unionByName(reflist("resolves_to_refs", "dns_id", "qip_id")),
         },
-        cache=wide,
     )
 
 

@@ -1,9 +1,12 @@
 """Spark-native log -> STIX conversion (sources/logs.py)."""
 
+import json
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
-from firepit_spark.identifiers import makeid
+from firepit_spark.identifiers import ID_PROPS, makeid
 from firepit_spark.sources.logs import (
     convert_log,
     detect_mapping,
@@ -185,13 +188,8 @@ def test_windows_event_cross_links(spark, tmp_path):
     assert row["host_ref.hostname"] == "HOST-1"
 
 
-def test_sysmon_event_matrix(spark, tmp_path):
-    """Per-EventID mapping breadth (parity: firepit/woodchipper.py:432-523
-    windows_mapping + SdsMapper:575-646): process create with parent/binary/
-    user refs, network connect with reflist edge, image load, file create,
-    registry value set from TargetObject+Message, DNS query resolution."""
-    from firepit_spark.sources.logs import convert_log
-
+def sysmon_matrix_df(spark):
+    """One row per Sysmon EventID shape the converter maps."""
     schema = (
         "EventID int, UtcTime string, TimeCreated string, Channel string, "
         "SourceName string, Hostname string, Image string, ProcessId int, "
@@ -236,9 +234,16 @@ def test_sysmon_event_matrix(spark, tmp_path):
         row(EventID=22, QueryName="evil.example.com",
             QueryResults="type: 5 alias;93.184.216.34;"),
     ]
-    df = spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, schema)
+
+
+def test_sysmon_event_matrix(spark, tmp_path):
+    """Per-EventID mapping breadth (parity: firepit/woodchipper.py:432-523
+    windows_mapping + SdsMapper:575-646): process create with parent/binary/
+    user refs, network connect with reflist edge, image load, file create,
+    registry value set from TargetObject+Message, DNS query resolution."""
     store = SparkStorage(str(tmp_path / "wh"), spark=spark)
-    types = convert_log(store, df, query_id="sys1")
+    types = convert_log(store, sysmon_matrix_df(spark), query_id="sys1")
     assert {"process", "file", "directory", "network-traffic", "ipv4-addr",
             "domain-name", "windows-registry-key", "user-account",
             "x-oca-event", "x-oca-asset", "observed-data", "__contains",
@@ -303,3 +308,69 @@ def test_sysmon_event_matrix(spark, tmp_path):
     obs_ids = {r["id"] for r in store.table_df("observed-data").collect()}
     edge_srcs = {r["source_ref"] for r in store.table_df("__contains").collect()}
     assert edge_srcs <= obs_ids
+
+
+def test_windows_double_pid(spark, tmp_path):
+    """A numeric column that ``spark.read.json`` types as double (a JSON
+    ``400.0``) casts to long from its own type, not via its string form."""
+    path = tmp_path / "events.json"
+    path.write_text(json.dumps({
+        "EventID": 1, "UtcTime": "2021-05-01 10:00:00", "ProcessGuid": "{d1}",
+        "Image": "C:\\w\\cmd.exe", "ProcessId": 400.0,
+        "ParentProcessGuid": "{d0}", "ParentProcessId": 4.0,
+    }) + "\n")
+    df = spark.read.json(str(path))
+    assert dict(df.dtypes)["ProcessId"] == "double"
+    store = SparkStorage(str(tmp_path / "wh"), spark=spark)
+    convert_log(store, df, query_id="dbl")
+    pids = {r["x_unique_id"]: r["pid"] for r in store.table_df("process").collect()}
+    assert pids == {"{d1}": 400, "{d0}": 4}
+
+
+def test_convert_log_without_codegen_fallback(spark, tmp_path, zeek_df):
+    """Both converters compile whole-stage codegen: with the interpreted
+    fallback switched off, a generated method over 64 KB fails the call."""
+    conf = "spark.sql.codegen.fallback"
+    saved = spark.conf.get(conf, None)
+    spark.conf.set(conf, "false")
+    try:
+        store = SparkStorage(str(tmp_path / "wh"), spark=spark)
+        assert "process" in convert_log(store, sysmon_matrix_df(spark), query_id="w")
+        assert "network-traffic" in convert_log(store, zeek_df, query_id="z")
+    finally:
+        if saved is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, saved)
+
+
+def test_windows_id_parity_and_links(spark, tmp_path):
+    """Every deterministic Windows SCO id equals makeid over the stored
+    row's contributing props, every ``__contains`` target is a stored row,
+    and each event is contained exactly once."""
+    store = SparkStorage(str(tmp_path / "wh"), spark=spark)
+    types = convert_log(store, sysmon_matrix_df(spark), query_id="sys1")
+    for otype in ("file", "directory", "process", "network-traffic",
+                  "user-account", "x-oca-asset"):
+        for r in store.table_df(otype).collect():
+            sco = {"type": otype}
+            for prop in ID_PROPS[otype]:
+                if r.asDict().get(prop) is not None:
+                    sco[prop] = r[prop]
+            if otype == "file":
+                sco["hashes"] = {
+                    k: r[f"hashes.{k}"]
+                    for k in ("MD5", "'SHA-1'", "'SHA-256'")
+                    if r[f"hashes.{k}"] is not None
+                }
+            assert r["id"] == makeid(sco), sco
+
+    stored = set()
+    for t in types:
+        if not t.startswith("__") and t != "observed-data":
+            stored |= {r["id"] for r in store.table_df(t).select("id").collect()}
+    targets = Counter(r["target_ref"] for r in store.table_df("__contains").collect())
+    assert set(targets) <= stored
+    events = {r["id"] for r in store.table_df("x-oca-event").collect()}
+    assert len(events) == 9
+    assert all(targets[e] == 1 for e in events)
