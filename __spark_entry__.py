@@ -23,7 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from firepit_spark.functions import epoch_seconds, pin
+from firepit_spark.functions import pin
 from firepit_spark.functions import dedup as dd
 from firepit_spark.functions import pipeline as pl
 from firepit_spark.functions import similarity as sim
@@ -32,7 +32,6 @@ from firepit_spark.query import (
     Aggregation,
     BinnedColumn,
     CoalescedColumn,
-    Count,
     CountUnique,
     Filter,
     Group,
@@ -46,11 +45,6 @@ from firepit_spark.query import (
     Unique,
 )
 from firepit_spark.session import testdata_resolver
-
-
-def _dec_sum(col, alias):
-    """Order-independent double sum: exact decimal accumulate, double out."""
-    return F.sum(col.cast("decimal(28,6)")).cast("double").alias(alias)
 
 
 def _resolver(spark: SparkSession, sf_dir: str):
@@ -3673,1622 +3667,6 @@ FROM base b
 """
 
 
-def q60_html_strip(spark, sf_dir):
-    """HTML → text on the JVM fast path (functions/html.strip_tags_expr —
-    a pure-Catalyst regexp_replace chain, zero Python): synthesize a
-    deterministic HTML page around each document's text (head+style
-    subtree, comment, heading, paragraph, nav list, inline script with a
-    literal '<' inside), strip it, and return the clean text. The oracle
-    rebuilds the SAME page in SQL and mirrors the SAME chain through
-    DuckDB's RE2 engine (backreference subtree pass expanded into
-    per-tag passes — equivalent on non-interleaved subtrees; entity
-    passes are no-ops here because '&' is stripped from the base text),
-    so a hash match proves two independent regex engines agree on every
-    byte of the extraction. The fidelity path (html_to_text, stdlib
-    parser + boilerplate link-density filter) is pytest-gated against
-    this expression path in tests/test_html.py."""
-    from firepit_spark.functions.html import strip_tags_expr
-
-    r = _resolver(spark, sf_dir)
-    docs = r("documents").filter(F.col("doc_id") < 2000)
-    base = F.translate(F.substring(F.col("text"), 1, 120), "<>&", "")
-    html = F.concat(
-        F.lit(
-            "<html><head><title>T</title><style>p{x}</style></head>"
-            "<body><h1>Doc "
-        ),
-        F.col("doc_id").cast("string"),
-        F.lit("</h1><!-- c --><p>"),
-        base,
-        F.lit(
-            '</p><ul><li><a href="/a">one</a></li><li>two</li></ul>'
-            "<script>var x = 1 < 2;</script></body></html>"
-        ),
-    )
-    return docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        strip_tags_expr(html).alias("clean_text"),
-    ).withColumn("n_chars", F.length("clean_text").cast("int"))
-
-
-_Q60_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         translate(substr(text, 1, 120), '<>&', '') AS base
-  FROM documents WHERE doc_id < 2000
-), h AS (
-  SELECT doc_id,
-         '<html><head><title>T</title><style>p{x}</style></head><body><h1>Doc '
-         || CAST(doc_id AS VARCHAR)
-         || '</h1><!-- c --><p>' || base
-         || '</p><ul><li><a href="/a">one</a></li><li>two</li></ul>'
-         || '<script>var x = 1 < 2;</script></body></html>' AS html
-  FROM d
-), s AS (
-  SELECT doc_id,
-    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-    regexp_replace(html,
-      '(?is)<!--.*?-->', '', 'g'),
-      '(?is)<head\b.*?</head\s*>', '', 'g'),
-      '(?is)<script\b.*?</script\s*>', '', 'g'),
-      '(?is)</?(p|div|br|li|ul|ol|h[1-6]|tr|td|th|table|blockquote|pre|section|article|header|footer|nav|aside|main|form|figure|figcaption|hr|dl|dt|dd)\b[^>]*>',
-      chr(10), 'g'),
-      '(?s)<[^>]*>', '', 'g'),
-      '[ \t\r]+', ' ', 'g'),
-      ' ?\n ?', chr(10), 'g'),
-      '\n{2,}', chr(10), 'g'),
-      '^[\n ]+|[\n ]+$', '', 'g') AS clean_text
-  FROM h
-)
-SELECT doc_id, clean_text, length(clean_text)::INT AS n_chars FROM s
-"""
-
-
-def q61_warc_pipeline(spark, sf_dir):
-    """WARC/WET web-archive source end-to-end (sources/warc.py): per
-    document, synthesize a REAL multi-member ``.warc.gz`` archive —
-    warcinfo + (even ids) request + response + conversion records, the
-    response block a raw HTTP/1.1 message that is Transfer-Encoding:
-    chunked for every third id and Content-Encoding: gzip for every
-    fifth — then push the bytes through the PRODUCTION parse path
-    (gzip member split → record parse → HTTP de-chunk → body
-    decompress → html_to_text for responses / verbatim decode for WET
-    conversions, all Arrow map-only). The oracle recomputes record
-    counts, URIs, status, and BOTH text channels from the generation
-    arithmetic, so a hash match proves byte-exact record framing,
-    chunked-body reassembly, and the two independent text routes agree
-    — parse bugs cannot hide behind plumbing. n_errs pins the
-    quarantine channel empty on well-formed archives."""
-    from firepit_spark.sources import warc as wc
-
-    r = _resolver(spark, sf_dir)
-    docs = r("documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).filter(F.col("doc_id") < 1000)
-
-    def build(batches):
-        import re as _re
-
-        import pandas as pd
-
-        drop = {ord("<"): None, ord(">"): None, ord("&"): None}
-        for pdf in batches:
-            recs = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                base = _re.sub(
-                    r"[ \t\n\r\f\v]+", " ",
-                    (text or "")[:100].translate(drop),
-                ).strip(" ")
-                uri = f"http://site{d % 20}.example/doc/{d}"
-                html = (
-                    f"<html><head><title>T</title></head><body>"
-                    f"<h1>Doc {d}</h1><p>{base}</p></body></html>"
-                )
-                records = [
-                    ({"WARC-Type": "warcinfo",
-                      "Content-Type": "application/warc-fields"},
-                     b"software: firepit-spark\r\n"),
-                ]
-                if d % 2 == 0:
-                    records.append(
-                        ({"WARC-Type": "request", "WARC-Target-URI": uri,
-                          "Content-Type":
-                              "application/http;msgtype=request"},
-                         f"GET /doc/{d} HTTP/1.1\r\nHost: x\r\n\r\n"
-                         .encode()),
-                    )
-                records.append(
-                    ({"WARC-Type": "response", "WARC-Target-URI": uri,
-                      "Content-Type": "application/http;msgtype=response"},
-                     wc.http_response_bytes(
-                         html.encode(), chunked=(d % 3 == 0),
-                         gzip_body=(d % 5 == 0),
-                     )),
-                )
-                records.append(
-                    ({"WARC-Type": "conversion", "WARC-Target-URI": uri,
-                      "Content-Type": "text/plain"},
-                     (f"Doc {d}\n{base}" if base else f"Doc {d}").encode()),
-                )
-                recs.append((str(d), wc.warc_encode(records)))
-            yield pd.DataFrame(recs, columns=["warc_file", "content"])
-
-    archives = docs.mapInPandas(
-        build, schema="warc_file string, content binary"
-    )
-    texted = wc.warc_text(wc.parse_warc_members(archives))
-    return texted.groupBy(
-        F.col("warc_file").cast("long").alias("doc_id")
-    ).agg(
-        F.count(F.lit(1)).alias("n_records"),
-        F.max("target_uri").alias("uri"),
-        F.max(
-            F.when(F.col("warc_type") == "response", F.col("http_status"))
-        ).cast("int").alias("http_status"),
-        F.max(
-            F.when(F.col("warc_type") == "response", F.col("text"))
-        ).alias("clean_text"),
-        F.max(
-            F.when(F.col("warc_type") == "conversion", F.col("text"))
-        ).alias("wet_text"),
-        F.sum(
-            F.when(F.col("err").isNotNull(), 1).otherwise(0)
-        ).cast("int").alias("n_errs"),
-    )
-
-
-_Q61_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         trim(regexp_replace(translate(substr(text, 1, 100), '<>&', ''),
-                             '[ \t\n\r\f\v]+', ' ', 'g')) AS base
-  FROM documents WHERE doc_id < 1000
-)
-SELECT doc_id,
-       CAST(4 - doc_id % 2 AS BIGINT) AS n_records,
-       'http://site' || CAST(doc_id % 20 AS VARCHAR) || '.example/doc/'
-         || CAST(doc_id AS VARCHAR) AS uri,
-       200::INT AS http_status,
-       'Doc ' || CAST(doc_id AS VARCHAR)
-         || CASE WHEN base = '' THEN '' ELSE chr(10) || base END
-         AS clean_text,
-       'Doc ' || CAST(doc_id AS VARCHAR)
-         || CASE WHEN base = '' THEN '' ELSE chr(10) || base END
-         AS wet_text,
-       0::INT AS n_errs
-FROM d
-"""
-
-
-# Frozen WordPiece vocab for q62 — ids assigned by list position from 2
-# (0/1 reserved PAD/UNK). Deliberately j-less: 'join' (and its sf1
-# '-cN' variants) must whole-word-UNK on BOTH engines. Shared between
-# the Spark leg and the SQL generator the way q60 shares its HTML
-# template: the constant is common, the ALGORITHM (greedy
-# longest-match-first with ## continuations) is implemented twice.
-_WP_VOCAB_LIST = (
-    ["the", "sort", "scan", "hash", "merge", "value", "window", "stream",
-     "part", "key",
-     "a", "b", "c", "d", "f", "g", "h", "k", "l", "m", "o", "p", "q", "r",
-     "s", "t", "v", "w"]
-    + ["##" + ch for ch in "abcdefghiklmnopqrstuvwxyz"]  # no ##j
-    + ["##le", "##er", "##ow", "##art", "##atch", "##mall", "##olumn",
-       "##ue", "##ream", "##-c"]
-    + ["##" + d for d in "0123456789"] + ["##-"]
-)
-
-
-def q62_wordpiece_encode(spark, sf_dir):
-    """Tokenizer ENCODE boundary under the driver's hash gate
-    (functions/wordpiece.py — training itself is pytest-differentialed;
-    this leg proves the inference path end-to-end): a frozen vocab is
-    loaded into a WordPieceModel and every document is greedy
-    longest-match-first encoded (Arrow mapInPandas, vocab in the task
-    closure, per-task word memo). The oracle RE-IMPLEMENTS the greedy
-    algorithm in SQL — a recursive CTE walks each distinct word,
-    picking the longest matching piece per position via a LATERAL
-    argmax, with BERT's whole-word-[UNK] fallback — and rebuilds each
-    document's token sequence with window cumulative offsets. Matching
-    n_tokens / id_sum / position-weighted checksum / n_unk therefore
-    pins every token id at every position against an independent
-    engine, including UNK semantics ('join' is deliberately
-    unencodable) and multi-char piece precedence. Spark-side the
-    checksums are document-local per-row array folds
-    (aggregate/transform lambdas) — ZERO shuffle, the plan is
-    scan → encode → project."""
-    from firepit_spark.functions import wordpiece as wp
-
-    model = wp.WordPieceModel(
-        merges=[],
-        vocab={p: i for i, p in enumerate(_WP_VOCAB_LIST, start=2)},
-    )
-    r = _resolver(spark, sf_dir)
-    docs = r("documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).filter(F.col("doc_id") < 1500)
-    enc = wp.wordpiece_encode(docs, model, text_col="text",
-                              out_col="wp_ids")
-    # per-row array folds, not posexplode+groupBy: the checksums are
-    # document-local, so JVM-side aggregate/transform lambdas compute
-    # them with ZERO shuffle — the plan is scan → encode → project
-    ids = F.coalesce(F.col("wp_ids"), F.array().cast("array<bigint>"))
-    zero = F.lit(0).cast("long")
-    return enc.select(
-        "doc_id",
-        F.size(ids).cast("long").alias("n_tokens"),
-        F.aggregate(ids, zero, lambda a, x: a + x).alias("id_sum"),
-        F.aggregate(
-            F.transform(ids, lambda x, i: x * (i + 1).cast("long")),
-            zero, lambda a, x: a + x,
-        ).alias("pos_checksum"),
-        F.size(
-            F.filter(ids, lambda x: x == F.lit(wp.UNK_ID))
-        ).cast("long").alias("n_unk"),
-    )
-
-
-def _q62_sql() -> str:
-    from firepit_spark.functions.wordpiece import UNK_ID
-
-    values = ", ".join(
-        f"('{p}', {i})" for i, p in enumerate(_WP_VOCAB_LIST, start=2)
-    )
-    return rf"""
-WITH RECURSIVE
-vocab(piece, id) AS (VALUES {values}),
-docs AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-                      ' ') AS ws
-  FROM documents WHERE doc_id < 1500
-),
-words AS (
-  SELECT DISTINCT w FROM (SELECT unnest(ws) AS w FROM docs) WHERE w <> ''
-),
-enc(w, pos, ids) AS (
-  SELECT w, 1, CAST([] AS BIGINT[]) FROM words
-  UNION ALL
-  SELECT e.w,
-         CASE WHEN m.id IS NULL THEN length(e.w) + 1
-              ELSE e.pos + m.len END,
-         CASE WHEN m.id IS NULL THEN [CAST({UNK_ID} AS BIGINT)]
-              ELSE list_append(e.ids, m.id) END
-  FROM enc e LEFT JOIN LATERAL (
-    SELECT v.id AS id,
-           length(CASE WHEN e.pos = 1 THEN v.piece
-                       ELSE substr(v.piece, 3) END) AS len
-    FROM vocab v
-    WHERE (e.pos = 1) = (v.piece NOT LIKE '##%')
-      AND substr(e.w, e.pos,
-                 length(CASE WHEN e.pos = 1 THEN v.piece
-                             ELSE substr(v.piece, 3) END))
-          = CASE WHEN e.pos = 1 THEN v.piece ELSE substr(v.piece, 3) END
-    ORDER BY len DESC LIMIT 1
-  ) m ON TRUE
-  WHERE e.pos <= length(e.w)
-),
-wstats AS (
-  SELECT w,
-         CAST(len(ids) AS BIGINT) AS n_tok,
-         CAST(list_sum(ids) AS BIGINT) AS w_id_sum,
-         CAST(list_sum(list_transform(ids, (x, i) -> x * i)) AS BIGINT)
-           AS pw_local,
-         CAST(len(list_filter(ids, x -> x = {UNK_ID})) AS BIGINT) AS w_unk
-  FROM enc WHERE pos = length(w) + 1
-),
-tok AS (
-  SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS ord
-  FROM docs
-),
-seq AS (
-  SELECT t.doc_id, s.n_tok, s.w_id_sum, s.pw_local, s.w_unk,
-         coalesce(sum(s.n_tok) OVER (
-           PARTITION BY t.doc_id ORDER BY t.ord
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0) AS cum_before
-  FROM tok t JOIN wstats s USING (w)
-  WHERE t.w <> ''
-)
-SELECT d.doc_id,
-       CAST(coalesce(sum(n_tok), 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(sum(w_id_sum), 0) AS BIGINT) AS id_sum,
-       CAST(coalesce(sum(pw_local + cum_before * w_id_sum), 0) AS BIGINT)
-         AS pos_checksum,
-       CAST(coalesce(sum(w_unk), 0) AS BIGINT) AS n_unk
-FROM docs d LEFT JOIN seq ON seq.doc_id = d.doc_id
-GROUP BY d.doc_id
-"""
-
-
-def q63_cdx_surt(spark, sf_dir):
-    """CDX crawl-index source + SURT URL canonicalization
-    (sources/cdx.py) under the driver gate — a THREE-WAY differential
-    on the urlkey: per document, a URL is built from arithmetic with
-    deliberately tricky shapes (www prefix every third id, an explicit
-    DEFAULT port every fifth — must drop, :8080 every seventh — must
-    keep, mixed-case path, unsorted query params every fourth), then
-
-    1. the pure-PYTHON twin keys it into a synthesized CDX-J line,
-    2. the production Catalyst parser (parse_cdx_lines) reads the line
-       back — urlkey/status/filename/offset/length all typed,
-    3. the pure-CATALYST expression (surt_key_expr) re-keys the parsed
-       url column JVM-side,
-
-    and the DuckDB oracle builds the EXPECTED key (host reversal, port
-    rule, lowercased path, sorted query) from the same arithmetic —
-    independent of both implementations. Plan shape: the whole leg is
-    scan → build → parse → project; the only exchange is the broadcast
-    of the 1-row quarantine count. A hash match therefore proves
-    python twin == Catalyst expr == arithmetic on every URL shape, plus
-    the CDX framing/typing round trip. n_quarantined pins the parse's
-    quarantine channel empty on well-formed lines."""
-    import json as _json
-
-    from firepit_spark.sources import cdx as cx
-
-    r = _resolver(spark, sf_dir)
-    docs = r("documents").select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    ).filter(F.col("doc_id") < 2000)
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            lines = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                scheme = "https" if d % 2 else "http"
-                host = ("www." if d % 3 == 0 else "") + (
-                    f"site{d % 20}.example.com"
-                )
-                if d % 7 == 0:
-                    port = ":8080"
-                elif d % 5 == 0:
-                    port = ":443" if scheme == "https" else ":80"
-                else:
-                    port = ""
-                query = f"?b={d % 3}&a={d % 5}" if d % 4 == 0 else ""
-                url = f"{scheme}://{host}{port}/Doc/{d}{query}"
-                meta = {
-                    "url": url, "mime": "text/html", "status": "200",
-                    "digest": "sha1:0", "length": str(100 + d % 50),
-                    "offset": str(d * 1000),
-                    "filename": f"shard{d % 10}.warc.gz",
-                }
-                lines.append(
-                    f"{cx.surt_key_py(url)} 20240601000000 "
-                    + _json.dumps(meta)
-                )
-            yield pd.DataFrame({"raw": lines})
-
-    raw = docs.mapInPandas(build, schema="raw string")
-    clean, quar = cx.parse_cdx_lines(raw)
-    n_quar = quar.agg(F.count(F.lit(1)).cast("int").alias("n"))
-    return (
-        clean.select(
-            F.regexp_extract("url", r"(?i)/doc/(\d+)", 1)
-            .cast("long").alias("doc_id"),
-            F.col("urlkey"),
-            cx.surt_key_expr("url").alias("urlkey_expr"),
-            "status", "filename", "offset", "length",
-        )
-        .crossJoin(F.broadcast(n_quar.select(F.col("n").alias("n_quarantined"))))
-    )
-
-
-_Q63_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), k AS (
-  SELECT doc_id,
-         'com,example,site' || CAST(doc_id % 20 AS VARCHAR)
-         || CASE WHEN doc_id % 7 = 0 THEN ':8080' ELSE '' END
-         || ')/doc/' || CAST(doc_id AS VARCHAR)
-         || CASE WHEN doc_id % 4 = 0
-                 THEN '?a=' || CAST(doc_id % 5 AS VARCHAR)
-                      || '&b=' || CAST(doc_id % 3 AS VARCHAR)
-                 ELSE '' END AS expected_key
-  FROM d
-)
-SELECT doc_id,
-       expected_key AS urlkey,
-       expected_key AS urlkey_expr,
-       200::INT AS status,
-       'shard' || CAST(doc_id % 10 AS VARCHAR) || '.warc.gz' AS filename,
-       CAST(doc_id * 1000 AS BIGINT) AS offset,
-       CAST(100 + doc_id % 50 AS BIGINT) AS length,
-       0::INT AS n_quarantined
-FROM k
-"""
-
-
-def q64_robots_verdict(spark, sf_dir):
-    """robots.txt compliance under the driver gate (functions/robots.py
-    — previously pytest-only): per document a URL is built from
-    arithmetic (host h{d%10}, four path families, .html suffix every
-    third id, a query string every fifth — the $-anchor case), each
-    host's robots.txt carries a specific-agent group (a per-host Allow,
-    a wildcard+anchor Disallow ``/tmp/*.html$``, nested
-    /archive//archive/p3 precedence) PLUS decoy ``*`` and ``otherbot``
-    groups that forbid far more — so group selection, longest-match
-    precedence, allow-on-tie, wildcard and anchor semantics all sit on
-    the hash. The Spark side runs the production broadcast-join +
-    struct-max plan; the oracle is an INDEPENDENT hand-derived CASE
-    ladder over the same arithmetic (precedence order worked out from
-    the rule lengths by hand, prefix/suffix string functions instead of
-    regex). The ``*`` decoy blocks /public — a selection bug that
-    merges or mis-picks groups flips those rows and breaks the hash."""
-    from firepit_spark.functions import robots as R
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    urls = (
-        r("documents").select(d.cast("long").alias("doc_id"))
-        .filter(d < 2000)
-        .select(
-            "doc_id",
-            F.concat(F.lit("h"), (d % 10).cast("string"),
-                     F.lit(".example")).alias("host"),
-            F.concat(
-                F.lit("/"),
-                F.element_at(
-                    F.array(F.lit("public"), F.lit("private"),
-                            F.lit("archive"), F.lit("tmp")),
-                    (d % 4 + 1).cast("int"),
-                ),
-                F.lit("/p"), (d % 7).cast("string"),
-                F.when(d % 3 == 0, F.lit(".html")).otherwise(F.lit("")),
-                F.when(d % 5 == 0, F.lit("?q=1")).otherwise(F.lit("")),
-            ).alias("path"),
-        )
-    )
-    robots_rows = [
-        (
-            f"h{k}.example",
-            (
-                "User-agent: *\nDisallow: /public\n\n"
-                "User-agent: testbot\n"
-                "Disallow: /private/\n"
-                f"Allow: /private/p{k}\n"
-                "Disallow: /tmp/*.html$\n"
-                "Allow: /archive\n"
-                "Disallow: /archive/p3\n\n"
-                "User-agent: otherbot\nDisallow: /\n"
-            ).encode(),
-        )
-        for k in range(10)
-    ]
-    rules = R.robots_rules(
-        spark.createDataFrame(robots_rows, "host string, content binary")
-    )
-    return R.robots_verdict(
-        urls, rules, crawler_agent="TestBot/1.0",
-        id_col="doc_id", host_col="host", path_col="path",
-    )
-
-
-_Q64_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), u AS (
-  SELECT doc_id,
-         '/' || (CASE doc_id % 4 WHEN 0 THEN 'public' WHEN 1 THEN 'private'
-                 WHEN 2 THEN 'archive' ELSE 'tmp' END)
-         || '/p' || CAST(doc_id % 7 AS VARCHAR)
-         || (CASE WHEN doc_id % 3 = 0 THEN '.html' ELSE '' END)
-         || (CASE WHEN doc_id % 5 = 0 THEN '?q=1' ELSE '' END) AS path,
-         '/private/p' || CAST(doc_id % 10 AS VARCHAR) AS host_allow
-  FROM d
-)
--- precedence ladder derived BY HAND from the rule lengths:
--- /tmp/*.html$ (12) > /private/pK (11) = /archive/p3 (11, disjoint)
--- > /private/ (9) > /archive (8); testbot's group replaces both decoys
-SELECT doc_id,
-       CASE
-         WHEN starts_with(path, '/tmp/') AND ends_with(path, '.html')
-           THEN FALSE
-         WHEN starts_with(path, host_allow) THEN TRUE
-         WHEN starts_with(path, '/archive/p3') THEN FALSE
-         WHEN starts_with(path, '/private/') THEN FALSE
-         WHEN starts_with(path, '/archive') THEN TRUE
-         ELSE TRUE
-       END AS allowed,
-       CASE
-         WHEN starts_with(path, '/tmp/') AND ends_with(path, '.html')
-           THEN '/tmp/*.html$'
-         WHEN starts_with(path, host_allow) THEN host_allow
-         WHEN starts_with(path, '/archive/p3') THEN '/archive/p3'
-         WHEN starts_with(path, '/private/') THEN '/private/'
-         WHEN starts_with(path, '/archive') THEN '/archive'
-         ELSE NULL
-       END AS matched_pattern
-FROM u
-"""
-
-
-def q65_cdx_dedup(spark, sf_dir):
-    """Pre-fetch digest dedup under the driver gate
-    (sources/cdx.py:dedup_by_digest): a synthesized index where every
-    ~300th document shares a content digest; the operator keeps ONE
-    deterministic capture per digest via a map-side-combined
-    min(struct) — the oracle independently picks the keeper with a
-    window row_number over the same (ts, urlkey, filename, offset)
-    order. Hash match proves the struct-min total order agrees with an
-    explicit sort across engines, including string-ordered urlkeys
-    ('doc/10' < 'doc/2')."""
-    from firepit_spark.sources import cdx as cx
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    cdx = (
-        r("documents").select(d.cast("long").alias("doc_id"))
-        .filter(d < 2000)
-        .select(
-            F.concat(F.lit("com,example)/doc/"), d.cast("string"))
-            .alias("urlkey"),
-            F.lit("20240601000000").alias("ts"),
-            F.concat(F.lit("http://example.com/doc/"), d.cast("string"))
-            .alias("url"),
-            F.lit("text/html").alias("mime"),
-            F.lit(200).cast("int").alias("status"),
-            F.concat(F.lit("sha1:"), (d % 300).cast("string"))
-            .alias("digest"),
-            F.concat(F.lit("shard"), (d % 10).cast("string"),
-                     F.lit(".warc.gz")).alias("filename"),
-            (d * 1000).cast("long").alias("offset"),
-            (100 + d % 50).cast("long").alias("length"),
-        )
-    )
-    return cx.dedup_by_digest(cdx).select(
-        "digest", "urlkey", "filename", "offset", "length"
-    )
-
-
-_Q65_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), c AS (
-  SELECT 'com,example)/doc/' || CAST(doc_id AS VARCHAR) AS urlkey,
-         '20240601000000' AS ts,
-         'sha1:' || CAST(doc_id % 300 AS VARCHAR) AS digest,
-         'shard' || CAST(doc_id % 10 AS VARCHAR) || '.warc.gz'
-           AS filename,
-         CAST(doc_id * 1000 AS BIGINT) AS "offset",
-         CAST(100 + doc_id % 50 AS BIGINT) AS "length"
-  FROM d
-)
-SELECT digest, urlkey, filename, "offset", "length"
-FROM c
-QUALIFY row_number() OVER (
-  PARTITION BY digest ORDER BY ts, urlkey, filename, "offset"
-) = 1
-"""
-
-
-def q66_host_pagerank(spark, sf_dir):
-    """Host-graph PageRank under the driver gate
-    (functions/graph.py:pagerank over functions/html.py:
-    host_graph_edges — the corpus-weighting consumer of the r11 edge
-    frame). Per document a (src, dst) host link is built from
-    arithmetic: sources span h0..h15, destinations h0..h22, so h16..h22
-    are DANGLING (in-links only) and their rank mass redistributes
-    every round; self-loops occur whenever d%16 == (7d+3)%23 and
-    host_graph_edges must drop them; repeated pairs fold into n_links
-    edge weights that skew the transition probabilities. The Spark
-    side runs the production path (edges -> weighted PageRank, damping
-    0.85, FIXED 5 iterations, dangling mass as a 1-row broadcast); the
-    oracle re-derives all five rounds as chained CTEs — per round a
-    dangling-mass scalar, a contribution aggregate, and the damped
-    update — entirely independently of the iterative-join
-    implementation. rank6 = round(rank, 6) absorbs float summation
-    order; the Σrank=1 invariant is pinned by tests/test_pagerank.py."""
-    from firepit_spark.functions.graph import pagerank
-    from firepit_spark.functions.html import host_graph_edges
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    links = (
-        r("documents").select(d.cast("long").alias("doc_id"))
-        .filter(d < 2000)
-        .select(
-            F.concat(F.lit("h"), (d % 16).cast("string"))
-            .alias("src_host"),
-            F.concat(F.lit("h"), ((d * 7 + 3) % 23).cast("string"))
-            .alias("dst_host"),
-        )
-    )
-    ranks = pagerank(
-        host_graph_edges(links), weight_col="n_links",
-        damping=0.85, max_iter=5,
-    )
-    return ranks.select(
-        F.col("node").alias("host"),
-        F.round("rank", 6).alias("rank6"),
-    )
-
-
-def _q66_sql(iters: int = 5, damping: float = 0.85) -> str:
-    """Chained-CTE PageRank oracle: round t+1 from round t via a
-    dangling-mass scalar + contribution aggregate — same math, zero
-    shared code with the iterative-join implementation."""
-    head = """
-WITH d AS MATERIALIZED (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), links AS MATERIALIZED (
-  SELECT 'h' || CAST(doc_id % 16 AS VARCHAR) AS src,
-         'h' || CAST((doc_id * 7 + 3) % 23 AS VARCHAR) AS dst
-  FROM d
-), e AS MATERIALIZED (
-  SELECT src, dst, COUNT(*)::DOUBLE AS w FROM links
-  WHERE src <> dst GROUP BY src, dst
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM e UNION SELECT dst FROM e
-), nn AS MATERIALIZED (
-  SELECT COUNT(*)::DOUBLE AS n FROM nodes
-), outw AS MATERIALIZED (
-  SELECT src, SUM(w) AS ow FROM e GROUP BY src
-), trans AS MATERIALIZED (
-  SELECT e.src, e.dst, e.w / outw.ow AS p
-  FROM e JOIN outw ON e.src = outw.src
-), r0 AS MATERIALIZED (
-  SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes
-)"""
-    rounds = []
-    for t in range(iters):
-        prev, cur = f"r{t}", f"r{t + 1}"
-        rounds.append(f""", dm{t} AS MATERIALIZED (
-  SELECT COALESCE(SUM(rank), 0.0) AS dm FROM {prev}
-  WHERE node NOT IN (SELECT src FROM outw)
-), c{t} AS MATERIALIZED (
-  SELECT trans.dst AS node, SUM(trans.p * {prev}.rank) AS c
-  FROM trans JOIN {prev} ON trans.src = {prev}.node
-  GROUP BY trans.dst
-), {cur} AS MATERIALIZED (
-  SELECT nodes.node,
-         (1.0 - {damping!r}) / (SELECT n FROM nn)
-         + {damping!r} * (COALESCE(c{t}.c, 0.0)
-                          + (SELECT dm FROM dm{t}) / (SELECT n FROM nn))
-           AS rank
-  FROM nodes LEFT JOIN c{t} ON nodes.node = c{t}.node
-)""")
-    tail = f"""
-SELECT node AS host, ROUND(rank, 6) AS rank6 FROM r{iters}
-"""
-    return head + "".join(rounds) + tail
-
-
-def q70_cdx_diff(spark, sf_dir):
-    """Incremental-crawl diff under the driver gate
-    (sources/cdx.py:cdx_diff + latest_capture_per_urlkey): two CDX
-    index generations are synthesized from arithmetic — membership by
-    residue classes (old: d%5≠4, new: d%7≠6) so every status (new/
-    gone/changed/unchanged) appears at ANY scale factor; content
-    changes every third id; every fourth old urlkey also carries a
-    STALE extra capture whose digest would misclassify the row if the
-    latest-capture collapse ever picked the wrong one. The Spark side
-    is the production two-collapse + full-outer-join plan; the oracle
-    rebuilds the whole diff frame (statuses, both digests, NEW-side
-    fetch coordinates, NULL patterns) from the same arithmetic. This
-    is the 100 TB refresh shape: diff ~200 GB of index, fetch only
-    'new'+'changed'."""
-    from firepit_spark.sources import cdx as cx
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    docs = r("documents").select(
-        d.cast("long").alias("doc_id")
-    ).filter(d < 2000)
-    key = F.concat(F.lit("com,example)/doc/"), d.cast("string"))
-    url = F.concat(F.lit("http://example.com/doc/"), d.cast("string"))
-
-    old = docs.filter(d % 5 != 4).select(
-        key.alias("urlkey"),
-        F.lit("20240101000000").alias("ts"),
-        url.alias("url"),
-        F.concat(F.lit("sha1:"), d.cast("string"), F.lit("v1"))
-        .alias("digest"),
-        F.lit("old.warc.gz").alias("filename"),
-        (d * 100).cast("long").alias("offset"),
-        F.lit(10).cast("long").alias("length"),
-    )
-    stale = docs.filter((d % 5 != 4) & (d % 4 == 0)).select(
-        key.alias("urlkey"),
-        F.lit("20230101000000").alias("ts"),  # older: must LOSE
-        url.alias("url"),
-        F.lit("sha1:stale").alias("digest"),
-        F.lit("older.warc.gz").alias("filename"),
-        (d * 100).cast("long").alias("offset"),
-        F.lit(10).cast("long").alias("length"),
-    )
-    new = docs.filter(d % 7 != 6).select(
-        key.alias("urlkey"),
-        F.lit("20240601000000").alias("ts"),
-        url.alias("url"),
-        F.concat(
-            F.lit("sha1:"), d.cast("string"),
-            F.when(d % 3 == 0, F.lit("v2")).otherwise(F.lit("v1")),
-        ).alias("digest"),
-        F.concat(F.lit("new"), (d % 10).cast("string"),
-                 F.lit(".warc.gz")).alias("filename"),
-        (d * 200).cast("long").alias("offset"),
-        (50 + d % 20).cast("long").alias("length"),
-    )
-    return cx.cdx_diff(old.unionByName(stale), new)
-
-
-_Q70_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), both_or_either AS (
-  SELECT doc_id,
-         (doc_id % 5 <> 4) AS in_old,
-         (doc_id % 7 <> 6) AS in_new
-  FROM d
-)
-SELECT 'com,example)/doc/' || CAST(doc_id AS VARCHAR) AS urlkey,
-       CASE WHEN NOT in_old THEN 'new'
-            WHEN NOT in_new THEN 'gone'
-            WHEN doc_id % 3 = 0 THEN 'changed'
-            ELSE 'unchanged' END AS status,
-       CASE WHEN in_old
-            THEN 'sha1:' || CAST(doc_id AS VARCHAR) || 'v1' END
-         AS old_digest,
-       CASE WHEN in_new
-            THEN 'sha1:' || CAST(doc_id AS VARCHAR)
-                 || CASE WHEN doc_id % 3 = 0 THEN 'v2' ELSE 'v1' END END
-         AS new_digest,
-       CASE WHEN in_new
-            THEN 'new' || CAST(doc_id % 10 AS VARCHAR) || '.warc.gz' END
-         AS filename,
-       CASE WHEN in_new THEN CAST(doc_id * 200 AS BIGINT) END AS offset,
-       CASE WHEN in_new THEN CAST(50 + doc_id % 20 AS BIGINT) END
-         AS length
-FROM both_or_either
-WHERE in_old OR in_new
-"""
-
-
-def q71_line_dedup(spark, sf_dir):
-    """Corpus-global LINE dedup under the driver gate
-    (functions/dedup.py:dedup_lines — the C4/RefinedWeb boilerplate
-    strip that document-level dedup cannot express): per document a
-    text is built from arithmetic with four line kinds — a navigation
-    line shared by every doc in the same d%7 host class (survives only
-    in the class's min doc id), a unique body line (always survives),
-    a footer shared by the EVEN docs of each d%3 class (survives in
-    the min even doc), a within-doc repeat of the body line every 11th
-    id (always removed — keeper is the earlier position in the SAME
-    doc), and a short 'end' line exempt via min_chars. The Spark side
-    runs the production explode → md5-keyed min(struct) → rebuild
-    plan; the oracle derives keepers directly with window mins over
-    the residue classes and rebuilds the expected text — first-
-    occurrence semantics, the exemption, order preservation and the
-    removal counts all sit on the hash."""
-    from firepit_spark.functions.dedup import dedup_lines
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    line_a = F.concat(
-        F.lit("Navigation menu for host h"), (d % 7).cast("string"),
-        F.lit(" with many links and legal text."),
-    )
-    line_b = F.concat(
-        F.lit("Document "), d.cast("string"),
-        F.lit(" body content line that is long enough to count."),
-    )
-    line_d = F.concat(
-        F.lit("Footer boilerplate for parity class f"),
-        (d % 3).cast("string"),
-        F.lit(" repeated across many documents."),
-    )
-    docs = (
-        r("documents").select(d.cast("long").alias("doc_id"))
-        .filter(d < 2000)
-        .select(
-            "doc_id",
-            F.concat_ws(  # concat_ws skips the NULL optional lines
-                "\n", line_a, line_b,
-                F.when(d % 2 == 0, line_d),
-                F.when(d % 11 == 0, line_b),
-                F.lit("end"),
-            ).alias("text"),
-        )
-    )
-    return dedup_lines(docs)
-
-
-_Q71_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), k AS (
-  SELECT doc_id,
-         doc_id % 7 AS c7, doc_id % 3 AS c3,
-         doc_id % 2 AS c2, doc_id % 11 AS c11,
-         min(doc_id) OVER (PARTITION BY doc_id % 7) AS a_keep,
-         min(CASE WHEN doc_id % 2 = 0 THEN doc_id END)
-           OVER (PARTITION BY doc_id % 3) AS d_keep
-  FROM d
-)
-SELECT doc_id,
-       concat_ws(chr(10),
-         CASE WHEN doc_id = a_keep
-              THEN 'Navigation menu for host h' || CAST(c7 AS VARCHAR)
-                   || ' with many links and legal text.' END,
-         'Document ' || CAST(doc_id AS VARCHAR)
-           || ' body content line that is long enough to count.',
-         CASE WHEN c2 = 0 AND doc_id = d_keep
-              THEN 'Footer boilerplate for parity class f'
-                   || CAST(c3 AS VARCHAR)
-                   || ' repeated across many documents.' END,
-         'end') AS text,
-       (CASE WHEN doc_id = a_keep THEN 0 ELSE 1 END
-        + CASE WHEN c2 = 0 AND doc_id <> d_keep THEN 1 ELSE 0 END
-        + CASE WHEN c11 = 0 THEN 1 ELSE 0 END)::BIGINT
-         AS n_lines_removed
-FROM k
-"""
-
-
-def q72_dup_ngram_fraction(spark, sf_dir):
-    """Cross-corpus duplicate n-gram fraction under the driver gate
-    (functions/dedup.py:duplicate_ngram_fraction — the RefinedWeb/
-    Dolma curation signal): per document a lowercase single-spaced
-    text mixes a d%5-class shared sentence, genuinely corpus-wide
-    shared words, and doc-id-bearing grams that can never repeat. The
-    Spark side runs the production explode → md5-keyed min≠max
-    verdict → join-back → per-doc fraction plan; the oracle
-    RE-IMPLEMENTS the metric from scratch in SQL (list_transform
-    3-gram construction, group-by-gram verdict, fraction) — gram
-    tokenization, the cross-doc-only rule and the rounding all sit on
-    the hash."""
-    from firepit_spark.functions.dedup import duplicate_ngram_fraction
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    docs = (
-        r("documents").select(d.cast("long").alias("doc_id"))
-        .filter(d < 2000)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("class c"), (d % 5).cast("string"),
-                F.lit(" shared sentence words here doc "),
-                d.cast("string"),
-                F.lit(" unique tail words appended now"),
-            ).alias("text"),
-        )
-    )
-    return duplicate_ngram_fraction(docs, n=3)
-
-
-_Q72_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), docs AS (
-  SELECT doc_id,
-         'class c' || CAST(doc_id % 5 AS VARCHAR)
-         || ' shared sentence words here doc '
-         || CAST(doc_id AS VARCHAR)
-         || ' unique tail words appended now' AS text
-  FROM d
-), words AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM docs
-), grams AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(w) - 1),
-                               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-           AS g
-  FROM words
-), dup AS (
-  SELECT g, (min(doc_id) <> max(doc_id)) AS is_dup FROM grams GROUP BY g
-)
-SELECT doc_id,
-       COUNT(*)::BIGINT AS n_grams,
-       ROUND(SUM(CASE WHEN is_dup THEN 1 ELSE 0 END)::DOUBLE / COUNT(*), 6)
-         AS dup_gram_frac
-FROM grams JOIN dup USING (g)
-GROUP BY doc_id
-"""
-
-
-def q73_web_funnel(spark, sf_dir):
-    """The one-plan web-corpus funnel COMPOSITION under the driver gate
-    (functions/pipeline.py:web_corpus_funnel — previously pytest-only;
-    its stages are gated individually by q21/q23/q42/q61/q64 but the
-    composition was not). Per document a real WET archive wraps the
-    document's OWN text verbatim (conversion records decode byte-exact,
-    so the oracle can reuse the proven q21/q23/q42 SQL formulas for
-    fingerprint/lang/quality); every 13th record carries an EMPTY body
-    (has_text must go false), URIs land under /secret every 9th id,
-    and robots.txt exists only for EVEN hosts — so the robots leg must
-    distinguish 'no rules at all' (allow) from 'rules, no match'
-    (allow) from 'Disallow match' (deny). The full flag ladder —
-    has_text → robots_ok → lang/lang_ok → quality/quality_ok → the
-    min-uri dedup keeper over the text fingerprint — is rebuilt by the
-    oracle stage for stage, NULL patterns included, and the whole
-    frame sits on the hash."""
-    from firepit_spark.functions import robots as rb
-    from firepit_spark.functions.pipeline import web_corpus_funnel
-    from firepit_spark.sources import warc as wc
-
-    r = _resolver(spark, sf_dir)
-    docs = r("documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).filter(F.col("doc_id") < 1000)
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            recs = []
-            for doc, text in zip(pdf["doc_id"], pdf["text"]):
-                doc = int(doc)
-                host = f"h{doc % 10}.example"
-                seg = "secret" if doc % 9 == 0 else "page"
-                uri = f"http://{host}/{seg}/{doc}"
-                body = b"" if doc % 13 == 0 else (
-                    text or "").encode("utf-8")
-                recs.append((str(doc), wc.warc_encode([
-                    ({"WARC-Type": "conversion", "WARC-Target-URI": uri,
-                      "Content-Type": "text/plain"}, body),
-                ])))
-            yield pd.DataFrame(recs, columns=["warc_file", "content"])
-
-    archives = docs.mapInPandas(
-        build, schema="warc_file string, content binary"
-    )
-    rules = rb.robots_rules(spark.createDataFrame(
-        [(f"h{k}.example", b"User-agent: *\nDisallow: /secret\n")
-         for k in range(0, 10, 2)],
-        "host string, content binary",
-    ))
-    flags = web_corpus_funnel(
-        wc.parse_warc_members(archives), robots=rules,
-        langs=("en",), min_quality=0.5,
-    )
-    return flags.select(
-        F.regexp_extract("uri", r"(\d+)$", 1).cast("long")
-        .alias("doc_id"),
-        "has_text", "robots_ok", "lang", "lang_ok",
-        F.round("quality", 6).alias("quality6"),
-        "quality_ok", "kept",
-    )
-
-
-def _q73_sql() -> str:
-    norm = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-    quality = (
-        "least(length(text) / 500.0, 1.0) * 0.4"
-        " + least(CASE WHEN len(t) > 0"
-        " THEN CAST(len(list_filter(t, x -> list_contains({sw}, x)))"
-        " AS DOUBLE) / len(t) ELSE 0.0 END * 5.0, 1.0) * 0.4"
-        " + (1.0 - least(CASE WHEN length(text) > 0"
-        " THEN CAST(length(text) - length(regexp_replace(text,"
-        " '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text)"
-        " ELSE 0.0 END * 10.0, 1.0)) * 0.2"
-    ).replace("{sw}", _sw_list("en"))
-    return f"""
-WITH d0 AS (
-  SELECT doc_id::BIGINT AS doc_id, COALESCE(text, '') AS rawtext
-  FROM documents WHERE doc_id < 1000
-), b AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 13 = 0 THEN '' ELSE rawtext END AS text,
-         'http://h' || CAST(doc_id % 10 AS VARCHAR) || '.example/'
-           || CASE WHEN doc_id % 9 = 0 THEN 'secret' ELSE 'page' END
-           || '/' || CAST(doc_id AS VARCHAR) AS uri
-  FROM d0
-), tk AS (
-  SELECT doc_id, string_split({norm}, ' ') AS t FROM b
-), f0 AS (
-  SELECT b.doc_id, b.uri, b.text, tk.t,
-         length(b.text) > 0 AS has_text,
-         (length(b.text) > 0)
-           AND NOT (b.doc_id % 9 = 0 AND b.doc_id % 2 = 0) AS robots_ok
-  FROM b JOIN tk USING (doc_id)
-), lg AS (
-  SELECT *, CASE WHEN has_text AND robots_ok
-                 THEN {_lang_case()} END AS lang
-  FROM f0
-), lo AS (
-  SELECT *, COALESCE(lang = 'en', FALSE) AS lang_ok FROM lg
-), ql AS (
-  SELECT *, CASE WHEN lang_ok THEN {quality} END AS quality,
-         md5({norm}) AS fp
-  FROM lo
-), qo AS (
-  SELECT *, COALESCE(lang_ok AND quality >= 0.5, FALSE) AS quality_ok
-  FROM ql
-), kp AS (
-  SELECT *, min(CASE WHEN quality_ok THEN uri END)
-              OVER (PARTITION BY fp) AS keeper
-  FROM qo
-)
-SELECT doc_id, has_text, robots_ok, lang, lang_ok,
-       ROUND(quality, 6) AS quality6, quality_ok,
-       COALESCE(quality_ok AND uri = keeper, FALSE) AS kept
-FROM kp
-"""
-
-
-def q74_winnow_fingerprints(spark, sf_dir):
-    """Winnowing document fingerprints under the driver gate
-    (functions/dedup.py:winnow_fingerprints — the brief's
-    'rolling hash' fingerprint family, Schleimer et al. 2003): over
-    the REAL documents text, hash every word 3-gram (the q25-proven
-    cross-engine 60-bit md5 int) and select each 8-window's minimum
-    with the rightmost tie-break, entirely document-local (the Spark
-    plan has ZERO exchanges — higher-order folds per row). The oracle
-    re-derives the selection from scratch: gram rows with positions,
-    an explicit window×position join, and a QUALIFY row_number over
-    (h ASC, pos DESC) — so gram construction, the window walk, the
-    tie-break direction and the distinct-set semantics all sit on the
-    hash."""
-    from firepit_spark.functions.dedup import winnow_fingerprints
-
-    r = _resolver(spark, sf_dir)
-    docs = r("documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).filter(F.col("doc_id") < 2000)
-    return winnow_fingerprints(docs, k=3, w=8)
-
-
-_Q74_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id, text FROM documents
-  WHERE doc_id < 2000
-), tk AS (
-  SELECT doc_id,
-         string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-                      ' ') AS t
-  FROM d
-), g AS (
-  SELECT doc_id, (n - 1)::INT AS pos,
-         ('0x' || substr(md5(t[n] || ' ' || t[n+1] || ' ' || t[n+2]),
-                         1, 15))::BIGINT AS h
-  FROM tk, UNNEST(range(1, len(t) - 1)) AS r(n)
-  WHERE len(t) >= 3
-), sz AS (
-  SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id
-), wins AS (
-  SELECT doc_id, s.s AS ws
-  FROM sz, UNNEST(range(0, greatest(n - 8, 0) + 1)) AS s(s)
-), sel AS (
-  SELECT w.doc_id, w.ws, g.pos, g.h
-  FROM wins w
-  JOIN g ON g.doc_id = w.doc_id
-        AND g.pos >= w.ws AND g.pos < w.ws + 8
-  QUALIFY row_number() OVER (
-    PARTITION BY w.doc_id, w.ws ORDER BY g.h ASC, g.pos DESC
-  ) = 1
-)
-SELECT DISTINCT doc_id, pos, h AS fp FROM sel
-"""
-
-
-# the duplicated passage q75 plants across documents (10 tokens, no
-# doc id inside, so every fully-interior 8-gram collides corpus-wide)
-_Q75_SHARED = ("quoted syndicated passage appears verbatim across "
-               "many documents in corpus")
-
-
-def q75_dedup_spans(spark, sf_dir):
-    """ExactSubstr-style duplicated-span removal under the driver gate
-    (functions/dedup.py:dedup_spans — Lee et al. 2022 semantics at
-    word granularity, n=8): synthesized docs plant a 10-token shared
-    passage mid-document for the d%5 class and AGAIN at the tail for
-    the d%7 class (so d%35 docs carry a within-document repeat),
-    against unique id-bearing surroundings; d%13 docs are shorter than
-    one gram, d%17 docs have NULL text (the join-back-contract
-    passthrough). The Spark side runs the production plan (bound token
-    array → posexplode_outer gram hashes → one (count, min(id,pos))
-    groupBy → hash join-back → interval-union rebuild); the oracle
-    RE-IMPLEMENTS the whole algorithm from scratch in SQL
-    (string_split_regex tokens, unnest(range) gram starts, a
-    row_number window for the global-first keeper, list-lambda
-    interval union + index-filtered rebuild) — tokenization, the
-    keep-first rule, overlap merging and the untouched-doc
-    byte-identity all sit on the hash."""
-    from firepit_spark.functions.dedup import dedup_spans
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    docs = (
-        r("documents").select(d.cast("long").alias("doc_id"))
-        .filter(d < 1500)
-        .select(
-            "doc_id",
-            F.when(d % 17 == 0, F.lit(None).cast("string"))
-            .when(
-                d % 13 == 0,
-                F.concat_ws(" ", F.lit("tiny doc"), d.cast("string")),
-            )
-            .otherwise(
-                F.concat_ws(
-                    " ",
-                    F.lit("doc"), d.cast("string"),
-                    F.lit("begins here now"),
-                    F.when(d % 5 == 0, F.lit(_Q75_SHARED)),
-                    F.concat(F.lit("unique body "), d.cast("string"),
-                             F.lit(" words")),
-                    F.when(d % 7 == 0, F.lit(_Q75_SHARED)),
-                    F.lit("closing line ends document"),
-                )
-            ).alias("text"),
-        )
-    )
-    return dedup_spans(docs, n=8)
-
-
-_Q75_SQL = r"""
-WITH d AS MATERIALIZED (
-  SELECT doc_id::BIGINT AS doc_id,
-         CASE
-           WHEN doc_id % 17 = 0 THEN NULL
-           WHEN doc_id % 13 = 0
-             THEN concat_ws(' ', 'tiny doc', CAST(doc_id AS VARCHAR))
-           ELSE concat_ws(' ',
-             'doc', CAST(doc_id AS VARCHAR), 'begins here now',
-             CASE WHEN doc_id % 5 = 0 THEN '{SHARED}' END,
-             'unique body ' || CAST(doc_id AS VARCHAR) || ' words',
-             CASE WHEN doc_id % 7 = 0 THEN '{SHARED}' END,
-             'closing line ends document')
-         END AS text
-  FROM documents WHERE doc_id < 1500
-), toks AS MATERIALIZED (
-  SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS t
-  FROM d WHERE text IS NOT NULL
-), grams AS MATERIALIZED (
-  SELECT doc_id, u.ps AS pos,
-         md5(array_to_string(t[u.ps + 1 : u.ps + 8], ' ')) AS h
-  FROM toks, unnest(range(0, greatest(len(t) - 7, 0))) AS u(ps)
-), marked AS MATERIALIZED (
-  SELECT doc_id, pos,
-         row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn,
-         count(*) OVER (PARTITION BY h) AS c
-  FROM grams
-), rem AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(flatten(list(range(pos, pos + 8)))) AS cov
-  FROM marked WHERE c > 1 AND rn > 1 GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CASE WHEN r.cov IS NULL THEN d.text
-            ELSE array_to_string(
-              list_filter(t.t, (x, i) -> NOT list_contains(r.cov, i - 1)),
-              ' ')
-       END AS text,
-       COALESCE(len(r.cov), 0)::BIGINT AS n_tokens_removed
-FROM d
-LEFT JOIN toks t ON d.doc_id = t.doc_id
-LEFT JOIN rem r ON d.doc_id = r.doc_id
-""".replace("{SHARED}", _Q75_SHARED)
-
-
-def q76_quality_score(spark, sf_dir):
-    """Trainable linear quality classifier under the driver gate
-    (functions/quality_clf.py — the CCNet/GPT-3 wiki-vs-crawl filter):
-    TRAIN + SCORE end-to-end, cross-engine. 300 synthesized docs
-    (even ids: clean-vocab prose + a p<id%7> residue token, label 1;
-    odd ids: spam vocab + n<id%5>, label 0) featurize to 64 hashed
-    dims (engine-portable 60-bit md5 indices, unigrams + bigrams,
-    tf over token count, bias at idx=-1) and train 3 full-batch
-    logistic GD rounds; 200 held-out docs (clean / spam / mixed /
-    NULL-text classes) score under the learned weights. The oracle
-    re-derives EVERY round as chained MATERIALIZED CTEs (feature
-    frame, e_k error frame, w_k update — zero shared code with the
-    broadcast-join implementation); round(score, 6) absorbs float
-    summation order, the q66/q69 precedent."""
-    from firepit_spark.functions.quality_clf import (
-        quality_features, quality_score, train_quality_classifier,
-    )
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    ids = r("documents").select(d.cast("long").alias("doc_id"))
-    train = ids.filter(d < 300).select(
-        "doc_id",
-        F.when(
-            d % 2 == 0,
-            F.concat(
-                F.lit("the history of science describes evidence "
-                      "theory careful p"),
-                (d % 7).cast("string"),
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit("buy cheap now click here winner free offer n"),
-                (d % 5).cast("string"),
-            )
-        ).alias("text"),
-        (F.lit(1.0) - (d % 2)).alias("label"),
-    )
-    feats = quality_features(train, dim=64)
-    labels = train.select(
-        "doc_id", F.col("label").cast("double").alias("label")
-    )
-    w = train_quality_classifier(feats, labels, iters=3, lr=1.0)
-    held = ids.filter((d >= 300) & (d < 500)).select(
-        "doc_id",
-        F.when(d % 9 == 0, F.lit(None).cast("string"))
-        .when(d % 3 == 0,
-              F.lit("history science evidence theory careful"))
-        .when(d % 3 == 1, F.lit("buy cheap click winner free"))
-        .otherwise(
-            F.concat(
-                F.lit("science theory buy cheap evidence click p"),
-                (d % 7).cast("string"),
-            )
-        ).alias("text"),
-    )
-    return quality_score(quality_features(held, dim=64), w).select(
-        "doc_id", F.round("score", 6).alias("score")
-    )
-
-
-def _q76_gd_round(k: int) -> str:
-    """One chained GD round: error frame e{k} off w{k-1}, update w{k}."""
-    return f"""e{k} AS MATERIALIZED (
-  SELECT f.doc_id,
-         1.0 / (1.0 + exp(-(sum(f.x * w.w)))) - any_value(l.label) AS e
-  FROM fx f JOIN w{k - 1} w USING (idx)
-  JOIN lab l ON f.doc_id = l.doc_id
-  GROUP BY f.doc_id
-), w{k} AS MATERIALIZED (
-  SELECT w.idx, w.w - (COALESCE(gs.g, 0.0) / (SELECT n FROM nn)) AS w
-  FROM w{k - 1} w LEFT JOIN (
-    SELECT idx, sum(x * e) AS g
-    FROM fx JOIN e{k} USING (doc_id) GROUP BY idx
-  ) gs USING (idx)
-)"""
-
-
-_Q76_SQL = (r"""
-WITH tr AS MATERIALIZED (
-  SELECT doc_id::BIGINT AS doc_id,
-         CASE WHEN doc_id % 2 = 0
-              THEN 'the history of science describes evidence theory careful p'
-                   || CAST(doc_id % 7 AS VARCHAR)
-              ELSE 'buy cheap now click here winner free offer n'
-                   || CAST(doc_id % 5 AS VARCHAR) END AS text,
-         CASE WHEN doc_id % 2 = 0 THEN 1.0 ELSE 0.0 END AS label
-  FROM documents WHERE doc_id < 300
-), tk AS MATERIALIZED (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM tr
-), g AS MATERIALIZED (
-  SELECT doc_id, t[n.n] AS gr
-  FROM tk, unnest(range(1, len(t) + 1)) AS n(n)
-  UNION ALL
-  SELECT doc_id, t[n.n] || ' ' || t[n.n + 1]
-  FROM tk, unnest(range(1, len(t))) AS n(n)
-), fx AS MATERIALIZED (
-  SELECT doc_id,
-         ('0x' || substr(md5(gr), 1, 15))::BIGINT % 64 AS idx,
-         count(*) / any_value(nt)::DOUBLE AS x
-  FROM (SELECT g.doc_id, gr, len(tk.t) AS nt
-        FROM g JOIN tk USING (doc_id))
-  GROUP BY doc_id, idx
-  UNION ALL
-  SELECT doc_id, CAST(-1 AS BIGINT) AS idx, 1.0 AS x FROM tr
-), lab AS MATERIALIZED (
-  SELECT doc_id, label FROM tr
-), nn AS MATERIALIZED (
-  SELECT count(*)::DOUBLE AS n FROM lab
-), w0 AS MATERIALIZED (
-  SELECT DISTINCT idx, 0.0::DOUBLE AS w FROM fx
-), """
-    + ", ".join(_q76_gd_round(k) for k in (1, 2, 3))
-    + r""", ho AS MATERIALIZED (
-  SELECT doc_id::BIGINT AS doc_id,
-         CASE
-           WHEN doc_id % 9 = 0 THEN NULL
-           WHEN doc_id % 3 = 0
-             THEN 'history science evidence theory careful'
-           WHEN doc_id % 3 = 1 THEN 'buy cheap click winner free'
-           ELSE 'science theory buy cheap evidence click p'
-                || CAST(doc_id % 7 AS VARCHAR)
-         END AS text
-  FROM documents WHERE doc_id >= 300 AND doc_id < 500
-), htk AS MATERIALIZED (
-  SELECT doc_id, string_split(lower(text), ' ') AS t
-  FROM ho WHERE text IS NOT NULL
-), hg AS MATERIALIZED (
-  SELECT doc_id, t[n.n] AS gr
-  FROM htk, unnest(range(1, len(t) + 1)) AS n(n)
-  UNION ALL
-  SELECT doc_id, t[n.n] || ' ' || t[n.n + 1]
-  FROM htk, unnest(range(1, len(t))) AS n(n)
-), hfx AS MATERIALIZED (
-  SELECT doc_id,
-         ('0x' || substr(md5(gr), 1, 15))::BIGINT % 64 AS idx,
-         count(*) / any_value(nt)::DOUBLE AS x
-  FROM (SELECT hg.doc_id, gr, len(htk.t) AS nt
-        FROM hg JOIN htk USING (doc_id))
-  GROUP BY doc_id, idx
-  UNION ALL
-  SELECT doc_id, CAST(-1 AS BIGINT) AS idx, 1.0 AS x FROM ho
-)
-SELECT h.doc_id,
-       round(1.0 / (1.0 + exp(-(sum(h.x * COALESCE(w3.w, 0.0))))), 6)
-         AS score
-FROM hfx h LEFT JOIN w3 USING (idx)
-GROUP BY h.doc_id
-""")
-
-
-def q69_host_hits(spark, sf_dir):
-    """HITS hubs/authorities under the driver gate
-    (functions/graph.py:hits) — same synthesized host graph as
-    q66_host_pagerank (dangling hosts, dropped self-loops, n_links
-    weights), so the two centrality slots are directly comparable. The
-    Spark side runs 5 fixed power-iteration rounds with L2
-    normalization after each half-step; the oracle re-derives every
-    round as chained CTEs (raw sum join, sqrt-norm scalar, normalized
-    full frame — twice per round) sharing zero code with the
-    iterative-join implementation. hub6/auth6 = round(·, 6) absorbs
-    float summation order; the unit-L2 invariant is pinned by
-    tests/test_pagerank.py."""
-    from firepit_spark.functions.graph import hits
-    from firepit_spark.functions.html import host_graph_edges
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    links = (
-        r("documents").select(d.cast("long").alias("doc_id"))
-        .filter(d < 2000)
-        .select(
-            F.concat(F.lit("h"), (d % 16).cast("string"))
-            .alias("src_host"),
-            F.concat(F.lit("h"), ((d * 7 + 3) % 23).cast("string"))
-            .alias("dst_host"),
-        )
-    )
-    out = hits(
-        host_graph_edges(links), weight_col="n_links", max_iter=5
-    )
-    return out.select(
-        F.col("node").alias("host"),
-        F.round("hub", 6).alias("hub6"),
-        F.round("authority", 6).alias("auth6"),
-    )
-
-
-def _q69_sql(iters: int = 5) -> str:
-    """Chained-CTE HITS oracle: per round an authority sum-join, its
-    L2-norm scalar, the normalized frame, then the same for hubs."""
-    head = """
-WITH d AS MATERIALIZED (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 2000
-), links AS MATERIALIZED (
-  SELECT 'h' || CAST(doc_id % 16 AS VARCHAR) AS src,
-         'h' || CAST((doc_id * 7 + 3) % 23 AS VARCHAR) AS dst
-  FROM d
-), e AS MATERIALIZED (
-  SELECT src, dst, COUNT(*)::DOUBLE AS w FROM links
-  WHERE src <> dst GROUP BY src, dst
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM e UNION SELECT dst FROM e
-), h0 AS MATERIALIZED (
-  SELECT node, 1.0 AS hub FROM nodes
-)"""
-    rounds = []
-    for t in range(iters):
-        rounds.append(f""", ar{t} AS MATERIALIZED (
-  SELECT e.dst AS node, SUM(e.w * h{t}.hub) AS a
-  FROM e JOIN h{t} ON e.src = h{t}.node GROUP BY e.dst
-), an{t} AS MATERIALIZED (
-  SELECT sqrt(SUM(a * a)) AS n FROM ar{t}
-), a{t + 1} AS MATERIALIZED (
-  SELECT nodes.node,
-         CASE WHEN (SELECT n FROM an{t}) > 0
-              THEN COALESCE(ar{t}.a, 0.0) / (SELECT n FROM an{t})
-              ELSE 0.0 END AS auth
-  FROM nodes LEFT JOIN ar{t} ON nodes.node = ar{t}.node
-), hr{t} AS MATERIALIZED (
-  SELECT e.src AS node, SUM(e.w * a{t + 1}.auth) AS h
-  FROM e JOIN a{t + 1} ON e.dst = a{t + 1}.node GROUP BY e.src
-), hn{t} AS MATERIALIZED (
-  SELECT sqrt(SUM(h * h)) AS n FROM hr{t}
-), h{t + 1} AS MATERIALIZED (
-  SELECT nodes.node,
-         CASE WHEN (SELECT n FROM hn{t}) > 0
-              THEN COALESCE(hr{t}.h, 0.0) / (SELECT n FROM hn{t})
-              ELSE 0.0 END AS hub
-  FROM nodes LEFT JOIN hr{t} ON nodes.node = hr{t}.node
-)""")
-    tail = f"""
-SELECT h{iters}.node AS host, ROUND(h{iters}.hub, 6) AS hub6,
-       ROUND(a{iters}.auth, 6) AS auth6
-FROM h{iters} JOIN a{iters} ON h{iters}.node = a{iters}.node
-"""
-    return head + "".join(rounds) + tail
-
-
-def q67_wat_links(spark, sf_dir):
-    """WAT metadata records under the driver gate (sources/warc.py:
-    wat_metadata + wat_links): per document, synthesize a real
-    ``.warc.gz`` whose response HTML carries a deterministic title and
-    link set (1 + d%3 relative links, plus an absolute external link
-    every fourth id), push it through the PRODUCTION chain — archive
-    parse → HTTP parse → wat_metadata envelope JSON → the pure-Catalyst
-    ``wat_links`` unpack (from_json against WAT_ENVELOPE_SCHEMA +
-    explode) — and emit one row per outlink. The oracle recomputes the
-    exact (doc_id, title, href) set from the generation arithmetic, so
-    a hash match proves the envelope JSON the python side WRITES agrees
-    field-for-field with the Catalyst schema the JVM side READS — the
-    seam where a WAT implementation breaks. The title is whitespace-
-    collapsed by extract_title (the fixture embeds ragged spacing to
-    keep that on the hash)."""
-    from firepit_spark.sources import warc as wc
-
-    r = _resolver(spark, sf_dir)
-    docs = r("documents").select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    ).filter(F.col("doc_id") < 1000)
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            recs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                uri = f"http://site{d % 20}.example/doc/{d}"
-                links = "".join(
-                    f'<a href="/l/{j}">l{j}</a>'
-                    for j in range(1 + d % 3)
-                )
-                if d % 4 == 0:
-                    links += (
-                        f'<a href="https://ext{d % 7}.example/x">e</a>'
-                    )
-                html = (
-                    f"<html><head><title>  Doc \n {d} </title></head>"
-                    f"<body>{links}</body></html>"
-                )
-                records = [
-                    ({"WARC-Type": "response", "WARC-Target-URI": uri,
-                      "Content-Type":
-                          "application/http;msgtype=response"},
-                     wc.http_response_bytes(html.encode())),
-                ]
-                recs.append((str(d), wc.warc_encode(records)))
-            yield pd.DataFrame(recs, columns=["warc_file", "content"])
-
-    archives = docs.mapInPandas(
-        build, schema="warc_file string, content binary"
-    )
-    wat = wc.wat_metadata(
-        wc.parse_warc_members(archives)
-    ).filter(F.col("warc_type") == "response")
-    links = wc.wat_links(
-        wat.select(F.col("wat").cast("binary").alias("payload"))
-    )
-    return links.select(
-        F.regexp_extract("src_uri", r"/doc/(\d+)", 1)
-        .cast("long").alias("doc_id"),
-        "title", "href",
-    )
-
-
-_Q67_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id FROM documents WHERE doc_id < 1000
-), js AS (
-  SELECT unnest(range(0, 3)) AS j
-)
-SELECT doc_id, 'Doc ' || CAST(doc_id AS VARCHAR) AS title,
-       '/l/' || CAST(j AS VARCHAR) AS href
-FROM d JOIN js ON js.j < 1 + doc_id % 3
-UNION ALL
-SELECT doc_id, 'Doc ' || CAST(doc_id AS VARCHAR),
-       'https://ext' || CAST(doc_id % 7 AS VARCHAR) || '.example/x'
-FROM d WHERE doc_id % 4 = 0
-"""
-
-
-def q68_sitemap_frontier(spark, sf_dir):
-    """Sitemap parsing under the driver gate (functions/sitemaps.py):
-    per document a sitemap XML is synthesized from arithmetic — every
-    97th id a BROKEN document (must yield exactly one error row, never
-    silence), every 50th a two-child ``sitemapindex``, the rest
-    single-url ``urlset`` leaves with lastmod every second id,
-    priority (d%10)/10 every third, changefreq every fifth — and runs
-    through the production Arrow parser. The oracle rebuilds the whole
-    frontier frame (including NULL patterns and the error-flag rows)
-    from the same arithmetic: group routing, namespace parse, field
-    extraction and junk-priority handling all sit on the hash."""
-    from firepit_spark.functions.sitemaps import sitemap_entries
-
-    r = _resolver(spark, sf_dir)
-    d = F.col("doc_id")
-    docs = r("documents").select(
-        d.cast("long").alias("doc_id")
-    ).filter(d < 2000)
-
-    def build(batches):
-        import pandas as pd
-
-        ns = 'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9"'
-        for pdf in batches:
-            rows = []
-            for doc in pdf["doc_id"]:
-                doc = int(doc)
-                host = f"h{doc % 10}.example"
-                if doc % 97 == 0:
-                    rows.append((host, doc, b"not xml at all"))
-                    continue
-                if doc % 50 == 0:
-                    body = "".join(
-                        f"<sitemap><loc>https://{host}/s{doc}-{k}.xml"
-                        f"</loc></sitemap>"
-                        for k in range(2)
-                    )
-                    xml = f"<sitemapindex {ns}>{body}</sitemapindex>"
-                else:
-                    fields = [f"<loc>https://{host}/p/{doc}</loc>"]
-                    if doc % 2 == 0:
-                        fields.append(
-                            f"<lastmod>2024-06-{1 + doc % 28:02d}"
-                            f"</lastmod>"
-                        )
-                    if doc % 3 == 0:
-                        fields.append(
-                            f"<priority>{(doc % 10) / 10:.1f}</priority>"
-                        )
-                    if doc % 5 == 0:
-                        fields.append("<changefreq>weekly</changefreq>")
-                    xml = (
-                        f"<urlset {ns}><url>{''.join(fields)}</url>"
-                        f"</urlset>"
-                    )
-                rows.append((host, doc, xml.encode()))
-            yield pd.DataFrame(
-                rows, columns=["host", "doc_id", "content"]
-            )
-
-    fetched = docs.mapInPandas(
-        build, schema="host string, doc_id long, content binary"
-    )
-    out = sitemap_entries(fetched, host_col="host", content_col="content")
-    return out.select(
-        "host", "kind", "loc", "lastmod", "changefreq", "priority",
-        F.col("err").isNotNull().alias("has_err"),
-    )
-
-
-_Q68_SQL = r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         'h' || CAST(doc_id % 10 AS VARCHAR) || '.example' AS host
-  FROM documents WHERE doc_id < 2000
-)
-SELECT host, NULL AS kind, NULL AS loc, NULL AS lastmod,
-       NULL AS changefreq, NULL::DOUBLE AS priority, TRUE AS has_err
-FROM d WHERE doc_id % 97 = 0
-UNION ALL
-SELECT host, 'sitemapindex',
-       'https://' || host || '/s' || CAST(doc_id AS VARCHAR) || '-'
-         || CAST(k AS VARCHAR) || '.xml',
-       NULL, NULL, NULL::DOUBLE, FALSE
-FROM d JOIN (SELECT unnest(range(0, 2)) AS k) ON TRUE
-WHERE doc_id % 97 <> 0 AND doc_id % 50 = 0
-UNION ALL
-SELECT host, 'urlset',
-       'https://' || host || '/p/' || CAST(doc_id AS VARCHAR),
-       CASE WHEN doc_id % 2 = 0
-            THEN '2024-06-' || lpad(CAST(1 + doc_id % 28 AS VARCHAR), 2, '0')
-       END,
-       CASE WHEN doc_id % 5 = 0 THEN 'weekly' END,
-       CASE WHEN doc_id % 3 = 0 THEN (doc_id % 10) / 10.0 END,
-       FALSE
-FROM d WHERE doc_id % 97 <> 0 AND doc_id % 50 <> 0
-"""
-
-
 # --------------------------------------------------------------------------
 # contract
 # --------------------------------------------------------------------------
@@ -5351,23 +3729,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q57_stix_timestamped": q57_stix_timestamped,
         "q58_stix_path_join": q58_stix_path_join,
         "q59_stix_reassign": q59_stix_reassign,
-        "q60_html_strip": q60_html_strip,
-        "q61_warc_pipeline": q61_warc_pipeline,
-        "q62_wordpiece_encode": q62_wordpiece_encode,
-        "q63_cdx_surt": q63_cdx_surt,
-        "q64_robots_verdict": q64_robots_verdict,
-        "q65_cdx_dedup": q65_cdx_dedup,
-        "q66_host_pagerank": q66_host_pagerank,
-        "q67_wat_links": q67_wat_links,
-        "q68_sitemap_frontier": q68_sitemap_frontier,
-        "q69_host_hits": q69_host_hits,
-        "q70_cdx_diff": q70_cdx_diff,
-        "q71_line_dedup": q71_line_dedup,
-        "q72_dup_ngram_fraction": q72_dup_ngram_fraction,
-        "q73_web_funnel": q73_web_funnel,
-        "q74_winnow_fingerprints": q74_winnow_fingerprints,
-        "q75_dedup_spans": q75_dedup_spans,
-        "q76_quality_score": q76_quality_score,
     }
 
 
@@ -5423,21 +3784,4 @@ def oracle_sql() -> dict[str, str]:
         "q57_stix_timestamped": _Q57_SQL,
         "q58_stix_path_join": _Q58_SQL,
         "q59_stix_reassign": _Q59_SQL,
-        "q60_html_strip": _Q60_SQL,
-        "q61_warc_pipeline": _Q61_SQL,
-        "q62_wordpiece_encode": _q62_sql(),
-        "q63_cdx_surt": _Q63_SQL,
-        "q64_robots_verdict": _Q64_SQL,
-        "q65_cdx_dedup": _Q65_SQL,
-        "q66_host_pagerank": _q66_sql(),
-        "q67_wat_links": _Q67_SQL,
-        "q68_sitemap_frontier": _Q68_SQL,
-        "q69_host_hits": _q69_sql(),
-        "q70_cdx_diff": _Q70_SQL,
-        "q71_line_dedup": _Q71_SQL,
-        "q72_dup_ngram_fraction": _Q72_SQL,
-        "q73_web_funnel": _q73_sql(),
-        "q74_winnow_fingerprints": _Q74_SQL,
-        "q75_dedup_spans": _Q75_SQL,
-        "q76_quality_score": _Q76_SQL,
     }

@@ -1,16 +1,10 @@
-"""Corpus-trained n-gram language models and importance weighting.
+"""Corpus-trained n-gram language models.
 
-The two published-pipeline tools this module provides:
-
-* **CCNet/KenLM-style perplexity scoring** (Wenzek et al. 2020): fit an
-  add-k-smoothed bigram model on a reference corpus, score every candidate
-  document with bits-per-token — low-perplexity text resembles the
-  reference (quality gate), high-perplexity text is noise.
-* **DSIR importance weighting** (Xie et al. 2023): hashed-n-gram bucket
-  distributions for a target and a raw corpus; each raw document's log
-  importance weight is the sum of its bucket counts times the
-  log-likelihood ratio; Gumbel-top-k resampling then selects a raw subset
-  distributed like the target.
+CCNet/KenLM-style perplexity scoring (Wenzek et al. 2020): fit an
+add-k-smoothed bigram model (or an interpolated Kneser-Ney trigram model)
+on a reference corpus, score every candidate document with bits-per-token
+— low-perplexity text resembles the reference (quality gate),
+high-perplexity text is noise.
 
 The reference engine (firepit) has no LM surface — this family belongs to
 the LLM-training-data layer the Spark rebuild adds (see dedup.py,
@@ -248,31 +242,6 @@ def ngram_lm_score(
         ubits.alias("unigram_bits_per_token"),
     )
     return out.join(tok, id_col, "left")
-
-
-def perplexity_filter(
-    df: DataFrame,
-    lm: NgramLM,
-    max_bits: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_unscored: bool = False,
-) -> DataFrame:
-    """Keep documents whose bigram bits-per-token is <= ``max_bits``
-    (CCNet's head/middle cut). Docs with no transitions (<2 tokens) have
-    no score; ``keep_unscored`` decides their fate (default: drop —
-    sub-2-token docs are not training text)."""
-    # internal name: df may itself carry a bits_per_token column (e.g. a
-    # frame that already went through ngram_lm_score once) — joining the
-    # public name back would make the filter ambiguous
-    scores = ngram_lm_score(df, lm, id_col, text_col, with_oov=False).select(
-        id_col, F.col("bits_per_token").alias("__ppl_bits")
-    )
-    joined = df.join(scores, id_col, "left")
-    cond = F.col("__ppl_bits") <= F.lit(float(max_bits))
-    if keep_unscored:
-        cond = cond | F.col("__ppl_bits").isNull()
-    return joined.filter(cond).select(*df.columns)
 
 
 # ---------------------------------------------------------------------------
@@ -561,300 +530,4 @@ def kneser_ney_score(
         F.coalesce("kn_cont_sum", F.lit(0)).alias("kn_cont_sum"),
         "kn_bits_per_token",
         "kn_ppl",
-    )
-
-
-# ---------------------------------------------------------------------------
-# DSIR: Data Selection via Importance Resampling (Xie et al. 2023)
-# ---------------------------------------------------------------------------
-
-
-def ngram_strings(col, ns: tuple = (1, 2)):
-    """Array of word n-gram strings (space-joined) for one text value,
-    concatenated over the orders in ``ns`` — the shared feature extractor
-    for DSIR bucketing and the hashed classifier. Pure array expressions:
-    map-only, no shuffle."""
-    t = tx.tokens(col)
-    grams = []
-    for n in ns:
-        if n == 1:
-            grams.append(t)
-        else:
-            sliced = [F.slice(t, i + 1, F.size(t) - (n - 1)) for i in range(n)]
-            z = F.arrays_zip(*[s.alias(f"g{i}") for i, s in enumerate(sliced)])
-            grams.append(
-                F.when(
-                    F.size(t) >= n,
-                    F.transform(
-                        z,
-                        lambda s: F.concat_ws(
-                            " ", *[s[f"g{i}"] for i in range(n)]
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            )
-    return grams[0] if len(grams) == 1 else F.concat(*grams)
-
-
-def hashed_ngram_buckets(
-    col, n_buckets: int = 8192, ns: tuple = (1, 2)
-):
-    """Array of hashed n-gram feature buckets for one text value: the
-    doc's word unigrams/bigrams, each mapped to ``pmod(xxhash64(gram),
-    n_buckets)``. Pure array expressions — map-only, no shuffle."""
-    return F.transform(
-        ngram_strings(col, ns),
-        lambda g: F.pmod(F.xxhash64(g), F.lit(n_buckets)),
-    )
-
-
-def _bucket_counts(
-    df: DataFrame, text_col: str, n_buckets: int, ns: tuple
-) -> DataFrame:
-    return (
-        df.select(
-            F.explode(hashed_ngram_buckets(F.col(text_col), n_buckets, ns)).alias(
-                "bucket"
-            )
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def dsir_fit(
-    target_df: DataFrame,
-    raw_df: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = 8192,
-    ns: tuple = (1, 2),
-    k: float = 1.0,
-) -> DataFrame:
-    """Fit the two hashed-n-gram multinomials and return the per-bucket
-    log-likelihood ratio table ``(bucket, log_ratio)`` — ``n_buckets``
-    rows, broadcastable by construction.
-
-    ``log_ratio = ln((c_target+k)/(N_target+k·B)) − ln((c_raw+k)/(N_raw+k·B))``
-    with add-k smoothing so buckets unseen in either corpus stay finite.
-    """
-    if k <= 0:
-        raise ValueError(f"smoothing k must be > 0, got {k}")
-    tc = _bucket_counts(target_df, text_col, n_buckets, ns)
-    rc = _bucket_counts(raw_df, text_col, n_buckets, ns)
-    nt = tc.agg(F.sum("c")).first()[0] or 0
-    nr = rc.agg(F.sum("c")).first()[0] or 0
-    kb = k * n_buckets
-    spark = target_df.sparkSession
-    buckets = spark.range(n_buckets).select(F.col("id").alias("bucket"))
-    return (
-        buckets.join(tc.withColumnRenamed("c", "ct"), ["bucket"], "left")
-        .join(rc.withColumnRenamed("c", "cr"), ["bucket"], "left")
-        .select(
-            "bucket",
-            (
-                F.log((F.coalesce("ct", F.lit(0)) + F.lit(k)) / F.lit(nt + kb))
-                - F.log((F.coalesce("cr", F.lit(0)) + F.lit(k)) / F.lit(nr + kb))
-            ).alias("log_ratio"),
-        )
-    )
-
-
-def dsir_score(
-    df: DataFrame,
-    ratios: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 8192,
-    ns: tuple = (1, 2),
-) -> DataFrame:
-    """Per-document log importance weight: Σ_bucket m(doc,bucket) ·
-    log_ratio(bucket). The ratio table is broadcast (≤ n_buckets rows);
-    the per-doc sum uses the same exact-multiplicity sorted fold as the
-    LM scores, so weights are bit-reproducible."""
-    m = (
-        df.select(
-            F.col(id_col),
-            F.explode(
-                hashed_ngram_buckets(F.col(text_col), n_buckets, ns)
-            ).alias("bucket"),
-        )
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .join(F.broadcast(ratios), ["bucket"])
-    )
-    folded = (
-        m.groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("bucket", "m", "log_ratio"))
-            ).alias("__bs")
-        )
-        .select(
-            id_col,
-            F.aggregate(
-                "__bs",
-                F.lit(0.0),
-                lambda acc, s: acc + s["m"].cast("double") * s["log_ratio"],
-            ).alias("log_weight"),
-        )
-    )
-    # docs with zero grams (empty text still yields [''] → 1 bucket, so
-    # only truly columnless inputs miss) — keep them at weight 0
-    return df.select(id_col).join(folded, id_col, "left").select(
-        id_col, F.coalesce("log_weight", F.lit(0.0)).alias("log_weight")
-    )
-
-
-def gumbel_topk(
-    df: DataFrame,
-    key_col: str,
-    log_weight_col: str,
-    n: int,
-    salt: str = "",
-    temperature: float = 1.0,
-) -> DataFrame:
-    """Gumbel-top-k: a weighted sample WITHOUT replacement proportional to
-    ``exp(log_weight / temperature)``, never exponentiating — the A-ES
-    companion (pipeline.weighted_sample) for weights only available in
-    log space (DSIR weights routinely reach e^±300). Deterministic and
-    content-addressed like the rest of the sampling family: the Gumbel
-    noise is ``-ln(-ln(u))`` with u drawn from the shared 60-bit key
-    hash. Executes as a distributed TakeOrdered (no full sort)."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if temperature <= 0:
-        raise ValueError(f"temperature must be > 0, got {temperature}")
-    from firepit_spark.functions.pipeline import key_hash
-
-    u = (key_hash(F.col(key_col), salt) + F.lit(1)).cast("double") / F.lit(
-        float(1 << 60)
-    )
-    g = -F.log(-F.log(u))
-    key = F.col(log_weight_col).cast("double") / F.lit(float(temperature)) + g
-    return (
-        df.filter(F.col(log_weight_col).isNotNull())
-        .withColumn("__gk", key)
-        .orderBy(F.col("__gk").desc(), F.col(key_col))
-        .limit(n)
-        .drop("__gk")
-    )
-
-
-def dsir_resample(
-    df: DataFrame,
-    ratios: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 8192,
-    ns: tuple = (1, 2),
-    salt: str = "",
-    temperature: float = 1.0,
-) -> DataFrame:
-    """The full DSIR selection step: score ``df`` against a fitted ratio
-    table, then Gumbel-top-k resample ``n`` documents ∝ exp(log_weight).
-    Returns the selected rows of ``df`` (all original columns)."""
-    w = dsir_score(df, ratios, id_col, text_col, n_buckets, ns)
-    picked = gumbel_topk(w, id_col, "log_weight", n, salt, temperature)
-    return df.join(picked.select(id_col), id_col, "left_semi")
-
-
-# ---------------------------------------------------------------------------
-# fastText-style hashed-n-gram quality classifier
-# ---------------------------------------------------------------------------
-
-
-def train_quality_classifier(
-    df: DataFrame,
-    label_col: str = "label",
-    text_col: str = "text",
-    n_features: int = 1 << 18,
-    ns: tuple = (1, 2),
-    reg_param: float = 0.0,
-    max_iter: int = 50,
-):
-    """Train a fastText-shaped quality classifier: hashed bag-of-n-grams
-    (the same :func:`ngram_strings` features as DSIR) into a linear
-    model — the standard "give me 10k labeled docs, score the other
-    10 billion" curation tool (CCNet's LM alternative; the LLaMA-style
-    "looks like references" filter).
-
-    Spark-idiomatic end to end: features are JVM-side ``HashingTF``
-    sparse vectors (never a dense n_features array per doc), training is
-    ``pyspark.ml`` LogisticRegression (distributed L-BFGS), and the
-    returned ``PipelineModel`` is persistable with ``model.save(path)``
-    / ``PipelineModel.load``. ``label_col`` must be 0/1 (1 = keep).
-
-    Scale shape: scoring a corpus is one map-only transform — gram
-    extraction and the sparse dot product both ride per-row expressions;
-    nothing shuffles. Training shuffles only L-BFGS gradient aggregates
-    (tiny: one vector of n_features per pass), never documents.
-    """
-    from pyspark.ml import Pipeline
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import HashingTF
-
-    prepared = df.withColumn("__grams", ngram_strings(F.col(text_col), ns))
-    tf = HashingTF(
-        inputCol="__grams", outputCol="__features", numFeatures=n_features
-    )
-    lr = LogisticRegression(
-        featuresCol="__features",
-        labelCol=label_col,
-        regParam=reg_param,
-        maxIter=max_iter,
-    )
-    return Pipeline(stages=[tf, lr]).fit(prepared)
-
-
-def classifier_score(
-    df: DataFrame,
-    model,
-    text_col: str = "text",
-    ns: tuple = (1, 2),
-    score_col: str = "quality_prob",
-) -> DataFrame:
-    """Score documents with a trained :func:`train_quality_classifier`
-    model: appends ``score_col`` = P(label=1). Map-only (see trainer
-    docstring); original columns pass through untouched.
-
-    Columns the ml pipeline itself emits (``probability``,
-    ``rawPrediction``, ``prediction``, plus the internal ``__grams`` /
-    ``__features``) would collide if the input already carries them —
-    they are set aside before the transform and restored after, so any
-    frame scores cleanly (including one scored before)."""
-    from pyspark.ml.functions import vector_to_array
-
-    if score_col in df.columns:
-        raise ValueError(
-            f"score_col {score_col!r} already exists in the input frame"
-        )
-    reserved = {"probability", "rawPrediction", "prediction", "__grams", "__features"}
-    clash = [c for c in df.columns if c in reserved]
-    renamed = df
-    for c in clash:
-        renamed = renamed.withColumnRenamed(c, f"__keep_{c}")
-    prepared = renamed.withColumn("__grams", ngram_strings(F.col(text_col), ns))
-    scored = model.transform(prepared)
-    out_cols = [
-        F.col(f"__keep_{c}").alias(c) if c in clash else F.col(c)
-        for c in df.columns
-    ]
-    return scored.select(
-        *out_cols,
-        vector_to_array(F.col("probability")).getItem(1).alias(score_col),
-    )
-
-
-def classifier_filter(
-    df: DataFrame,
-    model,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    ns: tuple = (1, 2),
-) -> DataFrame:
-    """Keep documents the classifier scores at or above ``threshold``."""
-    scored = classifier_score(df, model, text_col, ns)
-    return scored.filter(F.col("quality_prob") >= F.lit(float(threshold))).select(
-        *df.columns
     )

@@ -631,14 +631,35 @@ def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> "ScoFrames
             ]
 
     # --- registry (12 create/delete: whole key; 13 set: key \ value name;
-    # SDS 'Details: DWORD (...)' message carries the value payload)
+    # SDS 'Details: DWORD (...)' message carries the value payload). The key
+    # string and the Details payload are bound in narrow selects ahead of
+    # the wide one: inlined, every regexp is copied into each place that
+    # reads it (nullif twice, expand_reg_hive once per hive).
     tobj = src("TargetObject")
-    reg_key = expand_reg_hive(
-        by_event({12: tobj, 13: F.regexp_extract(tobj, r"^(.*)[\\][^\\]*$", 1)})
+    staged = df.withColumns(
+        {
+            "__reg_key": F.when(eid == 12, tobj).when(
+                eid == 13, F.regexp_extract(tobj, r"^(.*)[\\][^\\]*$", 1)
+            ),
+            "__details": F.nullif(
+                F.regexp_extract(msg, r'Details: ([^"]*)', 1), F.lit("")
+            ),
+        }
     )
-    details = F.nullif(F.regexp_extract(msg, r'Details: ([^"]*)', 1), F.lit(""))
-    details_type = F.nullif(F.regexp_extract(details, r"^(DWORD|QWORD)", 1), F.lit(""))
-    details_data = F.regexp_extract(details, r"^(?:DWORD|QWORD)\s+(\S+)", 1)
+    details = F.col("__details")
+    staged = staged.withColumns(
+        {
+            "__details_type": F.nullif(
+                F.regexp_extract(details, r"^(DWORD|QWORD)", 1), F.lit("")
+            ),
+            "__details_data": F.regexp_extract(
+                details, r"^(?:DWORD|QWORD)\s+(\S+)", 1
+            ),
+        }
+    )
+    reg_key = expand_reg_hive(F.col("__reg_key"))
+    details_type = F.col("__details_type")
+    details_data = F.col("__details_data")
     reg_values = F.when(
         eid == 13,
         F.array(F.to_json(F.struct(_basename_col(tobj).alias("name")))),
@@ -673,7 +694,7 @@ def windows_to_scos(df: DataFrame, identity_id: str | None = None) -> "ScoFrames
         _lookup(etype_names, etype), prefix_action, _lookup(WINDOWS_EVENT_NAMES, eid)
     )
 
-    wide = df.select(
+    wide = staged.select(
         eid.alias("eid"),
         ts.alias("ts"),
         src("Channel").alias("module"),

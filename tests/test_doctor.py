@@ -66,16 +66,6 @@ def test_repo_operators_are_scaleworthy(spark, tmp_path):
     assert_scaleworthy(dd.remove_duplicate_spans(docs, spans))
     # keep-first global span removal (r13)
     assert_scaleworthy(dd.dedup_spans(docs, n=3))
-    # quality classifier featurize + score (r13; bounded weight
-    # broadcast is the documented join strategy)
-    from firepit_spark.functions import quality_clf as qc
-
-    wdf = spark.createDataFrame(
-        [(-1, 0.1), (3, 0.2)], "idx long, w double"
-    )
-    assert_scaleworthy(
-        qc.quality_score(qc.quality_features(docs, dim=32), wdf)
-    )
 
 
 def test_all_gated_queries_scaleworthy(spark):

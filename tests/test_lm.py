@@ -1,4 +1,4 @@
-"""n-gram LM scoring (CCNet-style) and DSIR importance weighting.
+"""n-gram LM scoring (CCNet-style).
 
 Differential strategy: a seeded synthetic corpus is scored by a pure-Python
 reference implementation of the same math (Counter-based counts, float
@@ -155,232 +155,10 @@ def test_with_oov_false_skips_token_leg(spark, corpus):
     assert "bits_per_token" in cols
 
 
-def test_perplexity_filter(spark, corpus):
-    rows, df, train_rows, train = corpus
-    lm = L.ngram_lm_fit(train)
-    exp = _score_py(rows, _fit_py(train_rows))
-    cut = sorted(e["bits"] for e in exp.values() if e["bits"] is not None)[
-        len(exp) // 2
-    ]
-    kept = {r["doc_id"] for r in L.perplexity_filter(df, lm, cut).collect()}
-    want = {d for d, e in exp.items() if e["bits"] is not None and e["bits"] <= cut}
-    assert kept == want
-    kept2 = {
-        r["doc_id"]
-        for r in L.perplexity_filter(df, lm, cut, keep_unscored=True).collect()
-    }
-    short = {d for d, e in exp.items() if e["bits"] is None}
-    assert kept2 == want | short
-    # original columns, original schema
-    assert L.perplexity_filter(df, lm, cut).columns == df.columns
-
-
 def test_fit_rejects_bad_k(spark, corpus):
     _, df, _, _ = corpus
     with pytest.raises(ValueError):
         L.ngram_lm_fit(df, k=0.0)
-
-
-# ---------------------------------------------------------------------------
-# DSIR
-# ---------------------------------------------------------------------------
-
-
-def _bucket_counts_via_spark(df, n_buckets):
-    """Ground-truth doc→bucket multiset via the same hash expression —
-    the hashing is deterministic-by-construction (xxhash64); what the
-    differential must independently verify is the MATH on top of it."""
-    rows = df.select(
-        "doc_id",
-        L.hashed_ngram_buckets(F.col("text"), n_buckets).alias("bs"),
-    ).collect()
-    return {r["doc_id"]: Counter(r["bs"]) for r in rows}
-
-
-def test_dsir_weights_differential(spark, corpus):
-    rows, df, train_rows, train = corpus
-    B, k = 64, 1.0
-    per_doc = _bucket_counts_via_spark(df, B)
-    tgt = Counter()
-    for d, _ in train_rows:
-        tgt.update(per_doc[d])
-    raw = Counter()
-    for d, _ in rows:
-        raw.update(per_doc[d])
-    nt, nr = sum(tgt.values()), sum(raw.values())
-
-    def logratio(b):
-        return math.log((tgt.get(b, 0) + k) / (nt + k * B)) - math.log(
-            (raw.get(b, 0) + k) / (nr + k * B)
-        )
-
-    ratios = L.dsir_fit(train, df, n_buckets=B, k=k)
-    got_r = {r["bucket"]: r["log_ratio"] for r in ratios.collect()}
-    assert len(got_r) == B
-    for b in range(B):
-        assert got_r[b] == pytest.approx(logratio(b), rel=1e-12)
-
-    got_w = {
-        r["doc_id"]: r["log_weight"]
-        for r in L.dsir_score(df, ratios, n_buckets=B).collect()
-    }
-    for d, _ in rows:
-        want = sum(m * logratio(b) for b, m in per_doc[d].items())
-        assert got_w[d] == pytest.approx(want, rel=1e-9, abs=1e-12)
-
-
-def test_dsir_grams_match_bucket_hash(spark):
-    """The hashed feature array is unigrams+bigrams of the engine
-    tokenizer, in order."""
-    df = spark.createDataFrame([(1, "A  b c")], "doc_id long, text string")
-    got = df.select(
-        L.hashed_ngram_buckets(F.col("text"), 1 << 20).alias("bs")
-    ).first()["bs"]
-    want = df.select(
-        F.transform(
-            F.array(*[F.lit(g) for g in ["a", "b", "c", "a b", "b c"]]),
-            lambda g: F.pmod(F.xxhash64(g), F.lit(1 << 20)),
-        ).alias("bs")
-    ).first()["bs"]
-    assert got == want
-
-
-def test_gumbel_topk_extreme_log_weights(spark):
-    """Weights of e^±1000 would overflow A-ES; gumbel_topk never
-    exponentiates, so the ordering is exact: the huge-weight rows always
-    win."""
-    rows = [(f"d{i}", -1000.0 if i < 90 else 1000.0) for i in range(100)]
-    df = spark.createDataFrame(rows, "key string, lw double")
-    got = {r["key"] for r in L.gumbel_topk(df, "key", "lw", 10).collect()}
-    assert got == {f"d{i}" for i in range(90, 100)}
-
-
-def test_gumbel_topk_deterministic_and_salted(spark):
-    df = spark.createDataFrame(
-        [(f"d{i}", 0.0) for i in range(200)], "key string, lw double"
-    )
-    a = sorted(r["key"] for r in L.gumbel_topk(df, "key", "lw", 20, salt="s1").collect())
-    b = sorted(r["key"] for r in L.gumbel_topk(df, "key", "lw", 20, salt="s1").collect())
-    c = sorted(r["key"] for r in L.gumbel_topk(df, "key", "lw", 20, salt="s2").collect())
-    assert a == b
-    assert a != c
-
-
-def test_gumbel_topk_rejects_bad_params(spark):
-    df = spark.createDataFrame([("a", 0.0)], "key string, lw double")
-    with pytest.raises(ValueError):
-        L.gumbel_topk(df, "key", "lw", 0)
-    with pytest.raises(ValueError):
-        L.gumbel_topk(df, "key", "lw", 1, temperature=0.0)
-
-
-def test_dsir_resample_shape_and_bias(spark, corpus):
-    rows, df, train_rows, train = corpus
-    ratios = L.dsir_fit(train, df, n_buckets=64)
-    sel = L.dsir_resample(df, ratios, 10, n_buckets=64, salt="r8")
-    assert sel.columns == df.columns
-    assert sel.count() == 10
-    ids = {r["doc_id"] for r in sel.select("doc_id").collect()}
-    assert ids <= {d for d, _ in rows}
-    # a strong-temperature resample concentrates on high-weight docs:
-    # with temperature→0 the top-n BY WEIGHT is selected exactly
-    w = L.dsir_score(df, ratios, n_buckets=64)
-    topw = {
-        r["doc_id"]
-        for r in w.orderBy(F.col("log_weight").desc(), "doc_id").limit(5).collect()
-    }
-    cold = L.dsir_resample(
-        df, ratios, 5, n_buckets=64, salt="r8", temperature=1e-9
-    )
-    assert {r["doc_id"] for r in cold.select("doc_id").collect()} == topw
-
-
-# ---------------------------------------------------------------------------
-# hashed classifier
-# ---------------------------------------------------------------------------
-
-
-def _labeled_corpus(spark, n=120, seed=99):
-    rng = random.Random(seed)
-    good_v = ["the", "report", "analysis", "of", "data", "with", "results"]
-    bad_v = ["buy", "cheap", "pills", "click", "winner", "free", "casino"]
-    rows = []
-    for i in range(n):
-        label = i % 2
-        v = good_v if label else bad_v
-        rows.append(
-            (i, label, " ".join(rng.choice(v) for _ in range(rng.randint(8, 20))))
-        )
-    return spark.createDataFrame(rows, "doc_id long, label int, text string")
-
-
-def test_quality_classifier_separates(spark, tmp_path):
-    df = _labeled_corpus(spark)
-    train = df.filter(F.col("doc_id") < 80)
-    test = df.filter(F.col("doc_id") >= 80)
-    model = L.train_quality_classifier(train, n_features=1 << 12)
-    scored = L.classifier_score(test, model)
-    assert scored.columns == test.columns + ["quality_prob"]
-    rows = scored.collect()
-    acc = sum(
-        1 for r in rows if (r["quality_prob"] >= 0.5) == bool(r["label"])
-    ) / len(rows)
-    assert acc >= 0.95, acc
-    assert all(0.0 <= r["quality_prob"] <= 1.0 for r in rows)
-
-    # threshold filter keeps originals-only columns
-    kept = L.classifier_filter(test, model, threshold=0.5)
-    assert kept.columns == test.columns
-    keep_ids = {r["doc_id"] for r in kept.collect()}
-    assert keep_ids == {r["doc_id"] for r in rows if r["quality_prob"] >= 0.5}
-
-    # the PipelineModel persists and reloads with identical scores
-    from pyspark.ml import PipelineModel
-
-    path = str(tmp_path / "qmodel")
-    model.save(path)
-    re = PipelineModel.load(path)
-    again = {
-        r["doc_id"]: r["quality_prob"] for r in L.classifier_score(test, re).collect()
-    }
-    assert again == {r["doc_id"]: r["quality_prob"] for r in rows}
-
-
-def test_ngram_strings_shared_features(spark):
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    got = df.select(L.ngram_strings(F.col("text")).alias("g")).first()["g"]
-    assert got == ["a", "b", "c", "a b", "b c"]
-
-
-def test_perplexity_filter_on_prescored_frame(spark, corpus):
-    """A frame that already carries bits_per_token (e.g. one pass of
-    ngram_lm_score) must still filter cleanly — the join uses an
-    internal score name."""
-    rows, df, train_rows, train = corpus
-    lm = L.ngram_lm_fit(train)
-    pre = L.ngram_lm_score(df, lm, with_oov=False).join(df, "doc_id")
-    kept = L.perplexity_filter(pre, lm, max_bits=100.0)
-    assert kept.columns == pre.columns
-    assert kept.count() == pre.filter(F.col("bits_per_token").isNotNull()).count()
-
-
-def test_classifier_score_reserved_column_collisions(spark, tmp_path):
-    df = _labeled_corpus(spark, n=40)
-    model = L.train_quality_classifier(df, n_features=1 << 10)
-    # input already carries ml-pipeline output names: they survive untouched
-    weird = df.withColumn("probability", F.lit(7)).withColumn(
-        "prediction", F.lit("x")
-    )
-    out = L.classifier_score(weird, model)
-    assert out.columns == weird.columns + ["quality_prob"]
-    r = out.first()
-    assert r["probability"] == 7 and r["prediction"] == "x"
-    # re-scoring an already-scored frame: new name works, same name raises
-    scored = L.classifier_score(df, model)
-    again = L.classifier_score(scored, model, score_col="quality_prob2")
-    assert again.columns == scored.columns + ["quality_prob2"]
-    with pytest.raises(ValueError):
-        L.classifier_score(scored, model)
 
 
 def test_lm_and_packer_null_text(spark, corpus):

@@ -13,6 +13,7 @@ from firepit_spark.sources.logs import (
     expand_reg_hive,
     to_wide,
     wide_to_scos,
+    windows_to_scos,
 )
 from firepit_spark.storage import SparkStorage
 
@@ -308,6 +309,56 @@ def test_sysmon_event_matrix(spark, tmp_path):
     obs_ids = {r["id"] for r in store.table_df("observed-data").collect()}
     edge_srcs = {r["source_ref"] for r in store.table_df("__contains").collect()}
     assert edge_srcs <= obs_ids
+
+
+def test_windows_registry_details_values(spark, tmp_path):
+    """Outside event 13, an SDS ``Details: DWORD|QWORD <data>`` message
+    gives the registry key one value with ``data`` and ``data_type``; any
+    other Details payload gives none."""
+    df = spark.createDataFrame(
+        [
+            (4657, 'Set: EventType: SetValue Details: DWORD (0x00000001)" tail'),
+            (4657, "Details: QWORD 0x10"),
+            (4657, 'Details: Binary data "x" Details: DWORD 7'),
+        ],
+        "EventID int, Message string",
+    )
+    store = SparkStorage(str(tmp_path / "wh"), spark=spark)
+    convert_log(store, df, query_id="details")
+    values = sorted(
+        (json.loads(r["values"][0])
+         for r in store.table_df("windows-registry-key").collect()),
+        key=lambda v: v["data_type"],
+    )
+    assert values == [
+        {"data": "(0x00000001)", "data_type": "DWORD"},
+        {"data": "0x10", "data_type": "QWORD"},
+    ]
+
+
+def test_windows_details_regexps_bound_once(spark):
+    """Each Message ``Details:`` regexp and the registry key split appear
+    once in the persisted wide plan, not once per place that reads them."""
+    conf = "spark.sql.debug.maxToStringFields"
+    saved = spark.conf.get(conf, None)
+    spark.conf.set(conf, "100000")
+    frames = windows_to_scos(sysmon_matrix_df(spark))
+    try:
+        reg = frames["windows-registry-key"]
+        plan = reg._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        frames.release()
+        if saved is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, saved)
+    for regexp in (
+        'Details: ([^"]*)',
+        "^(DWORD|QWORD)",
+        r"^(?:DWORD|QWORD)\s+(\S+)",
+        r"^(.*)[\\][^\\]*$",
+    ):
+        assert plan.count(regexp) == 1, regexp
 
 
 def test_windows_double_pid(spark, tmp_path):

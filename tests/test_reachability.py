@@ -10,6 +10,8 @@ roots, so a module that only tests import fails here. No Spark is needed.
 from __future__ import annotations
 
 import ast
+import json
+import re
 from functools import lru_cache
 from pathlib import Path
 
@@ -121,3 +123,17 @@ def test_allowlist_is_current():
     for name in ALLOWED_UNREACHED:
         assert name in modules, f"allowlisted {name} no longer exists"
         assert name not in reached, f"allowlisted {name} is now reached"
+
+
+def test_slot_registry_matches_gate():
+    """``queries()``, ``oracle_sql()`` and the newest correctness record
+    name the same slots, so the local sweeps run only what the gate
+    checks."""
+    import __spark_entry__ as entry
+
+    records = {
+        int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name).group(1)): p
+        for p in ROOT.glob("CORRECTNESS_r*.json")
+    }
+    gated = set(json.loads(records[max(records)].read_text()))
+    assert set(entry.queries()) == set(entry.oracle_sql()) == gated
